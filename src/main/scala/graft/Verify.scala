@@ -1,15 +1,27 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.SupportsReportPartitioning
+import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional args
-  * past (sfDir, outDir) restrict the dump to those query names —
-  * dev-loop convenience; the driver always runs the full set. */
-object Verify {
+  * past (sfDir, outDir) restrict the dump to those query names (a name
+  * ending in `*` selects every key with that prefix) — dev-loop
+  * convenience; the driver always runs the full set. With
+  * SPARK_GRAFT_LAYOUT_OUT set, each dumped key also appends
+  * `<name>\t<n>` to that file, n = its connector scans that report a
+  * key-grouped (bucket) layout at this session width. */
+object Verify extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
     val Array(sfDir, outDir) = args.take(2)
-    val subset = args.drop(2).toSet
+    val subset = args.drop(2).toSeq
+    def wanted(name: String) = subset.exists(s =>
+      if (s.endsWith("*")) name.startsWith(s.dropRight(1)) else name == s)
+    val layoutOut = sys.env.get("SPARK_GRAFT_LAYOUT_OUT").map(Paths.get(_))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -27,11 +39,14 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val selected =
       if (subset.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(subset).toMap
+      else SparkEntry.queries.view.filterKeys(wanted).toMap
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        layoutOut.foreach(p => Files.writeString(p, s"$name\t${keyGroupedScans(df)}\n",
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND))
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -52,4 +67,12 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  private def keyGroupedScans(df: DataFrame): Int =
+    collectWithSubqueries(df.queryExecution.executedPlan) { case b: BatchScanExec => b.scan }
+      .count {
+        case s: SupportsReportPartitioning =>
+          s.outputPartitioning().isInstanceOf[KeyGroupedPartitioning]
+        case _ => false
+      }
 }

@@ -17,7 +17,9 @@ import graft.sources.dynamo.ItemJson.Item
   * not per value, so the per-row path is a flat loop — this is the
   * hot path of every scan. Absent attributes read as null; DynamoDB
   * has no native temporal types, so TimestampType/DateType round-trip
-  * through `N` as epoch-micros / epoch-days (SURVEY.md §1.2).
+  * through `N` as epoch-micros / epoch-days (SURVEY.md §1.2);
+  * TimestampNTZType takes the same `N` form as zone-free epoch micros
+  * (its wall-clock fields read as UTC, no session-zone shift).
   */
 object Codec {
 
@@ -59,7 +61,8 @@ object Codec {
     }
     case BooleanType => { case AttrVal.Bool(v) => v; case o => fail(dt, o) }
     case BinaryType  => { case AttrVal.B(v) => v; case o => fail(dt, o) }
-    case TimestampType => { case AttrVal.N(v) => v.toLong; case o => fail(dt, o) } // epoch micros
+    case TimestampType | TimestampNTZType => // epoch micros
+      { case AttrVal.N(v) => v.toLong; case o => fail(dt, o) }
     case DateType      => { case AttrVal.N(v) => v.toInt; case o => fail(dt, o) }  // epoch days
     case ArrayType(elem, _) =>
       val readElem = attrReader(elem)
@@ -151,7 +154,7 @@ object Codec {
     case _: DecimalType => v => AttrVal.N(v.asInstanceOf[Decimal].toBigDecimal)
     case BooleanType => v => AttrVal.Bool(v.asInstanceOf[Boolean])
     case BinaryType  => v => AttrVal.B(v.asInstanceOf[Array[Byte]])
-    case TimestampType => v => AttrVal.N(BigDecimal(v.asInstanceOf[Long]))
+    case TimestampType | TimestampNTZType => v => AttrVal.N(BigDecimal(v.asInstanceOf[Long]))
     case DateType      => v => AttrVal.N(BigDecimal(v.asInstanceOf[Int]))
     case ArrayType(elem, _) =>
       val writeElem = attrWriter(elem)

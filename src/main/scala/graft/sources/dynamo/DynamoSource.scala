@@ -697,15 +697,18 @@ final class DynamoScanBuilder(
     limit = Some(l); true
   }
 
-  /** True when the scan's full-scan plan is provably ONE segment —
-    * the condition under which a pushed limit is GLOBAL (Spark may
-    * then remove its own Limit) and a pushed offset is expressible at
-    * all. Computed once; [[build]] passes `pinSingleSegment` so the
-    * scan can't re-split after the promise.
+  /** True when the table's SIZE asks for only ONE segment
+    * ([[DynamoScan.sizeSegments]]) — the condition under which a
+    * pushed limit is made GLOBAL (Spark may then remove its own Limit)
+    * and a pushed offset is expressible at all. Decided by size alone,
+    * not the session width, so LIMIT/OFFSET over a small table keeps
+    * its global push on any session. Computed once;
+    * [[build]] passes `pinSingleSegment` so the scan plans exactly
+    * that one segment after the promise.
     */
   private lazy val singleSegmentPlan: Boolean = {
     val store = new LocalKVStore(opts.path)
-    DynamoScan.fullScanSegments(store, store.describe(opts.tableName), opts) == 1
+    DynamoScan.sizeSegments(store, store.describe(opts.tableName), opts) == 1
   }
 
   /** Offset pushdown (`LIMIT n OFFSET m` / `df.offset(m)`): accepting
@@ -1373,17 +1376,48 @@ object DynamoScan {
         Set(index.hashKey) ++ index.rangeKey ++ incl)
 
   /** ONE definition of the full-scan segment count, shared by
-    * [[DynamoScan.outputPartitioning]], [[DynamoScan.planInputPartitions]]
-    * and [[DynamoScanBuilder.pushOffset]]'s single-segment check: if
-    * these ever drifted, the scan could claim a bucket layout (or a
-    * pushed global offset) while planning different segments —
-    * silently wrong results, not a plan error.
+    * [[DynamoScan.outputPartitioning]] and
+    * [[DynamoScan.planInputPartitions]]: if these ever drifted, the
+    * scan could claim a bucket layout while planning different
+    * segments — silently wrong results, not a plan error.
+    *
+    * `readPartitions` when set; otherwise
+    * `min(shards, defaultParallelism, max(bytes / maxPartitionBytes,
+    * slots))`, where `slots` is the planning session's
+    * `defaultParallelism` — the reference's rounding up to the
+    * session's parallelism (A2), so a table far below
+    * `maxPartitionBytes` still scans one segment per core instead of
+    * as one task. Every segment reads a disjoint shard set (and only
+    * those shards' journal files), so widening changes the task count,
+    * never what is read.
     */
-  def fullScanSegments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions): Int = {
-    val bySize = math.max(1L, store.sizeBytes(opts.tableName) / opts.maxPartitionBytes).toInt
-    opts.readPartitions.getOrElse(
-      math.min(math.min(bySize, meta.shards), opts.defaultParallelism))
-  }
+  def fullScanSegments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions): Int =
+    segments(store, meta, opts, floor = sessionSlots)
+
+  /** The segment count the stored size alone asks for (no slot
+    * floor): ONE exactly when neither `readPartitions` nor the stored
+    * bytes ask for more. The pushed LIMIT/OFFSET promise
+    * ([[DynamoScanBuilder.pushOffset]]) keys on this, so a small
+    * table's page stays one pinned segment however wide the session
+    * is.
+    */
+  def sizeSegments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions): Int =
+    segments(store, meta, opts, floor = 1L)
+
+  private def segments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions,
+      floor: Long): Int =
+    opts.readPartitions.getOrElse(math.min(
+      math.min(meta.shards, opts.defaultParallelism).toLong,
+      math.max(floor, store.sizeBytes(opts.tableName) / opts.maxPartitionBytes)).toInt)
+
+  /** Task slots of the session planning the scan (driver side): a
+    * table smaller than `slots * maxPartitionBytes` still spreads over
+    * every core. 1 when no session is active (planning outside Spark).
+    */
+  private def sessionSlots: Long =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .fold(1L)(_.sparkContext.defaultParallelism.toLong)
 
   /** The placement-key column set for a reported bucket transform:
     * partition key alone under layout 2 (composite tables join
@@ -1718,10 +1752,12 @@ final class DynamoScan(
     * `spark.sql.sources.v2.bucketing.enabled`), and aggregations
     * keyed by the primary key reuse the layout the same way — at
     * 100 TB this removes the dominant repeated cost of re-shuffling
-    * a fact table for every key-joined query. Tables big enough that
-    * `bytes/maxPartitionBytes >= shards` plan per-shard naturally, so
-    * the declaration is automatic exactly at the scale it matters;
-    * merged-segment (small-table) scans, GSI views (row placement
+    * a fact table for every key-joined query. A scan plans per-shard
+    * when `max(bytes/maxPartitionBytes, session slots) >= shards`
+    * (and `defaultParallelism >= shards`), so the declaration is
+    * automatic at the scale it matters, and on a session at least as
+    * wide as the shard count; merged-segment scans (a small table on
+    * a narrower session), GSI views (row placement
     * follows the BASE key, not the index key), COUNT pushdown, and a
     * pruned-away key column all fall back to UnknownPartitioning.
     *
@@ -1772,12 +1808,14 @@ final class DynamoScan(
   private def fullScanSegments(store: LocalKVStore, meta: TableMeta): Int =
     DynamoScan.fullScanSegments(store, meta, opts)
 
-  /** Segment count = stored bytes / maxPartitionBytes, clamped to
-    * [1, shards] and capped by defaultParallelism, or forced by the
-    * `readPartitions` option — the reference's partition-sizing
-    * arithmetic (A2) [REF: connector/TableConnector.scala]. Computed
-    * on the driver once per scan; each segment reads a disjoint set of
-    * store shards, so 1000 executors scan without coordination.
+  /** Segment count = max(stored bytes / maxPartitionBytes, the
+    * session's slots), clamped to the shard count and capped by
+    * defaultParallelism, or forced by the `readPartitions` option —
+    * the reference's partition-sizing arithmetic (A2)
+    * [REF: connector/TableConnector.scala], see
+    * [[DynamoScan.fullScanSegments]]. Computed on the driver once per
+    * scan; each segment reads a disjoint set of store shards, so 1000
+    * executors scan without coordination.
     *
     * Point-lookup fast path: shard placement is a pure function of the
     * primary key, so when the pushed (or runtime) filters pin the full

@@ -1403,7 +1403,7 @@ final class LocalKVStore(root: String) {
     }
 
   /** Total stored bytes — the connector's partition-sizing input
-    * (readPartitions = bytes / maxPartitionBytes, SURVEY.md A2).
+    * (the size term of the scan segment count, SURVEY.md A2).
     */
   def sizeBytes(table: String): Long =
     listFiles(table, "shard-").map(Files.size(_)).sum +

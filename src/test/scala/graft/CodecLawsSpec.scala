@@ -143,6 +143,32 @@ class CodecLawsSpec extends AnyFunSuite {
     }
   }
 
+  test("Codec: TIMESTAMP_NTZ round-trips as zone-free epoch micros") {
+    val ntz = StructType(Seq(
+      StructField("t", TimestampNTZType),
+      StructField("ts", ArrayType(TimestampNTZType)),
+      StructField("z", TimestampType)))
+    val read = Codec.rowReader(ntz)
+    val write = Codec.rowWriter(ntz)
+    forAll(genConformant(StructType(ntz.fields.map(f =>
+      f.copy(dataType = f.dataType match {
+        case ArrayType(_, n) => ArrayType(LongType, n)
+        case _ => LongType
+      }))))) { item =>
+      assert(eqItem(write(read(item)), item))
+    }
+    // 2024-01-02T03:04:05.000006 as a wall clock: the stored N is the
+    // micros of that wall clock read as UTC, whatever the session zone
+    val micros = java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5, 6000)
+      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + 6L
+    val item: Item = Map("t" -> AttrVal.N(BigDecimal(micros)),
+      "ts" -> AttrVal.L(Vector(AttrVal.N(BigDecimal(micros)), AttrVal.Null)),
+      "z" -> AttrVal.Null)
+    val row = read(item)
+    assert(row.getLong(0) == micros)
+    assert(write(row) == item)
+  }
+
   test("Codec: absent attributes read as null and write back as NULL") {
     val read = Codec.rowReader(schema)
     val write = Codec.rowWriter(schema)

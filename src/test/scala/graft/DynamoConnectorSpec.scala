@@ -46,6 +46,32 @@ class DynamoConnectorSpec extends AnyFunSuite {
       ("durian", "green", 2.5, 1L)))
   }
 
+  test("TIMESTAMP_NTZ columns write and read back as zone-free epoch micros") {
+    val root = freshRoot()
+    val prev = spark.conf.getOption("spark.sql.catalog.ntzcat")
+    try {
+      spark.conf.set("spark.sql.catalog.ntzcat", "graft.sources.dynamo.DynamoCatalog")
+      spark.conf.set("spark.sql.catalog.ntzcat.path", root)
+      spark.sql("CREATE TABLE ntzcat.ev (id STRING, at TIMESTAMP_NTZ) " +
+        "TBLPROPERTIES('hashKey'='id')")
+      spark.sql("INSERT INTO ntzcat.ev VALUES ('a', TIMESTAMP_NTZ'2024-01-02 03:04:05.000006'), " +
+        "('b', NULL)")
+      val back = spark.table("ntzcat.ev").orderBy("id").collect()
+        .map(r => (r.getString(0), Option(r.get(1))))
+      assert(back.toSeq === Seq(
+        ("a", Some(java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5, 6000))), ("b", None)))
+      // stored as the wall clock's UTC epoch micros, whatever the session zone
+      val raw = spark.read.dynamo(root, "ev").filter(col("id") === "a")
+        .select("at").head().getLong(0)
+      assert(raw === java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5)
+        .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + 6L)
+    } finally {
+      spark.conf.unset("spark.sql.catalog.ntzcat.path")
+      prev.fold(spark.conf.unset("spark.sql.catalog.ntzcat"))(
+        spark.conf.set("spark.sql.catalog.ntzcat", _))
+    }
+  }
+
   test("flat schemas read through the columnar (vectorized) path") {
     val root = freshRoot()
     seedFruit(root)
@@ -5765,7 +5791,11 @@ class DynamoConnectorSpec extends AnyFunSuite {
       .write.dynamo(root, "offs", "id")
     def scanOrder(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[String]("id"), r.getAs[Long]("v"))).toSeq
-    val all = scanOrder(spark.read.dynamo(root, "offs").select("id", "v"))
+    // the single-segment scan order; an unpinned scan spreads the
+    // small table over the session's slots and orders rows differently
+    val all = scanOrder(spark.read.format("dynamo")
+      .option("path", root).option("tableName", "offs")
+      .option("readPartitions", "1").load().select("id", "v"))
 
     // LIMIT+OFFSET page: rows [2, 5) of the single-segment scan order;
     // both operators land in the scan (Spark's Offset is gone)
@@ -5779,8 +5809,18 @@ class DynamoConnectorSpec extends AnyFunSuite {
     assert(tail.queryExecution.executedPlan.toString.contains("PushedOffset: 17"))
     assert(scanOrder(tail) === all.drop(17))
 
-    // pushed filters apply BELOW the offset: skip 2 of the even rows
-    val filtered = spark.read.dynamo(root, "offs").select("id", "v")
+    // pushed filters apply BELOW the offset: skip 2 of the rows >= 5
+    val pushed = spark.read.dynamo(root, "offs").select("id", "v")
+      .filter(col("v") >= 5L).offset(2).limit(4)
+    assert(pushed.queryExecution.executedPlan.toString.contains("PushedOffset: 2"))
+    assert(scanOrder(pushed) === all.filter(_._2 >= 5).slice(2, 6))
+
+    // `%` does not push, so Spark filters and skips above the scan;
+    // read as one segment, its page is still a slice of `all`: skip 2
+    // of the even rows
+    val filtered = spark.read.format("dynamo")
+      .option("path", root).option("tableName", "offs")
+      .option("readPartitions", "1").load().select("id", "v")
       .filter(col("v") % 2 === 0).offset(2).limit(4)
     assert(scanOrder(filtered) === all.filter(_._2 % 2 == 0).slice(2, 6))
 
@@ -5792,6 +5832,96 @@ class DynamoConnectorSpec extends AnyFunSuite {
       .select("id", "v").offset(2).limit(3)
     assert(!multi.queryExecution.executedPlan.toString.contains("PushedOffset"))
     assert(multi.count() === 3L)
+  }
+
+  test("a small table's full scan plans one segment per session slot, same rows as one segment") {
+    import spark.implicits._
+    import org.apache.spark.sql.connector.read.SupportsReportPartitioning
+    import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val root = freshRoot()
+    val store = new LocalKVStore(root)
+    // 16 shards (the writer's default), a few hundred KB: far below
+    // maxPartitionBytes, so only the session's 4 slots widen the plan
+    assert(spark.sparkContext.defaultParallelism === 4)
+    (0 until 2000).map(i => (f"k$i%04d", (i % 50).toLong, i.toLong, s"c${i % 7}"))
+      .toDF("id", "hk", "v", "c").write.dynamo(root, "wide", "id")
+    assert(store.describe("wide").shards === 16)
+    def read(opts: (String, String)*) = opts.foldLeft(spark.read.format("dynamo")
+      .option("path", root).option("tableName", "wide")) { case (r, (k, v)) => r.option(k, v) }
+      .load()
+    def scanOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b }
+        .getOrElse(fail("no BatchScanExec in the plan"))
+    def parts(df: org.apache.spark.sql.DataFrame) = scanOf(df).inputPartitions.size
+    def keyGrouped(df: org.apache.spark.sql.DataFrame) =
+      scanOf(df).scan.asInstanceOf[SupportsReportPartitioning]
+        .outputPartitioning().isInstanceOf[KeyGroupedPartitioning]
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "hk", "v", "c").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3))).sorted.toSeq
+    def sameAsOneSegment(expectedRows: Int): Unit = {
+      val wide = read()
+      assert(parts(wide) === 4)
+      // 4 segments over 16 shards are not the shard layout: no claim
+      assert(!keyGrouped(wide))
+      val got = rows(wide)
+      assert(got.size === expectedRows)
+      assert(got === rows(read("readPartitions" -> "1")))
+    }
+
+    // journal-only: every item still sits in the write's journal files
+    assert(store.walFileNames("wide").nonEmpty)
+    sameAsOneSegment(2000)
+    // compacted: base files only
+    store.compact("wide")
+    assert(store.walFileNames("wide").isEmpty)
+    sameAsOneSegment(2000)
+    // a journal over the base: updates, deletes and new keys
+    (0 until 2000 by 3).map(i => (f"k$i%04d", -i.toLong)).toDF("id", "v")
+      .write.format("dynamo").option("path", root).option("tableName", "wide")
+      .option("update", "true").mode("append").save()
+    (0 until 2000 by 5).map(i => f"k$i%04d").toDF("id")
+      .write.format("dynamo").option("path", root).option("tableName", "wide")
+      .option("delete", "true").mode("append").save()
+    (2000 until 2100).map(i => (f"k$i%04d", (i % 50).toLong, i.toLong, "new"))
+      .toDF("id", "hk", "v", "c").write.dynamo(root, "wide", "id")
+    assert(store.walFileNames("wide").nonEmpty)
+    sameAsOneSegment(2000 - 400 + 100)
+    val merged = rows(read()).map(r => r._1 -> r._3).toMap
+    assert(merged("k0003") === -3L && !merged.contains("k0005") && merged("k2050") === 2050L)
+
+    // a pushed GROUP BY the hash key stays complete across the widened
+    // segments: groups are shard-local, so no Spark aggregate or Exchange
+    val keyed = freshRoot()
+    (0 until 2000).map(i => ((i % 50).toLong, i.toLong)).toDF("hk", "rk")
+      .write.format("dynamo").option("path", keyed).option("tableName", "grp")
+      .option("hashKey", "hk").option("rangeKey", "rk").mode("append").save()
+    val grp = spark.read.dynamo(keyed, "grp").groupBy("hk")
+      .agg(count(lit(1)).as("n"), sum("rk").as("s"))
+    val gPlan = grp.queryExecution.executedPlan.toString
+    assert(gPlan.contains("PushedGroupBy: [hk] (complete)"), gPlan)
+    assert(!gPlan.contains("Exchange") && !gPlan.contains("HashAggregate"), gPlan)
+    assert(parts(grp) === 4)
+    assert(grp.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq ===
+      (0 until 2000).groupBy(_ % 50).toSeq.map { case (h, is) =>
+        (h.toLong, is.size.toLong, is.map(_.toLong).sum) }.sorted)
+
+    // LIMIT and OFFSET keep their single pinned segment (decided by
+    // size alone), and with it the global push
+    val lim = read().select("id", "v").limit(7)
+    assert(lim.queryExecution.executedPlan.toString.contains("PushedLimit: 7"))
+    assert(parts(lim) === 1)
+    assert(lim.collect().length === 7)
+    val off = read().select("id", "v").offset(1690)
+    assert(off.queryExecution.executedPlan.toString.contains("PushedOffset: 1690"))
+    assert(parts(off) === 1)
+    assert(off.collect().length === 10)
+
+    // an explicit readPartitions still wins, both ways
+    assert(parts(read("readPartitions" -> "2")) === 2)
+    val perShard = read("readPartitions" -> "16")
+    assert(parts(perShard) === 16 && keyGrouped(perShard))
   }
 
   test("table-sample pushdown: deterministic, filter-commutative, Sample node removed") {

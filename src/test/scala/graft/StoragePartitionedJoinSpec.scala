@@ -17,9 +17,11 @@ import graft.sources.dynamo.Implicits._
   * connector, where it matters most (a 100 TB item table re-shuffled
   * per join would dominate every query).
   *
-  * Per-shard planning kicks in when `bytes/maxPartitionBytes >=
-  * shards` (any production-size table); the tiny fixtures force it
-  * with a catalog-level `readPartitions = shards`, the same plan shape.
+  * Per-shard planning kicks in when `max(bytes/maxPartitionBytes,
+  * session slots) >= shards` (any production-size table, or a session
+  * at least as wide as the shard count); the tiny fixtures on the
+  * 4-slot test session force it with a catalog-level
+  * `readPartitions = shards`, the same plan shape.
   */
 class StoragePartitionedJoinSpec extends AnyFunSuite {
   import TestSpark._
