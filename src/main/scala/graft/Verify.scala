@@ -5,15 +5,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.read.SupportsReportPartitioning
 import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+import graft.sources.dynamo.DynamoLocalScan
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional args
   * past (sfDir, outDir) restrict the dump to those query names (a name
   * ending in `*` selects every key with that prefix) — dev-loop
   * convenience; the driver always runs the full set. With
   * SPARK_GRAFT_LAYOUT_OUT set, each dumped key also appends
-  * `<name>\t<n>` to that file, n = its connector scans that report a
-  * key-grouped (bucket) layout at this session width. */
+  * `<name>\t<n>\t<l>` to that file, n = its connector scans that
+  * report a key-grouped (bucket) layout at this session width, l = its
+  * connector point reads served on the driver (`LocalTableScanExec`). */
 object Verify extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
@@ -44,7 +46,8 @@ object Verify extends AdaptiveSparkPlanHelper {
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        layoutOut.foreach(p => Files.writeString(p, s"$name\t${keyGroupedScans(df)}\n",
+        layoutOut.foreach(p => Files.writeString(p,
+          s"$name\t${keyGroupedScans(df)}\t${locallyServedScans(df)}\n",
           StandardOpenOption.CREATE, StandardOpenOption.APPEND))
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -75,4 +78,13 @@ object Verify extends AdaptiveSparkPlanHelper {
           s.outputPartitioning().isInstanceOf[KeyGroupedPartitioning]
         case _ => false
       }
+
+  /** The physical `LocalTableScanExec` does not name its source, so
+    * the driver-served connector reads are counted on the optimized
+    * plan, where the scan relation still holds the connector's scan.
+    */
+  private def locallyServedScans(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[DynamoLocalScan] => r
+    }.size
 }

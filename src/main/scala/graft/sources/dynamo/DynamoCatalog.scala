@@ -601,11 +601,13 @@ private object DynamoProcedures {
       val store = new LocalKVStore(root)
       val meta = store.describe(t)
       val dir = java.nio.file.Paths.get(root, t)
-      // stored volume per key, from pure pages (minH == maxH)
+      // stored volume per key, from pure pages (minH == maxH); a
+      // hash-only table holds one item per key, so none of its keys
+      // can own a page and its directory is not consulted
       final case class Acc(var items: Long = 0L, var bytes: Long = 0L,
         var shard: Int = -1, var writes: Long = 0L)
       val byKey = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
-      (0 until meta.shards).foreach { sh =>
+      if (meta.rangeKey.isDefined) (0 until meta.shards).foreach { sh =>
         PageIndex.load(dir.resolve(f"pageidx-s$sh%03d.jsonl"),
             dir.resolve(f"shard-$sh%03d.jsonl")).foreach { idx =>
           idx.pages.foreach { p =>

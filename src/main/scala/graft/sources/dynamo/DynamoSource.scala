@@ -1116,9 +1116,54 @@ final class DynamoScanBuilder(
     // Pin the serve-via-index decision (Some(...)) so planning cannot
     // re-decide after negotiation — see [[indexServe]] for why a
     // completeness claim makes the re-check a correctness hazard.
-    new DynamoScan(opts, requiredSchema, pushed, limit, aggs, safeTopN, grouped, advPushed,
-      offset, pinSingleSegment = pin, sample = sample, metaNames = metaNames,
+    val scan = new DynamoScan(opts, requiredSchema, pushed, limit, aggs, safeTopN, grouped,
+      advPushed, offset, pinSingleSegment = pin, sample = sample, metaNames = metaNames,
       serveViaIndex = Some(indexServe.isDefined && !overfetch))
+    if (pointRead && !scan.declaresLayoutForSpj) new DynamoLocalScan(scan) else scan
+  }
+
+  /** The GetItem / BatchGetItem shape, served on the driver
+    * ([[DynamoLocalScan]]): a plain row read of the base table whose
+    * pushed conjuncts pin the full primary key by `=`/`IN` to at most
+    * [[PageIndex.maxHashWindows]] keys, so its result is bounded by
+    * the key count. A Query (sort key open) stays a distributed scan:
+    * its result is unbounded.
+    */
+  private def pointRead: Boolean =
+    limit.isEmpty && offset.isEmpty && topN.isEmpty && sample.isEmpty &&
+      aggs.isEmpty && grouped.isEmpty && opts.indexName.isEmpty && !opts.cdc &&
+      DynamoScan.pinnedKeyCount(pushed.toSeq,
+        new LocalKVStore(opts.path).describe(opts.tableName))
+        .exists(_ <= PageIndex.maxHashWindows)
+}
+
+/** A point read served on the driver. Spark plans a `LocalScan` as
+  * `LocalTableScanExec`, whose collect runs no job: [[rows]] runs the
+  * wrapped scan's own partitions through its own readers here, so the
+  * journal overlay, TTL, consistency, `asOfSeq`, pushed-filter
+  * evaluation and the rate limiter are the distributed read's code.
+  * The rows are taken when Spark builds the physical plan, like a file
+  * source's listing: re-collecting the same DataFrame returns them
+  * again, and a new DataFrame sees later writes. No `itemsScanned`
+  * metric is reported (the node carries none). Statistics delegate, so
+  * a join against a point read still auto-broadcasts.
+  */
+final class DynamoLocalScan private[dynamo] (scan: DynamoScan)
+    extends LocalScan with SupportsReportStatistics {
+  override def readSchema(): StructType = scan.readSchema()
+  override def description(): String = scan.description()
+  override def estimateStatistics(): Statistics = scan.estimateStatistics()
+  override def rows(): Array[InternalRow] = {
+    val batch = scan.toBatch
+    val factory = batch.createReaderFactory()
+    batch.planInputPartitions().flatMap { p =>
+      val reader = factory.createReader(p)
+      try {
+        val out = Vector.newBuilder[InternalRow]
+        while (reader.next()) out += reader.get().copy()
+        out.result()
+      } finally reader.close()
+    }
   }
 }
 
@@ -1458,6 +1503,37 @@ object DynamoScan {
         // a GSI fallback whose pins live in index-key space)
         windows = windows)
 
+  private[dynamo] def conjuncts(f: Filter): Seq[Filter] = f match {
+    case org.apache.spark.sql.sources.And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** Values `filters` pin `attr` to by equality: those of the first
+    * non-null `=`/`IN` conjunct on it, the one key-shard pruning uses.
+    */
+  def pinnedValues(filters: Seq[Filter], attr: String): Option[Seq[Any]] =
+    filters.flatMap(conjuncts).collectFirst {
+      case org.apache.spark.sql.sources.EqualTo(a, v) if a == attr && v != null => Seq(v)
+      case org.apache.spark.sql.sources.In(a, vs) if a == attr && vs.nonEmpty &&
+        !vs.contains(null) => vs.toSeq
+    }
+
+  /** How many primary keys `filters` pin: the product of the hash and
+    * sort keys' [[pinnedValues]] counts, or None when a key attribute
+    * is not pinned or a pinned value has no key encoding (the scan
+    * would then not prune to the owning shards). The GetItem /
+    * BatchGetItem shape that [[DynamoScanBuilder.build]] serves on
+    * the driver.
+    */
+  def pinnedKeyCount(filters: Seq[Filter], meta: TableMeta): Option[Long] =
+    (Seq(meta.hashKey) ++ meta.rangeKey).foldLeft(Option(1L)) { (acc, attr) =>
+      for {
+        n <- acc
+        vs <- pinnedValues(filters, attr)
+        if vs.forall(v => PageIndex.literalAttr(v).isDefined)
+      } yield n * vs.length
+    }
+
   /** The `Query`-shape page window for the partition's OWN key space,
     * or Nil. `viaIndex = true` (materialized-copy read): windows on
     * the INDEX keys — the copy is sorted by (index hash, index sort).
@@ -1469,6 +1545,8 @@ object DynamoScan {
     * `stronglyConsistentReads`); conditions on the ALTERNATE sort key
     * are not positional in base pages and derive no bound. A GSI
     * base fallback gets Nil (its pins are index-key-space claims).
+    * A hash-only table's windows pin the hash value alone (its pages
+    * carry no sort bounds, see [[PageIndex.NoSortKey]]).
     * Purely an I/O skip either way: every emitted item still passes
     * through the same filter evaluation.
     */
@@ -1487,8 +1565,7 @@ object DynamoScan {
           PageIndex.deriveWindows(pushed.toSeq, meta.hashKey, rk))
       case None =>
         if (meta.layout < 2) Nil
-        else meta.rangeKey.toSeq.flatMap(rk =>
-          PageIndex.deriveWindows(pushed.toSeq, meta.hashKey, rk))
+        else PageIndex.deriveWindows(pushed.toSeq, meta.hashKey, meta.rangeKey)
     }
 }
 
@@ -1808,6 +1885,27 @@ final class DynamoScan(
   private def fullScanSegments(store: LocalKVStore, meta: TableMeta): Int =
     DynamoScan.fullScanSegments(store, meta, opts)
 
+  /** The session opted into partially-clustered storage-partitioned
+    * joins (both `v2.bucketing` confs), the condition for the SPJ pad
+    * partition in [[planInputPartitions]].
+    */
+  private def spjPadEnabled: Boolean = {
+    val c = org.apache.spark.sql.internal.SQLConf.get
+    c.getConfString("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean &&
+      c.getConfString("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "false").toBoolean
+  }
+
+  /** This scan declares the table's bucket layout to a session that
+    * joins on it shuffle-free. A driver-served point read
+    * ([[DynamoLocalScan]]) declares no layout, so the builder keeps
+    * such a read distributed: its join partner would shuffle instead.
+    */
+  private[dynamo] def declaresLayoutForSpj: Boolean =
+    spjPadEnabled && {
+      val store = new LocalKVStore(opts.path)
+      reportsPerShard(store, store.describe(opts.tableName))
+    }
+
   /** Segment count = max(stored bytes / maxPartitionBytes, the
     * session's slots), clamped to the shard count and capped by
     * defaultParallelism, or forced by the `readPartitions` option —
@@ -1822,7 +1920,12 @@ final class DynamoScan(
     * key — `EqualTo`/`In` on the hash key, plus the range key if the
     * table has one — the scan plans ONLY the shards those keys can
     * live in: the connector's `GetItem`/`Query` analogue (a key-pinned
-    * read touches 1 shard instead of all of them, at any table size).
+    * read touches 1 shard instead of all of them, at any table size),
+    * and each reader windows its owning shard to the pinned keys' pages
+    * ([[DynamoScan.queryWindow]]), hash-only tables included. A full-key
+    * pin of at most [[PageIndex.maxHashWindows]] keys runs these same
+    * partitions on the driver instead ([[DynamoLocalScan]]), with no
+    * Spark job.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val store = new LocalKVStore(opts.path)
@@ -2190,11 +2293,6 @@ final class DynamoScan(
         // pad just skips the I/O. Cost: one no-op task — paid only
         // when the session opted into SPJ (both v2.bucketing confs);
         // otherwise a point lookup stays exactly one task.
-        val spjPadEnabled = {
-          val c = org.apache.spark.sql.internal.SQLConf.get
-          c.getConfString("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean &&
-            c.getConfString("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "false").toBoolean
-        }
         if (live.length <= 1 && spjPadEnabled && reportsPerShard(store, meta)) {
           // (length 0 happens when zone pruning excludes every shard —
           // the pad keeps the declared bucket layout non-degenerate)
@@ -2363,7 +2461,7 @@ final class DynamoScan(
     }
     if (!windowable) return None
     val wv = PageIndex.deriveWindowsWithValues(pushed.toSeq, meta.hashKey,
-      meta.rangeKey.get)
+      meta.rangeKey)
     if (wv.isEmpty) return None
     val owning = keyShards(store, meta).getOrElse(return None)
     val dirty = store.journalShards(opts.tableName)
@@ -2537,7 +2635,7 @@ final class DynamoScan(
       case _ => false
     }
     if (!windowable) return None
-    val wv = PageIndex.deriveWindowsWithValues(pushed.toSeq, ix.hashKey, rk)
+    val wv = PageIndex.deriveWindowsWithValues(pushed.toSeq, ix.hashKey, Some(rk))
     if (wv.isEmpty) return None
     val owning = indexKeyShards(store, meta, ix).getOrElse(return None)
     val dir = java.nio.file.Paths.get(store.rootDir, opts.tableName)
@@ -2786,37 +2884,11 @@ final class DynamoScan(
     * placement hashed hash|range. GSI reads never prune (index keys
     * don't determine base-shard placement).
     */
-  private def conjuncts(f: Filter): Seq[Filter] = f match {
-    case org.apache.spark.sql.sources.And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => Seq(other)
-  }
+  private def conjuncts(f: Filter): Seq[Filter] = DynamoScan.conjuncts(f)
 
   /** Values the pushed/runtime filters pin `attr` to by equality. */
-  private def pinned(attr: String): Option[Seq[Any]] = {
-    val flat = (pushed ++ runtime).flatMap(conjuncts)
-    flat.collectFirst {
-      case org.apache.spark.sql.sources.EqualTo(a, v) if a == attr && v != null => Seq(v)
-      case org.apache.spark.sql.sources.In(a, vs) if a == attr && vs.nonEmpty &&
-        !vs.contains(null) => vs.toSeq
-    }
-  }
-
-  /** Spark literal → storable key attr; None = unprunable type. */
-  private def toAttr(v: Any): Option[AttrVal] = v match {
-    case s: String => Some(AttrVal.S(s))
-    case n: Byte => Some(AttrVal.N(BigDecimal(n.toInt)))
-    case n: Short => Some(AttrVal.N(BigDecimal(n.toInt)))
-    case n: Int => Some(AttrVal.N(BigDecimal(n)))
-    case n: Long => Some(AttrVal.N(BigDecimal(n)))
-    case n: Double => Some(AttrVal.N(BigDecimal(n)))
-    case n: Float => Some(AttrVal.N(BigDecimal(n.toDouble)))
-    case n: java.math.BigDecimal => Some(AttrVal.N(BigDecimal(n)))
-    // v2-translated literals arrive as scala BigDecimal (PredicateV2
-    // .external), the v1 path supplied java's — accept both or
-    // decimal-keyed point lookups silently lose shard pruning
-    case n: scala.math.BigDecimal => Some(AttrVal.N(n))
-    case _ => None // binary/bool/etc: skip pruning, stay correct
-  }
+  private def pinned(attr: String): Option[Seq[Any]] =
+    DynamoScan.pinnedValues((pushed ++ runtime).toSeq, attr)
 
   /** Index-key shard pruning for MATERIALIZED index reads: the copy
     * is hash-partitioned by the INDEX hash key, so pinning it plans
@@ -2827,7 +2899,7 @@ final class DynamoScan(
     for {
       hks <- pinned(ix.hashKey)
       attrs <- {
-        val as = hks.map(toAttr)
+        val as = hks.map(PageIndex.literalAttr)
         if (as.forall(_.isDefined)) Some(as.flatten) else None
       }
     } yield attrs.map(store.indexShardOf(meta, _)).toSet
@@ -2845,7 +2917,7 @@ final class DynamoScan(
       for {
         hks <- pinned(meta.hashKey)
         keys <- {
-          val attrs = hks.map(toAttr)
+          val attrs = hks.map(PageIndex.literalAttr)
           if (attrs.forall(_.isDefined))
             Some(attrs.flatten.map(a => Map(meta.hashKey -> a)))
           else None
@@ -2859,7 +2931,8 @@ final class DynamoScan(
           case Some(rk) => pinned(rk).map(_.map(Some(_)))
         }
         keys <- {
-          val combos = for { h <- hks; r <- rks } yield (toAttr(h), r.map(toAttr)) match {
+          val combos = for { h <- hks; r <- rks } yield
+            (PageIndex.literalAttr(h), r.map(PageIndex.literalAttr)) match {
             case (Some(ha), None) => Some(Map(meta.hashKey -> ha))
             case (Some(ha), Some(Some(ra))) =>
               Some(Map(meta.hashKey -> ha, meta.rangeKey.get -> ra))

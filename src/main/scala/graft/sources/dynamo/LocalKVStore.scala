@@ -449,7 +449,11 @@ final class LocalKVStore(root: String) {
     */
   def restorePending(table: String): Option[String] = {
     val p = restorePendingPath(table)
-    if (Files.isRegularFile(p)) Some(new String(Files.readAllBytes(p), UTF_8))
+    // A finishing restore deletes the marker between the check and
+    // the read: the marker is gone, so the table is not quarantined.
+    if (Files.isRegularFile(p))
+      try Some(new String(Files.readAllBytes(p), UTF_8))
+      catch { case _: java.nio.file.NoSuchFileException => None }
     else None
   }
 
@@ -1939,8 +1943,10 @@ final class LocalKVStore(root: String) {
           val snapshot = Some(listWalRawNames(table).filter(n =>
             LocalKVStore.crossTxnIdOf(n).forall(committed)).toSet)
           val found = mutable.HashMap.empty[String, Item]
+          val windows = pointWindows(meta, keys)
           keys.map(shardOf(meta, _)).distinct.foreach { sh =>
-            scanSegment(table, sh, meta.shards, allowedWal = snapshot)
+            scanSegment(table, sh, meta.shards, allowedWal = snapshot,
+                windows = windows)
               .map(_._1)
               .foreach { it =>
                 val k = keyOf(meta, it)
@@ -1982,7 +1988,9 @@ final class LocalKVStore(root: String) {
   }
 
   /** The key's current merged item — one owning-shard segment read
-    * (base slice + journal replay), item-proportional like a GetItem.
+    * windowed to the key's page ([[pointWindows]]): the base page that
+    * can hold the key plus the owning shard's journal replay, so the
+    * cost is item-proportional like a GetItem, not shard-proportional.
     */
   private def currentItem(table: String, meta: TableMeta, key: Item): Option[Item] = {
     val canon = keyOf(meta, key) // validates the full primary key too
@@ -1990,14 +1998,25 @@ final class LocalKVStore(root: String) {
     // Drain the segment fully instead of `.find`: an early exit would
     // abandon the underlying shard reader with its fd open until GC,
     // and transactWrite condition checks run this once per call in a
-    // long-lived driver. Cost order is unchanged — the journal replay
-    // behind scanSegment walks the whole shard slice regardless.
+    // long-lived driver. The window keeps the drain to one page.
     var found: Option[Item] = None
-    scanSegment(table, shard, meta.shards).foreach { case (it, _) =>
-      if (found.isEmpty && keyOf(meta, it) == canon) found = Some(it)
-    }
+    scanSegment(table, shard, meta.shards, windows = pointWindows(meta, Seq(key)))
+      .foreach { case (it, _) =>
+        if (found.isEmpty && keyOf(meta, it) == canon) found = Some(it)
+      }
     found
   }
+
+  /** Each key's exact page window ([[PageIndex.pointWindow]]), or Nil
+    * under legacy layout 1, whose bases carry no page directory. Only
+    * base pages outside every window are skipped: the journal replay
+    * and the caller's key match are unchanged, and a missing or stale
+    * directory falls back to reading the whole shard.
+    */
+  private def pointWindows(meta: TableMeta, keys: Seq[Item]): Seq[PageIndex.KeyWindow] =
+    if (meta.layout < 2) Nil
+    else keys.map(k => PageIndex.pointWindow(placementOf(meta, k),
+      meta.rangeKey.map(k(_)))).distinct
 
   /** Snapshot-consistent multi-key read — the `TransactGetItems`
     * analogue: every key resolves against ONE journal-file listing,
@@ -2009,7 +2028,8 @@ final class LocalKVStore(root: String) {
     * Plain per-shard writers keep the store's non-atomic model (A14);
     * this pins exactly the guarantee DynamoDB's TransactGetItems
     * adds over N GetItems. Cost: one owning-shard segment read per
-    * DISTINCT shard touched, item-proportional like GetItem; results
+    * DISTINCT shard touched, windowed to the keys' pages
+    * ([[pointWindows]]) — item-proportional like GetItem; results
     * positionally match `keys`, `None` = absent at the snapshot.
     */
   def transactGet(table: String, keys: Seq[Item]): Seq[Option[Item]] = {
@@ -2046,9 +2066,11 @@ final class LocalKVStore(root: String) {
       val found = mutable.HashMap.empty[String, Item]
       // a listed file vanishing under the read IS a racing fold —
       // retry exactly like a post-scan watermark mismatch
+      val windows = pointWindows(meta, keys)
       val torn = try {
         ownShards.foreach { sh =>
-          scanSegment(table, sh, meta.shards, allowedWal = snapshot)
+          scanSegment(table, sh, meta.shards, allowedWal = snapshot,
+              windows = windows)
             .map(_._1)
             .foreach { it =>
               val k = keyOf(meta, it)
@@ -2856,14 +2878,22 @@ final class LocalKVStore(root: String) {
     // absent-normal-form, carrying the same out-of-window key attrs
     // the caller's filters reject.
     val baseItems = shardFiles.iterator.flatMap { p =>
+      // Under partition-key placement a window's hash names its shard
+      // (the shard of the pinned key): a shard owning no window holds
+      // no key inside any window, so none of its base is read.
+      val own =
+        if (meta.layout < 2) windows
+        else windows.filter(w =>
+          math.floorMod(w.hashEnc.hashCode, meta.shards) == shardIndex(p))
       val paged =
         if (windows.isEmpty) None
+        else if (own.isEmpty) Some(Iterator.empty)
         else {
           val idxPath = p.resolveSibling(
             f"pageidx-s${shardIndex(p)}%03d.jsonl")
           PageIndex.load(idxPath, p).flatMap { idx =>
             PageIndex.readPages(p, idx.pages.filter(pg =>
-              windows.exists(PageIndex.intersects(pg, _))),
+              own.exists(PageIndex.intersects(pg, _))),
               idx.fileBytes, idx.mtimeNanos)
           }
         }
@@ -2949,7 +2979,10 @@ final class LocalKVStore(root: String) {
   /** Write one shard's base file SORTED by (placement key, typed sort
     * key) — DynamoDB's within-partition sort order — and publish its
     * page directory ([[PageIndex]]): the layout that admits hash-eq +
-    * sort-key-bounded reads of O(matching pages). Shared by
+    * sort-key-bounded reads of O(matching pages). Every layout-2
+    * table gets one; a hash-only table's pages are bounded on the
+    * hash component alone and carry [[PageIndex.NoSortKey]] as their
+    * sort bounds, so its point reads cost one page too. Shared by
     * compaction and bulk load so the two cannot produce different
     * layouts. The sidecar is written AFTER the base move: its
     * recorded size must describe the live file (a crash between the
@@ -2973,17 +3006,19 @@ final class LocalKVStore(root: String) {
       }
     }
     val merged = items.sorted(ord)
-    // Page directory published only for composite-key tables under
-    // partition-key placement (layout 2 — the layout where one hash
-    // key's sort run is shard-contiguous).
+    // Page directory published under partition-key placement (layout
+    // 2 — the layout where one hash key's sort run is shard-contiguous).
     writePagedFile(
       tmp = dir.resolve(f"compact-$shard%03d.tmp"),
       finalPath = dir.resolve(f"shard-$shard%03d.jsonl"),
       idxPath = dir.resolve(f"pageidx-s$shard%03d.jsonl"),
       sorted = merged,
-      indexable = meta.rangeKey.isDefined && meta.layout >= 2,
+      indexable = meta.layout >= 2,
       hashOf = placementOf(meta, _),
-      rangeOf = it => it(meta.rangeKey.get))
+      rangeOf = meta.rangeKey match {
+        case Some(rk) => it => it(rk)
+        case None => _ => PageIndex.NoSortKey
+      })
   }
 
   /** Low-level sorted-base writer shared by the base and GSI-copy

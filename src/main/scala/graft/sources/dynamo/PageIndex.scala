@@ -22,7 +22,11 @@ import graft.sources.dynamo.ItemJson.Item
   * covers. A scan whose pushed conjuncts pin the hash key and bound
   * the sort key then reads only the intersecting pages — sub-shard
   * I/O pruning, composed UNDER the existing shard pruning (the shard
-  * set first, then pages within the owning shard).
+  * set first, then pages within the owning shard). Hash-only tables
+  * get a directory too: their pages are bounded on the hash component
+  * alone and carry [[NoSortKey]] as both sort bounds, so a hash pin
+  * (GetItem, BatchGetItem, the store's own point reads) reads one
+  * page instead of the owning shard.
   *
   * Soundness under the journal overlay: skipped pages hold only keys
   * OUTSIDE the qualifying window, so their base rows would be dropped
@@ -62,6 +66,13 @@ object PageIndex {
     * ~1 extra line per such group.
     */
   val pageAlignMinItems = 32
+
+  /** The fixed sort-key bound recorded on every page of a hash-only
+    * table. Windows over such a table never bound the sort key, so
+    * [[intersects]] and [[contains]] compare only the hash component
+    * and this value is never compared.
+    */
+  val NoSortKey: AttrVal = AttrVal.N(BigDecimal(0))
 
   /** One page's composite-key coverage. `minR`/`maxR` are the typed
     * sort-key values (compared with the same semantics Spark uses:
@@ -196,11 +207,21 @@ object PageIndex {
       loOk && hiOk && prefOk
     }
 
-  /** Spark filter literal → typed key value. Mirrors the scan
-    * planner's shard-pruning conversion; None = a type the key
-    * encoding does not cover (no window, full read, still correct).
+  /** The exact window of one primary key: its hash value, and its
+    * sort value as both inclusive bounds when the table has a sort
+    * key. A point read passes it to [[LocalKVStore.scanSegment]] so
+    * only the key's page is read from the owning shard's base.
     */
-  private def literalAttr(v: Any): Option[AttrVal] = v match {
+  def pointWindow(hashEnc: String, sortValue: Option[AttrVal]): KeyWindow =
+    KeyWindow(hashEnc, sortValue, loInc = true, sortValue, hiInc = true)
+
+  /** Spark filter literal → typed key value, shared by page windows
+    * and the scan planner's key-shard pruning; None = a type the key
+    * encoding does not cover (no window, full read, still correct).
+    * v2-translated literals arrive as scala BigDecimal, v1 ones as
+    * java's: both are accepted.
+    */
+  private[dynamo] def literalAttr(v: Any): Option[AttrVal] = v match {
     case s: String => Some(AttrVal.S(s))
     case n: Byte => Some(AttrVal.N(BigDecimal(n.toInt)))
     case n: Short => Some(AttrVal.N(BigDecimal(n.toInt)))
@@ -253,6 +274,14 @@ object PageIndex {
     * the prefix fold below).
     */
   def deriveWindows(filters: Seq[Filter], hashKey: String, rangeKey: String): Seq[KeyWindow] =
+    deriveWindows(filters, hashKey, Some(rangeKey))
+
+  /** [[deriveWindows]] for a table that may have no sort key: with
+    * `rangeKey = None` the windows pin the hash value alone (the
+    * hash-only directory's shape, see [[NoSortKey]]).
+    */
+  def deriveWindows(filters: Seq[Filter], hashKey: String,
+      rangeKey: Option[String]): Seq[KeyWindow] =
     deriveWindowsWithValues(filters, hashKey, rangeKey).map(_._2)
 
   /** [[deriveWindows]], keeping each window's pinned hash value in its
@@ -261,7 +290,7 @@ object PageIndex {
     * window), not just its encoded-key spelling.
     */
   def deriveWindowsWithValues(filters: Seq[Filter], hashKey: String,
-      rangeKey: String): Seq[(AttrVal, KeyWindow)] = {
+      rangeKey: Option[String]): Seq[(AttrVal, KeyWindow)] = {
     val flat = filters.flatMap(conjuncts)
     // one converted encoded-value map PER hash-pinning conjunct;
     // None = a conjunct whose window participation cannot be proven
@@ -290,7 +319,7 @@ object PageIndex {
     // prefixes make the true range empty, which page containment
     // cannot express, so decline
     val prefixes = flat.collect {
-      case StringStartsWith(a, p) if a == rangeKey && p != null => p
+      case StringStartsWith(a, p) if rangeKey.contains(a) && p != null => p
     }
     val longestPrefix = prefixes.sortBy(-_.length).headOption
     if (longestPrefix.exists(lp => prefixes.exists(p => !lp.startsWith(p))))
@@ -313,17 +342,17 @@ object PageIndex {
         }
       }
       flat.foreach {
-        case EqualTo(a, v) if a == rangeKey && v != null =>
+        case EqualTo(a, v) if rangeKey.contains(a) && v != null =>
           literalAttr(v).foreach { x => tightenLo(x, inc = true); tightenHi(x, inc = true) }
-        case GreaterThan(a, v) if a == rangeKey && v != null =>
+        case GreaterThan(a, v) if rangeKey.contains(a) && v != null =>
           literalAttr(v).foreach(tightenLo(_, inc = false))
-        case GreaterThanOrEqual(a, v) if a == rangeKey && v != null =>
+        case GreaterThanOrEqual(a, v) if rangeKey.contains(a) && v != null =>
           literalAttr(v).foreach(tightenLo(_, inc = true))
-        case LessThan(a, v) if a == rangeKey && v != null =>
+        case LessThan(a, v) if rangeKey.contains(a) && v != null =>
           literalAttr(v).foreach(tightenHi(_, inc = false))
-        case LessThanOrEqual(a, v) if a == rangeKey && v != null =>
+        case LessThanOrEqual(a, v) if rangeKey.contains(a) && v != null =>
           literalAttr(v).foreach(tightenHi(_, inc = true))
-        case StringStartsWith(a, p) if a == rangeKey && p != null =>
+        case StringStartsWith(a, p) if rangeKey.contains(a) && p != null =>
           // the chain check above proved the longest prefix implies
           // every other; each still tightens the lower bound
           tightenLo(AttrVal.S(p), inc = true)

@@ -7418,4 +7418,213 @@ class DynamoConnectorSpec extends AnyFunSuite {
         Nil, None, false, None, pageBytes = 32 * 1024) }
     assert(coll.getMessage.contains("collides"), coll.getMessage)
   }
+
+  // ---- driver-served point reads (GetItem / BatchGetItem shape) ----
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** (LocalTableScanExec, BatchScanExec) node counts of `df`'s plan. */
+  private def scanNodes(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.executedPlan
+    (Plans.collect(plan) {
+      case l: org.apache.spark.sql.execution.LocalTableScanExec => l }.size,
+     Plans.collect(plan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }.size)
+  }
+
+  /** Spark jobs started while `body` runs, counted by job group. A
+    * barrier job in a second group runs after `body`; listener events
+    * arrive in order, so once the barrier is seen every job of `body`
+    * has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val barrier = s"$group-barrier"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(barrier, "barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(barrier) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.contains(barrier), "the listener never saw the barrier job")
+      java.util.Collections.frequency(seen, group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("LAW: a driver-served point read returns the rows of a full read filtered in Spark") {
+    import graft.sources.dynamo.AttrVal
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import spark.implicits._
+    val root = freshRoot()
+    val store = new LocalKVStore(root)
+    val n = 400
+    def exp(i: Int): Long = if (i % 3 == 0) 100L else 2000000000L
+    // hash-only `pc` (string keys) and composite `po` (numeric keys),
+    // 16 shards each, written through the connector (journal only)
+    (0 until n).map(i => (f"k$i%04d", i.toLong, exp(i), s"v$i"))
+      .toDF("id", "n", "exp", "v").write.dynamo(root, "pc", "id")
+    (0 until n).map(i => ((i % 40).toLong, i.toLong, i.toLong, exp(i), s"v$i"))
+      .toDF("h", "r", "n", "exp", "v").write.format("dynamo")
+      .option("path", root).option("tableName", "po")
+      .option("hashKey", "h").option("rangeKey", "r").mode("append").save()
+    val rnd = new scala.util.Random(7)
+    def pcKey(i: Int): String = f"k$i%04d"
+    // full-key pins: `=`, IN of up to 64 keys, absent keys, keys on
+    // many shards; composite pins combine hash and sort pins
+    def pins(table: String): Seq[(String, Column)] = (0 until 6).map { j =>
+      val m = if (j == 5) 64 else 1 + rnd.nextInt(12)
+      val ks = Seq.fill(m)(rnd.nextInt(n + 60)).distinct
+      table match {
+        case "pc" if j == 0 => ("= present", col("id") === pcKey(rnd.nextInt(n)))
+        case "pc" if j == 1 => ("= absent", col("id") === pcKey(n + 7))
+        case "pc" => (s"IN ${ks.size}", col("id").isin(ks.map(pcKey): _*))
+        case _ if j == 0 =>
+          val i = rnd.nextInt(n); ("= present", col("h") === (i % 40).toLong && col("r") === i.toLong)
+        case _ if j == 1 => ("= absent", col("h") === 3L && col("r") === 4L)
+        case _ =>
+          val hs = ks.take(4).map(i => (i % 40).toLong).distinct
+          val rs = ks.take(64 / hs.size).map(_.toLong)
+          (s"IN ${hs.size}x${rs.size}", col("h").isin(hs: _*) && col("r").isin(rs: _*))
+      }
+    }
+    def read(table: String, opts: Map[String, String]): DataFrame =
+      spark.read.format("dynamo").option("path", root).option("tableName", table)
+        .options(opts).load()
+    def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+    def checkState(state: String, optionSets: Seq[(String, Map[String, String])]): Unit =
+      for ((optName, opts) <- optionSets; table <- Seq("pc", "po"); meta <- Seq(false, true)) {
+        val dataCols = read(table, opts).columns.toSeq
+        val cols = (if (meta) dataCols ++ Seq("_shard", "_size") else dataCols).map(col)
+        val fullRows = read(table, opts + ("filterPushdown" -> "false")).select(cols: _*).collect()
+        val full = spark.createDataFrame(
+          java.util.Arrays.asList(fullRows: _*), fullRows.headOption.fold(
+            read(table, opts).select(cols: _*).schema)(_.schema))
+        pins(table).foreach { case (pinName, pin) =>
+          val served = read(table, opts).select(cols: _*).filter(pin)
+          val what = s"$state / $optName / $table / $pinName / meta=$meta"
+          assert(scanNodes(served) === ((1, 0)), s"$what: not served locally")
+          assert(sorted(served.collect().toSeq) === sorted(full.filter(pin).collect().toSeq),
+            s"$what: rows diverge")
+        }
+      }
+    val common = Seq(
+      "plain" -> Map.empty[String, String],
+      "ttl" -> Map("ttlAttribute" -> "exp", "ttlNow" -> "1000000000"),
+      "strongly consistent" -> Map("stronglyConsistentReads" -> "true"),
+      "consistentScan" -> Map("consistentScan" -> "true"))
+    checkState("journal-only", common)
+    Seq("pc", "po").foreach(store.compact)
+    checkState("compacted", common)
+    // journal over base: updates, deletes and new keys, in two files
+    // so an asOfSeq cut between them hides the second
+    def pcItem(i: Int, v: String): Map[String, AttrVal] = Map("id" -> AttrVal.S(pcKey(i)),
+      "n" -> AttrVal.N(BigDecimal(i)), "exp" -> AttrVal.N(BigDecimal(exp(i))), "v" -> AttrVal.S(v))
+    def poItem(i: Int, v: String): Map[String, AttrVal] = Map(
+      "h" -> AttrVal.N(BigDecimal(i % 40)), "r" -> AttrVal.N(BigDecimal(i)),
+      "n" -> AttrVal.N(BigDecimal(i)), "exp" -> AttrVal.N(BigDecimal(exp(i))), "v" -> AttrVal.S(v))
+    def pubSeqs(t: String): Seq[Long] =
+      store.walFileNames(t).map(_.stripPrefix("wal-").takeWhile(_ != '-').toLong)
+    store.appendWal("pc", 1L, "j1", (0 until n + 40 by 5).map(i =>
+      if (i % 10 == 0) store.Delete(Map("id" -> AttrVal.S(pcKey(i))))
+      else store.Put(pcItem(i, s"j1-$i"))))
+    store.appendWal("po", 1L, "j1", (0 until n + 40 by 5).map(i =>
+      if (i % 10 == 0) store.Delete(poItem(i, "").filter(kv => kv._1 == "h" || kv._1 == "r"))
+      else store.Update(poItem(i, s"j1-$i"))))
+    val cuts = Seq("pc", "po").map(t => t -> pubSeqs(t).max).toMap
+    store.appendWal("pc", 2L, "j2", (1 until n + 40 by 7).map(i => store.Put(pcItem(i, s"j2-$i"))))
+    store.appendWal("po", 2L, "j2", (1 until n + 40 by 7).map(i => store.Update(poItem(i, s"j2-$i"))))
+    assert(cuts.forall { case (t, c) => pubSeqs(t).max > c })
+    checkState("journal over base", common)
+    // one cut per table: the two tables' journals carry their own pubSeqs
+    Seq("pc", "po").foreach { t =>
+      val opts = Map("asOfSeq" -> cuts(t).toString)
+      pins(t).foreach { case (pinName, pin) =>
+        val served = read(t, opts).filter(pin)
+        assert(scanNodes(served) === ((1, 0)), s"asOfSeq / $t / $pinName: not served locally")
+        val fullRows = read(t, opts + ("filterPushdown" -> "false")).collect()
+        val full = spark.createDataFrame(java.util.Arrays.asList(fullRows: _*), fullRows.head.schema)
+        assert(sorted(served.collect().toSeq) === sorted(full.filter(pin).collect().toSeq),
+          s"asOfSeq / $t / $pinName: rows diverge")
+        assert(!served.collect().exists(_.getAs[String]("v").startsWith("j2-")),
+          s"asOfSeq / $t / $pinName: the cut leaked a later write")
+      }
+    }
+  }
+
+  test("point-read plan shape: full-key pins run no job; other shapes stay BatchScan") {
+    import spark.implicits._
+    import graft.sources.dynamo.IndexMeta
+    val root = freshRoot()
+    (0 until 300).map(i => (f"k$i%04d", i.toLong, s"c${i % 5}"))
+      .toDF("id", "n", "c").write.dynamo(root, "ph", "id")
+    (0 until 300).map(i => ((i % 30).toLong, i.toLong, i.toLong))
+      .toDF("h", "r", "n").write.format("dynamo")
+      .option("path", root).option("tableName", "pr")
+      .option("hashKey", "h").option("rangeKey", "r").mode("append").save()
+    new LocalKVStore(root).createIndex("ph", "by_c", IndexMeta("c", Some("id"), None))
+    def ph = spark.read.dynamo(root, "ph")
+    def pr = spark.read.dynamo(root, "pr")
+    // eligible: GetItem and BatchGetItem shapes, hash-only and composite
+    val get = ph.filter(col("id") === "k0007")
+    assert(scanNodes(get) === ((1, 0)))
+    assert(jobsDuring(assert(get.collect().map(_.getAs[Long]("n")).toSeq === Seq(7L))) === 0)
+    val batchGet = ph.filter(col("id").isin((0 until 64).map(i => f"k${i * 4}%04d"): _*))
+    assert(scanNodes(batchGet) === ((1, 0)))
+    assert(jobsDuring(assert(batchGet.collect().length === 64)) === 0)
+    val getComposite = pr.filter(col("h") === 7L && col("r") === 37L)
+    assert(scanNodes(getComposite) === ((1, 0)))
+    assert(jobsDuring(assert(getComposite.collect().map(_.getAs[Long]("n")).toSeq ===
+      Seq(37L))) === 0)
+    // the counter does see jobs: the same read distributed runs one
+    val distributed = ph.filter(col("id") === "k0007").limit(1)
+    assert(jobsDuring(distributed.collect()) >= 1)
+    // declined shapes keep the distributed scan
+    val declined = Seq(
+      "hash-only pin on a range table" -> pr.filter(col("h") === 7L),
+      "more than 64 keys" -> ph.filter(col("id").isin((0 until 65).map(i => f"k$i%04d"): _*)),
+      "indexName" -> spark.read.format("dynamo").option("path", root)
+        .option("tableName", "ph").option("indexName", "by_c").load()
+        .filter(col("id") === "k0007"),
+      "limit" -> ph.filter(col("id") === "k0007").limit(1),
+      "aggregate" -> ph.filter(col("id") === "k0007").agg(count(lit(1))),
+      "declared bucket layout" -> spark.read.format("dynamo").option("path", root)
+        .option("tableName", "ph").option("readPartitions", "16").load()
+        .filter(col("id") === "k0007"))
+    declined.foreach { case (name, df) =>
+      assert(scanNodes(df)._2 === 1, s"$name: expected a BatchScanExec")
+      assert(scanNodes(df)._1 === 0, s"$name: must not be served locally")
+      df.collect()
+    }
+    // a join against a point read still sees its statistics and broadcasts
+    val joined = ph.join(get.select(col("id"), col("n").as("n2")), "id")
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LocalTableScan"), plan)
+    assert(joined.collect().map(_.getAs[Long]("n2")).toSeq === Seq(7L))
+  }
+
+  test("a driver-served point read takes its rows at planning, like a file listing") {
+    import spark.implicits._
+    import graft.sources.dynamo.AttrVal
+    val root = freshRoot()
+    Seq(("a", 1L), ("b", 2L)).toDF("id", "n").write.dynamo(root, "ps", "id")
+    val df = spark.read.dynamo(root, "ps").filter(col("id") === "a")
+    assert(df.collect().map(_.getAs[Long]("n")).toSeq === Seq(1L))
+    val store = new LocalKVStore(root)
+    store.appendWal("ps", 1L, "w", Seq(store.Put(Map(
+      "id" -> AttrVal.S("a"), "n" -> AttrVal.N(BigDecimal(10))))))
+    // the same DataFrame keeps the rows its plan took
+    assert(df.collect().map(_.getAs[Long]("n")).toSeq === Seq(1L))
+    // a new DataFrame plans again and sees the write
+    assert(spark.read.dynamo(root, "ps").filter(col("id") === "a")
+      .collect().map(_.getAs[Long]("n")).toSeq === Seq(10L))
+  }
 }

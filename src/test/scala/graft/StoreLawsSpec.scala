@@ -1897,6 +1897,158 @@ class StoreLawsSpec extends AnyFunSuite {
     }
   }
 
+  test("LAW: paged (hash-window) scan ≡ full scan on hash-only tables, for any pins and ops") {
+    // Hash-only tables publish a page directory too, its pages bounded
+    // on the hash component alone. For ANY base (string or numeric
+    // hash keys), ANY journal suffix and ANY `=`/`IN` hash pin —
+    // present, absent and journal-only keys alike — filtering the
+    // PAGED scan yields exactly the rows filtering the FULL scan
+    // yields, and with no journal the paged scan reads at most one
+    // page per pinned key.
+    import graft.sources.dynamo.{FilterEval, PageIndex}
+    import org.apache.spark.sql.sources.{Filter => SFilter, _}
+    val genCase = for {
+      numeric <- Gen.oneOf(true, false)
+      nBase <- Gen.chooseNum(50, 500)
+      shards <- Gen.chooseNum(1, 3)
+      nOps <- Gen.chooseNum(0, 40)
+      opKinds <- Gen.listOfN(nOps, Gen.chooseNum(0, 2))
+      opKeys <- Gen.listOfN(nOps, Gen.chooseNum(0, 560))
+      nPins <- Gen.chooseNum(1, 6)
+      pins <- Gen.listOfN(nPins, Gen.chooseNum(0, 560))
+      useIn <- Gen.oneOf(true, false)
+    } yield (numeric, nBase, shards, opKinds.zip(opKeys), pins.distinct, useIn)
+
+    forAll(genCase) { case (numeric, nBase, shards, ops, pins, useIn) =>
+      val root = Files.createTempDirectory("graft-hashpagedlaw").toString
+      val store = new LocalKVStore(root)
+      val meta = TableMeta("h", None, shards = shards, throughput = 1000000L)
+      store.createTable("t", meta)
+      def hAttr(i: Int): AttrVal =
+        if (numeric) AttrVal.N(BigDecimal(i)) else AttrVal.S(f"h$i%04d")
+      def hLit(i: Int): Any = if (numeric) i.toLong else f"h$i%04d"
+      store.appendWal("t", 1L, "base", (0 until nBase).map(i =>
+        store.Put(Map("h" -> hAttr(i), "v" -> AttrVal.S(s"base$i")))))
+      store.compact("t")
+      val dir = java.nio.file.Paths.get(root, "t")
+      (0 until shards).foreach { sh =>
+        val base = dir.resolve(f"shard-$sh%03d.jsonl")
+        if (Files.isRegularFile(base) && Files.size(base) > 0)
+          assert(Files.isRegularFile(dir.resolve(f"pageidx-s$sh%03d.jsonl")),
+            s"hash-only shard $sh has no page directory")
+      }
+      val walOps = ops.zipWithIndex.map { case ((kind, k), i) => kind match {
+        case 0 => store.Put(Map("h" -> hAttr(k), "v" -> AttrVal.S(s"put$i")))
+        case 1 => store.Delete(Map("h" -> hAttr(k)))
+        case _ => store.Update(Map("h" -> hAttr(k), "u" -> AttrVal.N(BigDecimal(i))))
+      }}
+      if (walOps.nonEmpty) store.appendWal("t", 2L, "suffix", walOps)
+      val filters: Seq[SFilter] = Seq(
+        if (useIn || pins.size > 1) In("h", pins.map(hLit).toArray)
+        else EqualTo("h", hLit(pins.head)))
+      val windows = PageIndex.deriveWindows(filters, "h", None)
+      assert(windows.size === pins.size, "hash pins must derive one window each")
+      def read(w: Seq[PageIndex.KeyWindow]): Vector[Item] =
+        (0 until shards).flatMap(seg =>
+          store.scanSegment("t", seg, shards, windows = w).map(_._1)).toVector
+      def view(w: Seq[PageIndex.KeyWindow]): Map[String, Item] =
+        read(w).filter(it => filters.forall(FilterEval.eval(_, it)))
+          .map(it => store.keyOf(meta, it) -> it).toMap
+      assert(view(windows) === view(Nil),
+        s"paged/full divergence: numeric=$numeric nBase=$nBase pins=$pins ops=${ops.size}")
+      if (walOps.isEmpty)
+        assert(read(windows).size <= PageIndex.pageAlignMinItems * pins.size,
+          s"paged read of ${pins.size} pins scanned ${read(windows).size} items")
+    }
+  }
+
+  test("LAW: page-windowed point reads (transactGet, currentItem) ≡ a full owning-shard drain") {
+    // The store's own point reads window the owning shard to each
+    // key's page. For hash-only and composite tables, ANY journal
+    // suffix (Put, Update, Delete, PutIfAbsent, ADD — on keys inside
+    // and outside the read set, in the base and beyond it), reads on
+    // a journal-only table, over a compacted base and after a second
+    // compaction, and an intact, missing or stale page directory:
+    // `transactGet` and `currentItem` (observed through a condition
+    // check whose failure names the current item) return exactly
+    // what draining the whole owning shard returns.
+    import graft.sources.dynamo.{ItemJson, TxnCheck, TxnCheckFailedException}
+    val genOps = Gen.chooseNum(0, 30).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 4), Gen.chooseNum(0, 460))))
+    val genCase = for {
+      hashOnly <- Gen.oneOf(true, false)
+      nBase <- Gen.chooseNum(40, 400)
+      shards <- Gen.chooseNum(1, 4)
+      ops1 <- genOps
+      ops2 <- genOps
+      reads <- Gen.listOfN(6, Gen.chooseNum(0, 460))
+      sidecar <- Gen.chooseNum(0, 2) // 0 intact, 1 missing, 2 stale
+    } yield (hashOnly, nBase, shards, ops1, ops2, reads.distinct, sidecar)
+
+    forAll(genCase) { case (hashOnly, nBase, shards, ops1, ops2, reads, sidecar) =>
+      val root = Files.createTempDirectory("graft-pointreadlaw").toString
+      val store = new LocalKVStore(root)
+      val meta = TableMeta("h", if (hashOnly) None else Some("r"), shards = shards,
+        throughput = 1000000L)
+      store.createTable("t", meta)
+      def key(i: Int): Item =
+        if (hashOnly) Map("h" -> AttrVal.S(f"h$i%04d"))
+        else Map("h" -> AttrVal.S(s"h${i % 5}"), "r" -> AttrVal.N(BigDecimal(i)))
+      def toOps(ops: Seq[(Int, Int)], tag: String): Seq[store.Op] =
+        ops.zipWithIndex.map { case ((kind, k), j) => kind match {
+          case 0 => store.Put(key(k) ++ Map("v" -> AttrVal.S(s"$tag$j"),
+            "n" -> AttrVal.N(BigDecimal(j))))
+          case 1 => store.Update(key(k) + ("u" -> AttrVal.N(BigDecimal(j))))
+          case 2 => store.Delete(key(k))
+          case 3 => store.PutIfAbsent(key(k) + ("v" -> AttrVal.S(s"nx$tag$j")))
+          case _ => store.AddTo(key(k) + ("n" -> AttrVal.N(BigDecimal(j))),
+            Map("n" -> BigDecimal(j)))
+        }}
+      store.appendWal("t", 1L, "base", (0 until nBase).map(i =>
+        store.Put(key(i) ++ Map("v" -> AttrVal.S(s"base$i"),
+          "n" -> AttrVal.N(BigDecimal(i))))))
+      val dir = java.nio.file.Paths.get(root, "t")
+      def sidecars: Seq[java.nio.file.Path] = {
+        val ls = Files.list(dir)
+        try ls.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("pageidx-")).toVector
+        finally ls.close()
+      }
+      def drain(k: Item): Option[Item] =
+        store.scanSegment("t", store.shardOf(meta, k), shards).map(_._1).toVector
+          .find(store.keyOf(meta, _) == store.keyOf(meta, k))
+      def check(phase: String): Unit = {
+        val keys = reads.map(key)
+        val expect = keys.map(drain)
+        assert(store.transactGet("t", keys) === expect,
+          s"$phase: transactGet diverges (hashOnly=$hashOnly sidecar=$sidecar)")
+        keys.zip(expect).foreach { case (k, e) =>
+          val failing = if (e.isDefined) TxnCheck.Absent(k) else TxnCheck.Exists(k)
+          val msg = intercept[TxnCheckFailedException](
+            store.transactWrite("t", 9L, "cond", Seq(store.Put(k)), Seq(failing))).getMessage
+          val cur = msg.substring(msg.lastIndexOf("(current: ") + 10, msg.length - 1)
+          assert((if (cur == "absent") None else Some(ItemJson.parse(cur))) === e,
+            s"$phase: currentItem diverges on ${store.keyOf(meta, k)}")
+        }
+      }
+      check("journal-only")
+      store.compact("t")
+      assert(sidecars.nonEmpty, "compaction publishes page directories")
+      val old = sidecars.map(p => p -> Files.readAllBytes(p))
+      if (sidecar == 1) sidecars.foreach(Files.delete)
+      if (ops1.nonEmpty) store.appendWal("t", 2L, "s1", toOps(ops1, "a"))
+      check("journal over base")
+      store.compact("t")
+      sidecar match {
+        case 1 => sidecars.foreach(Files.delete)
+        case 2 => old.foreach { case (p, b) => Files.write(p, b) } // describes the old base
+        case _ => ()
+      }
+      if (ops2.nonEmpty) store.appendWal("t", 3L, "s2", toOps(ops2, "b"))
+      check("after a second compaction")
+    }
+  }
+
   private def mergedView(st: LocalKVStore, table: String): Map[String, Item] =
     st.scanSegment(table, 0, 1).map(_._1)
       .map(it => it("id").asInstanceOf[AttrVal.S].v -> it).toMap

@@ -13,7 +13,9 @@
 #     w<N>/                  the Verify dump at width N
 #     correctness_w<N>.json  check.py --json, driver-shaped
 #     layout_w<N>.tsv        <key>\t<scans reporting a key-grouped layout>
-#   and prints, per width, the keys whose plans report that layout.
+#                            \t<point reads served on the driver>
+#   and prints, per width, the keys whose plans report that layout and
+#   the keys whose point reads are served on the driver (LocalTableScanExec).
 # Exit status is non-zero when any key fails at any width.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -46,5 +48,7 @@ print("\n".join(sorted(k for k in json.load(open(sys.argv[1]))
   fi
   echo "== width $w: keys whose plans report a key-grouped layout =="
   awk -F'\t' '$2 > 0 { printf "  %s (%d scans)\n", $1, $2 }' "$layout" | sort
+  echo "== width $w: keys whose point reads are served on the driver =="
+  awk -F'\t' '$3 > 0 { printf "  %s (%d reads)\n", $1, $3 }' "$layout" | sort
 done
 exit $status
