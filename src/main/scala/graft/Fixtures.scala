@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md /
   * FIXTURES.md). All queries read through here so the events
@@ -31,31 +32,28 @@ object Fixtures {
     * OBJECT so a relation never leaks across sessions (specs
     * start/stop many; a handful of cached leaf plans per session is
     * bounded and tiny).
+    *
+    * A cached DataFrame references its own session, so no session
+    * held here is ever unreachable: every access drops the entries of
+    * sessions whose context has stopped instead. All access is
+    * synchronized on the map (driver-side, ~10³ calls per run —
+    * contention-free).
     */
-  private val relCache =
-    // WeakHashMap keyed by the session OBJECT (round 19, advisor note):
-    // the former strong ConcurrentHashMap keyed by (session, dir, name)
-    // retained every stopped session's SessionState/InMemoryFileIndex
-    // for the JVM's lifetime — spec suites start/stop dozens of
-    // sessions per sbt JVM. Weak session keys let a stopped,
-    // unreferenced session's entries be collected; the inner map stays
-    // bounded per LIVE session. All access synchronized on the outer
-    // map (WeakHashMap is not thread-safe; this is driver-side,
-    // ~10³ calls per run — contention-free).
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]
+  private val relCache = new java.util.IdentityHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val perSession = relCache.synchronized {
-      var m = relCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]
-        relCache.put(spark, m)
-      }
-      m
+      relCache.keySet.removeIf(_.sparkContext.isStopped)
+      relCache.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame])
     }
     perSession.computeIfAbsent((sfDir, name),
       _ => spark.read.parquet(s"$sfDir/$name.parquet"))
   }
+
+  /** The sessions [[table]] holds relations for (specs). */
+  private[graft] def cachedSessions: Seq[SparkSession] =
+    relCache.synchronized(relCache.keySet.asScala.toList)
 
   /** `events.parquet` has shipped `ts` in two physical shapes across
     * driver testdata generations: Parquet INT64 TIMESTAMP(NANOS)

@@ -31,24 +31,29 @@ object ItemJson {
   // ---- writing ----
 
   def write(item: Item): String = {
-    val sb = new StringBuilder(128)
+    val sb = new java.lang.StringBuilder(128)
     writeObj(sb, item)(writeAttr)
     sb.toString()
   }
 
-  private def writeObj[V](sb: StringBuilder, m: Map[String, V])(f: (StringBuilder, V) => Unit): Unit = {
+  private def writeObj[V](sb: java.lang.StringBuilder, m: Map[String, V])(
+      f: (java.lang.StringBuilder, V) => Unit): Unit = {
     sb.append('{')
-    var first = true
     // sorted keys → byte-identical store files across runs (determinism)
-    m.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      if (!first) sb.append(',')
-      first = false
-      writeString(sb, k); sb.append(':'); f(sb, v)
+    val keys = new Array[String](m.size)
+    var n = 0
+    m.foreachEntry((k, _) => { keys(n) = k; n += 1 })
+    java.util.Arrays.sort(keys.asInstanceOf[Array[AnyRef]])
+    var i = 0
+    while (i < n) {
+      if (i > 0) sb.append(',')
+      writeString(sb, keys(i)); sb.append(':'); f(sb, m(keys(i)))
+      i += 1
     }
     sb.append('}')
   }
 
-  private def writeAttr(sb: StringBuilder, a: AttrVal): Unit = a match {
+  private def writeAttr(sb: java.lang.StringBuilder, a: AttrVal): Unit = a match {
     case AttrVal.S(v)    => sb.append("{\"S\":"); writeString(sb, v); sb.append('}')
     case AttrVal.N(v)    => sb.append("{\"N\":\""); sb.append(v.bigDecimal.toPlainString); sb.append("\"}")
     case AttrVal.Bool(v) => sb.append("{\"BOOL\":"); sb.append(v); sb.append('}')
@@ -63,17 +68,28 @@ object ItemJson {
       sb.append("{\"M\":"); writeObj(sb, v)(writeAttr); sb.append('}')
   }
 
-  private def writeString(sb: StringBuilder, s: String): Unit = {
+  private def writeString(sb: java.lang.StringBuilder, s: String): Unit = {
     sb.append('"')
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+    // runs of chars that need no escape are appended whole
+    var from = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '"' || c == '\\' || c < ' ') {
+        sb.append(s, from, i)
+        c match {
+          case '"'  => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _ => sb.append(f"\\u${c.toInt}%04x")
+        }
+        from = i + 1
+      }
+      i += 1
     }
+    sb.append(s, from, s.length)
     sb.append('"')
   }
 

@@ -128,38 +128,6 @@ final case class AttrStats(
       * decimal SUM answering declines).
       */
     nScaleMax: Option[Int] = Some(0)) {
-  def widen(v: AttrVal): AttrStats = v match {
-    case AttrVal.N(n) => copy(
-      nMin = Some(nMin.filter(_ <= n).getOrElse(n)),
-      nMax = Some(nMax.filter(_ >= n).getOrElse(n)),
-      present = present.map(_ + 1L),
-      nSum = nSum.map(_ + n),
-      nWhole = nWhole && n.isWhole,
-      hll = hll.map(AttrStats.hllAdd(_, v)),
-      nScaleMax = nScaleMax.map(m => math.max(m, AttrStats.scaleOf(n))))
-    case AttrVal.S(s) => copy(
-      sMin = Some(sMin.filter(AttrStats.sLe(_, s)).getOrElse(s)),
-      sMax = Some(sMax.filter(AttrStats.sGe(_, s)).getOrElse(s)),
-      present = present.map(_ + 1L),
-      hll = hll.map(AttrStats.hllAdd(_, v)))
-    case AttrVal.Null => this // reads as null everywhere: harmless
-    case _ => copy(other = true, present = present.map(_ + 1L),
-      hll = hll.map(AttrStats.hllAdd(_, v)))
-  }
-  /** ADD increment: the final value is base-dependent, so the range
-    * opens (`nOpen`) and the NDV sketch degrades to unknown; the sum
-    * delta stays EXACT (final sum = base sum + increments, whether
-    * the attr existed or not) and whole-ness composes under union
-    * (fractional base ⇒ base sidecar already reports false).
-    */
-  def widenAdd(v: BigDecimal): AttrStats = copy(
-    present = present.map(_ + 1L),
-    nSum = nSum.map(_ + v),
-    nWhole = nWhole && v.isWhole,
-    hll = None,
-    nOpen = true,
-    // final = base + increment: scale(final) ≤ max of the two scales
-    nScaleMax = nScaleMax.map(m => math.max(m, AttrStats.scaleOf(v))))
   def union(o: AttrStats): AttrStats = AttrStats(
     (nMin.toSeq ++ o.nMin).minOption,
     (nMax.toSeq ++ o.nMax).maxOption,
@@ -184,13 +152,6 @@ object AttrStats {
 
   val empty: AttrStats = AttrStats(None, None, None, None)
 
-  /** Canonical scale of an `N` value: trailing zeros stripped, never
-    * negative (1.50 → 1, 300 → 0) — the minimal scale at which the
-    * value is exactly representable.
-    */
-  def scaleOf(n: BigDecimal): Int =
-    math.max(0, n.bigDecimal.stripTrailingZeros.scale)
-
   /** Canonical value encoding for the sketch hash: identifies exactly
     * the values the decode/compare paths treat as equal (numbers by
     * normalized decimal, not representation) and is total over every
@@ -207,15 +168,53 @@ object AttrStats {
     case AttrVal.Null    => "0"
   }
 
+  /** The register one value lands in and its rank, packed as
+    * `index << 8 | rank`: two independently-seeded hashes of
+    * [[hllEnc]], one picking the register and one supplying the rank
+    * bits (avoids the bit-reuse correlation a single 32-bit hash
+    * splits into). Strings and numbers hash their tag and payload
+    * without building the encoded string.
+    */
+  def hllSlot(v: AttrVal): Int = v match {
+    case AttrVal.S(s) => hllSlot('s', s)
+    case AttrVal.N(n) => hllSlot('n', n.bigDecimal.stripTrailingZeros.toPlainString)
+    case other =>
+      val enc = hllEnc(other)
+      slotOf(scala.util.hashing.MurmurHash3.stringHash(enc, hllSeedIdx),
+        scala.util.hashing.MurmurHash3.stringHash(enc, hllSeedRank))
+  }
+
+  /** [[hllSlot]] of the encoding `tag + ":" + body`, hashed in place:
+    * the same values `MurmurHash3.stringHash` computes over the
+    * concatenated string, whose first two chars form its first block.
+    */
+  private[dynamo] def hllSlot(tag: Char, body: String): Int = {
+    import scala.util.hashing.MurmurHash3.{finalizeHash, mix, mixLast}
+    val first = (tag << 16) + ':'
+    var hi = mix(hllSeedIdx, first)
+    var hr = mix(hllSeedRank, first)
+    val n = body.length
+    var i = 0
+    while (i + 1 < n) {
+      val data = (body.charAt(i) << 16) + body.charAt(i + 1)
+      hi = mix(hi, data); hr = mix(hr, data)
+      i += 2
+    }
+    if (i < n) {
+      hi = mixLast(hi, body.charAt(i).toInt); hr = mixLast(hr, body.charAt(i).toInt)
+    }
+    slotOf(finalizeHash(hi, n + 2), finalizeHash(hr, n + 2))
+  }
+
+  private val hllSeedIdx = 0x5bd1e995
+  private val hllSeedRank = 0x9747b28c
+  private def slotOf(hi: Int, hr: Int): Int =
+    ((hi & (hllM - 1)) << 8) | (java.lang.Integer.numberOfTrailingZeros(hr | 0x80000000) + 1)
+
   def hllAdd(regs: Vector[Byte], v: AttrVal): Vector[Byte] = {
-    val enc = hllEnc(v)
-    // two independently-seeded hashes: one picks the register, one
-    // supplies the rank bits — avoids the bit-reuse correlation a
-    // single 32-bit hash splits into
-    val hi = scala.util.hashing.MurmurHash3.stringHash(enc, 0x5bd1e995)
-    val hr = scala.util.hashing.MurmurHash3.stringHash(enc, 0x9747b28c)
-    val idx = hi & (hllM - 1)
-    val rank = (java.lang.Integer.numberOfTrailingZeros(hr | 0x80000000) + 1).toByte
+    val slot = hllSlot(v)
+    val idx = slot >>> 8
+    val rank = (slot & 0xff).toByte
     if (rank > regs(idx)) regs.updated(idx, rank) else regs
   }
 
@@ -241,9 +240,34 @@ object AttrStats {
   /** UTF8String (code-point) order — [[FilterEval.cmp]]'s string
     * order; java's compareTo disagrees on supplementary characters.
     */
-  val utf8Order: Ordering[String] = (a: String, b: String) =>
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+  val utf8Order: Ordering[String] = (a: String, b: String) => utf8Compare(a, b)
+  /** The sign of `UTF8String.fromString(a).compareTo(fromString(b))`,
+    * computed on the chars: UTF-8 byte order is code-point order, and
+    * an unpaired surrogate encodes as the replacement byte '?'.
+    */
+  def utf8Compare(a: String, b: String): Int = {
+    val la = a.length; val lb = b.length
+    var i = 0; var j = 0
+    while (i < la && j < lb) {
+      val ca = a.charAt(i); val cb = b.charAt(j)
+      if (ca == cb && !Character.isSurrogate(ca)) { i += 1; j += 1 }
+      else {
+        val pa = utf8CodePoint(a, i); val pb = utf8CodePoint(b, j)
+        if (pa != pb) return if (pa < pb) -1 else 1
+        i += Character.charCount(pa); j += Character.charCount(pb)
+      }
+    }
+    if (i < la) 1 else if (j < lb) -1 else 0
+  }
+  /** The code point the UTF-8 encoder writes for the char at `i`. */
+  private def utf8CodePoint(s: String, i: Int): Int = {
+    val c = s.charAt(i)
+    if (!Character.isSurrogate(c)) c
+    else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+        Character.isLowSurrogate(s.charAt(i + 1)))
+      Character.toCodePoint(c, s.charAt(i + 1))
+    else '?'
+  }
   def sLe(a: String, b: String): Boolean = utf8Order.lteq(a, b)
   def sGe(a: String, b: String): Boolean = utf8Order.gteq(a, b)
 }
@@ -266,37 +290,8 @@ object AttrStats {
   */
 final case class ShardStats(attrs: Map[String, AttrStats], complete: Boolean,
     items: Option[Long] = Some(0L)) {
-  def widen(item: Item): ShardStats = {
-    val counted =
-      if (!complete && attrs.isEmpty) this // saturated-and-empty fast path
-      else item.foldLeft(this) { case (st, (a, v)) =>
-        st.attrs.get(a) match {
-          case Some(as) => st.copy(attrs = st.attrs.updated(a, as.widen(v)))
-          case None if st.attrs.size < ShardStats.maxTrackedAttrs =>
-            st.copy(attrs = st.attrs.updated(a, AttrStats.empty.widen(v)))
-          case None => st.copy(complete = false)
-        }
-      }
-    counted.copy(items = counted.items.map(_ + 1L))
-  }
-  /** Widen for an ADD op: key attrs carry real values (normal widen),
-    * increment attrs open their ranges ([[AttrStats.widenAdd]]).
-    */
-  def widenAdd(item: Item, adds: Map[String, BigDecimal]): ShardStats = {
-    val counted =
-      if (!complete && attrs.isEmpty) this
-      else item.foldLeft(this) { case (st, (a, v)) =>
-        def next(as: AttrStats): AttrStats =
-          adds.get(a).fold(as.widen(v))(as.widenAdd)
-        st.attrs.get(a) match {
-          case Some(as) => st.copy(attrs = st.attrs.updated(a, next(as)))
-          case None if st.attrs.size < ShardStats.maxTrackedAttrs =>
-            st.copy(attrs = st.attrs.updated(a, next(AttrStats.empty)))
-          case None => st.copy(complete = false)
-        }
-      }
-    counted.copy(items = counted.items.map(_ + 1L))
-  }
+  /** This map widened by one item ([[ShardStats.Builder.add]]). */
+  def widen(item: Item): ShardStats = ShardStats.Builder.from(this).add(item).result()
   def union(o: ShardStats): ShardStats = ShardStats(
     (attrs.keySet ++ o.attrs.keySet).map(a =>
       a -> attrs.getOrElse(a, AttrStats.empty)
@@ -308,6 +303,274 @@ final case class ShardStats(attrs: Map[String, AttrStats], complete: Boolean,
 object ShardStats {
   val maxTrackedAttrs = 64
   val empty: ShardStats = ShardStats(Map.empty, complete = true)
+
+  /** The one zone-map fold: a mutable accumulator every writer widens
+    * item by item, in place — per-attribute min/max, counts, exact sum
+    * and scale kept as fields, HLL registers in an array — and turns
+    * into a [[ShardStats]] once per written file. Folding items into a
+    * builder equals folding them one by one into immutable maps (the
+    * StoreLawsSpec accumulator law pins the JSON byte for byte).
+    *
+    * An attribute's first value claims one of [[maxTrackedAttrs]]
+    * slots in the item's own iteration order; past them `complete`
+    * flips off. A builder seeded with a map ([[Builder.from]]) only
+    * materializes the attributes it touches, and a sketch keeps its
+    * first changed registers beside the seed's vector until enough
+    * change to make a dense array pay, so a one-item widen costs what
+    * it always did.
+    */
+  final class Builder private (seed: ShardStats, sketch: Boolean) {
+    private val seeded = seed.attrs
+    private val accs = new java.util.HashMap[String, AttrAcc]()
+    private val touched = mutable.ArrayBuffer.empty[String] // first-touch order
+    private var added = 0 // tracked attributes the seed did not have
+    private var complete = seed.complete
+    private val counting = seed.items.isDefined
+    private var items = seed.items.getOrElse(0L)
+    // the previous item's attributes by position: a writer's items
+    // mostly share one attribute set, iterated in one order over the
+    // same name strings, so a reference compare replaces the lookup
+    private var memoNames = new Array[String](16)
+    private var memoAccs = new Array[AttrAcc](16)
+    private var pos = 0
+
+    /** The accumulator of the item's next attribute, `a`; null when
+      * `a` is not tracked.
+      */
+    private def next(a: String): AttrAcc = {
+      val i = pos
+      pos += 1
+      if (i < memoNames.length && (memoNames(i) eq a)) memoAccs(i)
+      else {
+        val c = acc(a)
+        if (i >= memoNames.length) {
+          memoNames = java.util.Arrays.copyOf(memoNames, 2 * i)
+          memoAccs = java.util.Arrays.copyOf(memoAccs, 2 * i)
+        }
+        memoNames(i) = a; memoAccs(i) = c
+        c
+      }
+    }
+
+    private def acc(a: String): AttrAcc = {
+      var c = accs.get(a)
+      if (c == null) seeded.get(a) match {
+        case Some(as) =>
+          c = new AttrAcc(as, sketch); accs.put(a, c); touched += a
+        case None =>
+          if (seeded.size + added < maxTrackedAttrs) {
+            c = new AttrAcc(AttrStats.empty, sketch); accs.put(a, c); touched += a
+            added += 1
+          } else complete = false
+      }
+      c
+    }
+    // saturated and empty: no attribute can ever be tracked again
+    private def ranging: Boolean = complete || seeded.nonEmpty || added > 0
+
+    def add(item: Item): this.type = {
+      pos = 0
+      if (ranging) item.foreachEntry { (a, v) =>
+        val c = next(a)
+        if (c != null) c.widen(v)
+      }
+      items += 1
+      this
+    }
+
+    /** An ADD op's item: key attrs widen normally, each increment
+      * opens its attribute's range ([[AttrAcc.widenIncrement]]).
+      */
+    def addIncrements(item: Item, adds: Map[String, BigDecimal]): this.type = {
+      pos = 0
+      if (ranging) item.foreachEntry { (a, v) =>
+        val c = next(a)
+        if (c != null) adds.get(a) match {
+          case Some(d) => c.widenIncrement(d)
+          case None => c.widen(v)
+        }
+      }
+      items += 1
+      this
+    }
+
+    /** The journal rule, shared by every WAL and transaction writer:
+      * deletes and attribute removals widen nothing (removing never
+      * ADDS values); path edits widen the key and record each edited
+      * top-level attr as an opaque document (`other`), so the union
+      * claims no min/max/NDV for a value only replay can know; ADD
+      * increments open their ranges; every other op widens its item —
+      * an update's merged result draws each value from the base
+      * (covered by the base stats) or the update item (covered here).
+      */
+    def addOp(op: LocalKVStore#Op): this.type = op match {
+      case _: LocalKVStore#Delete | _: LocalKVStore#RemoveAttrs |
+          _: LocalKVStore#RemoveAttrsIfExists => this
+      case pe: LocalKVStore#PathEdits =>
+        add(pe.key ++ pe.edits.collect {
+          case LocalKVStore.PathEdit(Left(t) +: _, _, _) =>
+            t -> (AttrVal.M(Map.empty): AttrVal)
+        }.toMap)
+      case a: LocalKVStore#AddTo => addIncrements(a.item, a.adds)
+      case _ => add(op.item)
+    }
+
+    def result(): ShardStats = ShardStats(
+      touched.foldLeft(seeded)((m, a) => m.updated(a, accs.get(a).result())),
+      complete,
+      if (counting) Some(items) else None)
+  }
+
+  object Builder {
+    def apply(): Builder = new Builder(empty, sketch = true)
+    def from(seed: ShardStats): Builder = new Builder(seed, sketch = true)
+    /** Page-grain statistics: no NDV sketch, which a page directory
+      * never stores.
+      */
+    def withoutSketch(): Builder = new Builder(empty, sketch = false)
+  }
+
+  /** One attribute's [[AttrStats]] under accumulation. */
+  private final class AttrAcc(seed: AttrStats, sketch: Boolean) {
+    private var nMin: BigDecimal = seed.nMin.orNull
+    private var nMax: BigDecimal = seed.nMax.orNull
+    private var sMin: String = seed.sMin.orNull
+    private var sMax: String = seed.sMax.orNull
+    private var other = seed.other
+    private val counting = seed.present.isDefined
+    private var present = if (counting) seed.present.get else 0L
+    // summed as AttrStats' own `+` does: in the seed sum's MathContext
+    private val sumMc = if (seed.nSum.isDefined) seed.nSum.get.mc else null
+    private var nSum: java.math.BigDecimal =
+      if (seed.nSum.isDefined) seed.nSum.get.bigDecimal else null
+    private var nWhole = seed.nWhole
+    private var nOpen = seed.nOpen
+    private val scaled = seed.nScaleMax.isDefined
+    private var nScaleMax = if (scaled) seed.nScaleMax.get else 0
+    private var sketching = sketch && seed.hll.isDefined
+    // registers: the seed's vector plus up to `sparseMax` changed
+    // registers (`index << 8 | rank`), then one dense array
+    private var regs: Vector[Byte] = seed.hll.orNull
+    private var changes: Array[Int] = null
+    private var nChanges = 0
+    private var regArr: Array[Byte] = null
+
+    def widen(v: AttrVal): Unit = v match {
+      case AttrVal.N(n) =>
+        if (nMin == null || nMin.compare(n) > 0) nMin = n
+        if (nMax == null || nMax.compare(n) < 0) nMax = n
+        val stripped = number(n)
+        // `AttrStats.hllEnc`'s number form: an integral scale's plain
+        // form is already the stripped one
+        if (sketching) sketchAdd(AttrStats.hllSlot('n',
+          if (stripped == null) n.bigDecimal.toPlainString else stripped.toPlainString))
+      case AttrVal.S(s) =>
+        if (sMin == null || AttrStats.utf8Compare(sMin, s) > 0) sMin = s
+        if (sMax == null || AttrStats.utf8Compare(sMax, s) < 0) sMax = s
+        present += 1
+        if (sketching) sketchAdd(AttrStats.hllSlot('s', s))
+      case AttrVal.Null => () // reads as null everywhere: harmless
+      case _ =>
+        other = true
+        present += 1
+        if (sketching) sketchAdd(AttrStats.hllSlot(v))
+    }
+
+    /** ADD increment: the final value is base-dependent, so the range
+      * opens (`nOpen`) and the NDV sketch degrades to unknown; the sum
+      * delta stays EXACT (final sum = base sum + increments, whether
+      * the attr existed or not) and whole-ness composes under union
+      * (fractional base ⇒ base sidecar already reports false); the
+      * final scale is at most the larger of the two scales.
+      */
+    def widenIncrement(d: BigDecimal): Unit = {
+      sketching = false; regs = null; changes = null; regArr = null
+      number(d)
+      nOpen = true
+    }
+
+    /** The count, sum, whole-ness and scale an `N` value adds; returns
+      * its trailing-zeros-stripped form when one was needed (a
+      * fractional scale), else null. The strip runs at most once per
+      * value, and only while whole-ness or the scale bound can still
+      * change or the sketch needs the canonical form.
+      */
+    private def number(n: BigDecimal): java.math.BigDecimal = {
+      present += 1
+      val bd = n.bigDecimal
+      if (nSum != null) {
+        // an exact sum that fits the context is what the rounding add
+        // returns, without inflating both operands to BigIntegers
+        val exact = nSum.add(bd)
+        nSum = if (exact.precision <= sumMc.getPrecision) exact else nSum.add(bd, sumMc)
+      }
+      val sc = bd.scale
+      if (sc <= 0) { if (scaled && nScaleMax < 0) nScaleMax = 0; null }
+      else {
+        val stripped =
+          if (sketching || nWhole || (scaled && sc > nScaleMax)) bd.stripTrailingZeros
+          else null
+        if (stripped != null) {
+          if (nWhole && stripped.scale > 0) nWhole = false
+          if (scaled) nScaleMax = math.max(nScaleMax, math.max(0, stripped.scale))
+        }
+        stripped
+      }
+    }
+
+    private def sketchAdd(slot: Int): Unit = {
+      val idx = slot >>> 8
+      val rank = (slot & 0xff).toByte
+      if (regArr != null) { if (rank > regArr(idx)) regArr(idx) = rank }
+      else if (rank > regs(idx)) {
+        var i = 0
+        while (i < nChanges && (changes(i) >>> 8) != idx) i += 1
+        if (i < nChanges) { if (rank > (changes(i) & 0xff)) changes(i) = slot }
+        else if (nChanges < AttrAcc.sparseMax) {
+          if (changes == null) changes = new Array[Int](AttrAcc.sparseMax)
+          changes(nChanges) = slot; nChanges += 1
+        } else {
+          regArr = new Array[Byte](AttrStats.hllM)
+          val it = regs.iterator
+          var r = 0
+          while (r < regArr.length) { regArr(r) = it.next(); r += 1 }
+          var c = 0
+          while (c < nChanges) { regArr(changes(c) >>> 8) = (changes(c) & 0xff).toByte; c += 1 }
+          regArr(idx) = rank
+          regs = null; changes = null
+        }
+      }
+    }
+
+    private def registers: Vector[Byte] =
+      if (regArr != null) {
+        val b = Vector.newBuilder[Byte]
+        var i = 0
+        while (i < regArr.length) { b += regArr(i); i += 1 }
+        b.result()
+      } else {
+        var v = regs
+        var c = 0
+        while (c < nChanges) { v = v.updated(changes(c) >>> 8, (changes(c) & 0xff).toByte); c += 1 }
+        v
+      }
+
+    def result(): AttrStats = AttrStats(
+      Option(nMin), Option(nMax), Option(sMin), Option(sMax), other,
+      if (counting) Some(present) else None,
+      if (nSum == null) None else Some(new BigDecimal(nSum, sumMc)),
+      nWhole,
+      if (sketching) Some(registers) else None,
+      nOpen,
+      if (scaled) Some(nScaleMax) else None)
+  }
+
+  private object AttrAcc {
+    /** Changed registers kept beside the seed vector before switching
+      * to one dense array (a one-item widen changes at most one).
+      */
+    val sparseMax = 32
+  }
 
   def toJson(st: ShardStats): String = {
     def num(v: Option[BigDecimal]) = v.map(AttrVal.N).getOrElse(AttrVal.Null)
@@ -627,7 +890,7 @@ final class LocalKVStore(root: String) {
     val tmp = dir.resolve(s".gsi-build-$name")
     Files.createDirectories(tmp)
     clearSpillDir(table, s".gsi-build-$name") // crashed-run parts would resurrect
-    val stats = Array.fill(meta.shards)(ShardStats.empty)
+    val stats = Array.fill(meta.shards)(ShardStats.Builder())
     val writers = mutable.HashMap.empty[Int, java.io.BufferedWriter]
     try scanSegment(table, 0, 1).map(_._1)
       .flatMap(indexView(meta, ix, _))
@@ -636,7 +899,7 @@ final class LocalKVStore(root: String) {
         val w = writers.getOrElseUpdate(is, Files.newBufferedWriter(
           tmp.resolve(f"part-$is%03d.jsonl"), UTF_8))
         w.write(ItemJson.write(it)); w.write("\n")
-        stats(is) = stats(is).widen(it)
+        stats(is).add(it)
       }
     finally writers.values.foreach(_.close())
     (0 until meta.shards).foreach { i =>
@@ -651,7 +914,7 @@ final class LocalKVStore(root: String) {
       }
       // sorted copy + page directory — the GSI Query layout
       writeIndexShardSorted(table, name, ix, i, items.result())
-      writeIndexZoneStats(table, name, i, stats(i))
+      writeIndexZoneStats(table, name, i, stats(i).result())
     }
     Files.deleteIfExists(tmp)
     // publish under the table lock, clearing any write-through journal
@@ -766,19 +1029,19 @@ final class LocalKVStore(root: String) {
       // one index shard's items in memory (same bound as a base-shard
       // compaction), sorted into the GSI Query layout + directory
       val items = Vector.newBuilder[Item]
-      var st = ShardStats.empty
+      val st = ShardStats.Builder()
       parts.foreach { p =>
         val lines = Files.lines(p, UTF_8)
         try lines.iterator().asScala.filter(_.nonEmpty)
           .foreach { l =>
             val it = ItemJson.parse(l)
             items += it
-            st = st.widen(it)
+            st.add(it)
           }
         finally lines.close()
       }
       writeIndexShardSorted(table, name, meta.indexes(name), is, items.result())
-      writeIndexZoneStats(table, name, is, st)
+      writeIndexZoneStats(table, name, is, st.result())
     }
     // same journal-clearing rule as the local build (see buildIndex)
     underTxnLock(table) {
@@ -1087,7 +1350,9 @@ final class LocalKVStore(root: String) {
     // widening (a crash window) would make pruning unsound
     widenImgs.foreach { case (sh, imgs) =>
       val st0 = indexZoneStats(table, name, sh).getOrElse(ShardStats.empty)
-      writeIndexZoneStats(table, name, sh, imgs.foldLeft(st0)(_.widen(_)))
+      val st = ShardStats.Builder.from(st0)
+      imgs.foreach(st.add)
+      writeIndexZoneStats(table, name, sh, st.result())
     }
     // publish: round file first (one atomic rename), marker after —
     // the crash in between leaves an orphan round no reader consults
@@ -1479,14 +1744,14 @@ final class LocalKVStore(root: String) {
     val tmp = dir.resolve(".load-tmp") // dot-prefixed: invisible to listings
     Files.createDirectories(tmp)
     clearSpillDir(table, ".load-tmp") // a crashed prior run's parts would resurrect
-    val stats = Array.fill(meta.shards)(ShardStats.empty)
+    val stats = Array.fill(meta.shards)(ShardStats.Builder())
     val writers = mutable.HashMap.empty[Int, java.io.BufferedWriter]
     try items.foreach { it =>
       val sh = shardOf(meta, it)
       val w = writers.getOrElseUpdate(sh, Files.newBufferedWriter(
         tmp.resolve(f"part-$sh%03d.jsonl"), UTF_8))
       w.write(ItemJson.write(it)); w.write("\n")
-      stats(sh) = stats(sh).widen(it)
+      stats(sh).add(it)
     }
     finally writers.values.foreach(_.close())
     (0 until meta.shards).foreach { i =>
@@ -1504,7 +1769,7 @@ final class LocalKVStore(root: String) {
     Files.deleteIfExists(tmp)
     stats.zipWithIndex.foreach { case (st, i) =>
       Files.write(dir.resolve(f"zstat-shard-s$i%03d.json"),
-        ShardStats.toJson(st).getBytes(UTF_8))
+        ShardStats.toJson(st.result()).getBytes(UTF_8))
     }
   }
 
@@ -1595,13 +1860,10 @@ final class LocalKVStore(root: String) {
   final class WalWriter private[LocalKVStore] (table: String, meta: TableMeta, seq: Long, writerId: String) {
     private val dir = tableDir(table)
     private val open = mutable.HashMap.empty[Int, java.io.BufferedWriter]
-    // Zone map of this writer's op items, per shard file. Deletes
-    // widen nothing (removing an item never ADDS values); every other
-    // op's item attrs widen — an UPDATE's merged result draws each
-    // attr value from either the base (covered by the base/earlier
-    // stats) or the update item (covered here), so the union over all
+    // Zone map of this writer's op items, per shard file, under the
+    // journal rule ([[ShardStats.Builder.addOp]]): the union over all
     // published stats always over-approximates the merged view.
-    private val stats = mutable.HashMap.empty[Int, ShardStats]
+    private val stats = mutable.HashMap.empty[Int, ShardStats.Builder]
 
     /** Returns the op's serialized line length in UTF-8 BYTES (the
       * unit the journal occupies on disk and WCU accounting bills in)
@@ -1622,25 +1884,7 @@ final class LocalKVStore(root: String) {
       val line = ItemJson.write(Map("op" -> AttrVal.S(tag), "item" -> AttrVal.M(op.item)))
       w.write(line)
       w.write("\n")
-      op match {
-        case _: Delete => () // removing an item never ADDS values
-        case _: RemoveAttrs | _: RemoveAttrsIfExists =>
-          () // removing attrs never adds values either
-        case pe: PathEdits =>
-          // key attrs widen normally; each edited top-level attr is a
-          // DOCUMENT (M/L) — record an opaque presence (`other`) so
-          // the union makes no min/max/NDV claims about the merged
-          // value (edit leaves only ever live INSIDE such a document)
-          stats(shard) = stats.getOrElse(shard, ShardStats.empty)
-            .widen(pe.key ++ pe.edits.collect {
-              case LocalKVStore.PathEdit(Left(t) +: _, _, _) =>
-                t -> (AttrVal.M(Map.empty): AttrVal)
-            }.toMap)
-        case AddTo(it, adds) => // increments OPEN the attrs' ranges
-          stats(shard) = stats.getOrElse(shard, ShardStats.empty).widenAdd(it, adds)
-        case _ =>
-          stats(shard) = stats.getOrElse(shard, ShardStats.empty).widen(op.item)
-      }
+      stats.getOrElseUpdate(shard, ShardStats.Builder()).addOp(op)
       LocalKVStore.utf8Length(line)
     }
 
@@ -1666,7 +1910,7 @@ final class LocalKVStore(root: String) {
         var pubSeq = pub0
         while (Files.exists(dir.resolve(f"wal-$pubSeq%020d-$writerId-s$shard%03d.jsonl")))
           pubSeq += 1
-        val st = stats.getOrElse(shard, ShardStats.empty)
+        val st = stats(shard).result()
         val zTmp = dir.resolve(f".zstat-$seq%020d-$writerId-s$shard%03d.json.tmp")
         Files.write(zTmp, ShardStats.toJson(st).getBytes(UTF_8))
         Files.move(zTmp,
@@ -2167,24 +2411,15 @@ final class LocalKVStore(root: String) {
     val tmp = dir.resolve(f".wal-$seq%020d-$writerId-sall.jsonl.tmp")
     val zTmp = dir.resolve(f".zstat-$seq%020d-$writerId-sall.json.tmp")
     val w = Files.newBufferedWriter(tmp, UTF_8)
-    var stats = ShardStats.empty
+    val stats = ShardStats.Builder()
     try {
       try ops.foreach { op =>
         w.write(ItemJson.write(Map(
           "op" -> AttrVal.S(tagOf(op)), "item" -> AttrVal.M(op.item))))
         w.write("\n")
-        op match {
-          case _: Delete | _: RemoveAttrs | _: RemoveAttrsIfExists => ()
-          case pe: PathEdits => stats = stats.widen(
-            pe.key ++ pe.edits.collect {
-              case LocalKVStore.PathEdit(Left(t) +: _, _, _) =>
-                t -> (AttrVal.M(Map.empty): AttrVal)
-            }.toMap)
-          case AddTo(it, adds) => stats = stats.widenAdd(it, adds)
-          case _ => stats = stats.widen(op.item)
-        }
+        stats.addOp(op)
       } finally w.close()
-      Files.write(zTmp, ShardStats.toJson(stats).getBytes(UTF_8))
+      Files.write(zTmp, ShardStats.toJson(stats.result()).getBytes(UTF_8))
       StagedTxn(table, seq, writerId)
     } catch { case e: Throwable =>
       Files.deleteIfExists(tmp)
@@ -2955,11 +3190,12 @@ final class LocalKVStore(root: String) {
       asOfSeq: Option[Long] = None): Seq[Item] = {
     val key = (root, table, asOfSeq)
     val ver = viewVersion(table)
-    val hit = LocalKVStore.sampleCache.get(key)
+    val cache = LocalKVStore.sampleCache
+    val hit = cache.synchronized(cache.get(key))
     if (hit != null && hit._1 == ver) hit._2
     else {
       val fresh = samplePage(table, asOfSeq = asOfSeq)
-      LocalKVStore.sampleCache.put(key, (ver, fresh))
+      cache.synchronized(cache.put(key, (ver, fresh)))
       fresh
     }
   }
@@ -2989,32 +3225,21 @@ final class LocalKVStore(root: String) {
     * two leaves no sidecar — a full-shard read, not a wrong one).
     */
   private def writeSortedShard(table: String, meta: TableMeta, shard: Int,
-      items: Vector[Item]): Unit = {
+      items: Vector[Item], stats: ShardStats.Builder = null): Unit = {
     val dir = tableDir(table)
-    val ord = new Ordering[Item] {
-      def compare(x: Item, y: Item): Int = {
-        val c = placementOf(meta, x).compareTo(placementOf(meta, y))
-        if (c != 0) c
-        else meta.rangeKey match {
-          case Some(rk) => (x.get(rk), y.get(rk)) match {
-            case (Some(a), Some(b)) => PageIndex.tryCompare(a, b)
-              .getOrElse(encKeyAttr(a).compareTo(encKeyAttr(b)))
-            case _ => 0
-          }
-          case None => 0
-        }
-      }
-    }
-    val merged = items.sorted(ord)
+    // `stats`, when given, folds the items in their given order during
+    // the placement pass the sort needs anyway
+    val keyed = LocalKVStore.keyedBy(items, placementOf(meta, _),
+      meta.rangeKey.orNull, stats)
+    LocalKVStore.sortKeyed(keyed, missingRangeFirst = false)
     // Page directory published under partition-key placement (layout
     // 2 — the layout where one hash key's sort run is shard-contiguous).
     writePagedFile(
       tmp = dir.resolve(f"compact-$shard%03d.tmp"),
       finalPath = dir.resolve(f"shard-$shard%03d.jsonl"),
       idxPath = dir.resolve(f"pageidx-s$shard%03d.jsonl"),
-      sorted = merged,
+      sorted = keyed,
       indexable = meta.layout >= 2,
-      hashOf = placementOf(meta, _),
       rangeOf = meta.rangeKey match {
         case Some(rk) => it => it(rk)
         case None => _ => PageIndex.NoSortKey
@@ -3023,15 +3248,16 @@ final class LocalKVStore(root: String) {
 
   /** Low-level sorted-base writer shared by the base and GSI-copy
     * layouts: writes pre-sorted `sorted` to `finalPath` via tmp+move,
-    * accumulating the page directory keyed by (hashOf, rangeOf) while
-    * writing; `idxPath` is published when `indexable`, else cleared.
+    * accumulating the page directory keyed by (hash, rangeOf) and the
+    * pages' statistics in the same pass; `idxPath` is published when
+    * `indexable`, else cleared.
     * The sidecar lands AFTER the base move: its recorded size must
     * describe the live file (a crash between the two leaves no
     * sidecar — a full read, not a wrong one).
     */
   private def writePagedFile(tmp: Path, finalPath: Path, idxPath: Path,
-      sorted: Vector[Item], indexable: Boolean,
-      hashOf: Item => String, rangeOf: Item => AttrVal): Unit = {
+      sorted: Array[LocalKVStore.Keyed], indexable: Boolean,
+      rangeOf: Item => AttrVal): Unit = {
     val pages = Vector.newBuilder[PageIndex.Page]
     var fileOff = 0L
     var pOff = 0L; var pLen = 0L; var pCount = 0
@@ -3041,18 +3267,19 @@ final class LocalKVStore(root: String) {
     // row count) — the row-group-stats half of the Query fast path:
     // a window whose pages are all fully contained answers hash-pinned
     // aggregates from these with zero item reads
-    var pStats = ShardStats.empty
+    var pStats = ShardStats.Builder.withoutSketch()
     def closePage(): Unit = if (pCount > 0) {
       pages += PageIndex.Page(pOff, pLen, pMinH, pMaxH, pMinR, pMaxR,
-        Some(pStats))
-      pCount = 0; pLen = 0; pStats = ShardStats.empty
+        Some(pStats.result()))
+      pCount = 0; pLen = 0; pStats = ShardStats.Builder.withoutSketch()
     }
     val w = Files.newBufferedWriter(tmp, UTF_8)
-    try sorted.foreach { it =>
+    try sorted.foreach { k =>
+      val it = k.item
       val line = ItemJson.write(it)
-      val bytes = line.getBytes(UTF_8).length + 1L
+      val bytes = LocalKVStore.utf8Length(line) + 1L
       if (indexable) {
-        val h = hashOf(it)
+        val h = k.hash
         val r = rangeOf(it)
         // Hash-group alignment: when the partition key CHANGES and the
         // open page is already substantial, close it so the new group
@@ -3069,7 +3296,7 @@ final class LocalKVStore(root: String) {
         if (pCount == 0) { pOff = fileOff; pMinH = h; pMinR = r }
         pMaxH = h; pMaxR = r
         pCount += 1; pLen += bytes
-        pStats = pStats.widen(it)
+        pStats.add(it)
         if (pCount >= PageIndex.pageMaxItems || pLen >= PageIndex.pageMaxBytes)
           closePage()
       }
@@ -3100,31 +3327,15 @@ final class LocalKVStore(root: String) {
   private def writeIndexShardSorted(table: String, name: String,
       ix: IndexMeta, shard: Int, items: Vector[Item]): Unit = {
     val dir = tableDir(table)
-    val ord = new Ordering[Item] {
-      def compare(x: Item, y: Item): Int = {
-        val c = encKeyAttr(x(ix.hashKey)).compareTo(encKeyAttr(y(ix.hashKey)))
-        if (c != 0) c
-        else ix.rangeKey match {
-          case Some(rk) => (x.get(rk), y.get(rk)) match {
-            case (Some(a), Some(b)) => PageIndex.tryCompare(a, b)
-              .getOrElse(encKeyAttr(a).compareTo(encKeyAttr(b)))
-            case (None, Some(_)) => -1
-            case (Some(_), None) => 1
-            case _ => 0
-          }
-          case None => 0
-        }
-      }
-    }
-    val sorted = items.sorted(ord)
+    val sorted = LocalKVStore.keyedBy(items, it => encKeyAttr(it(ix.hashKey)),
+      ix.rangeKey.orNull, stats = null)
+    LocalKVStore.sortKeyed(sorted, missingRangeFirst = true)
     writePagedFile(
       tmp = dir.resolve(f".gsi-$name-shard-$shard%03d.jsonl.tmp"),
       finalPath = dir.resolve(f"gsi-$name-shard-$shard%03d.jsonl"),
       idxPath = dir.resolve(f"gsi-pageidx-$name-s$shard%03d.jsonl"),
       sorted = sorted,
-      indexable = ix.rangeKey.isDefined &&
-        sorted.forall(it => ix.rangeKey.forall(it.contains)),
-      hashOf = it => encKeyAttr(it(ix.hashKey)),
+      indexable = ix.rangeKey.isDefined && sorted.forall(_.range != null),
       rangeOf = it => it(ix.rangeKey.get))
   }
 
@@ -3177,14 +3388,15 @@ final class LocalKVStore(root: String) {
     val merged = scanSegment(table, shard, meta.shards,
         allowedWal = pinnedNames).map(_._1)
       .filterNot(expired).toVector
-    writeSortedShard(table, meta, shard, merged)
     // Exact zone map of the folded shard — the narrowing step (deletes
-    // and TTL reaping take effect here). Written BEFORE the journal
-    // deletes: a concurrent planner unioning new-base + old-journal
-    // stats still over-approximates.
+    // and TTL reaping take effect here), folded in the sort's own
+    // placement pass. Written BEFORE the journal deletes: a concurrent
+    // planner unioning new-base + old-journal stats still
+    // over-approximates.
+    val shardStats = ShardStats.Builder()
+    writeSortedShard(table, meta, shard, merged, shardStats)
     val zTmp = dir.resolve(f"zstat-compact-s$shard%03d.tmp")
-    Files.write(zTmp, ShardStats.toJson(
-      merged.foldLeft(ShardStats.empty)(_.widen(_))).getBytes(UTF_8))
+    Files.write(zTmp, ShardStats.toJson(shardStats.result()).getBytes(UTF_8))
     Files.move(zTmp, dir.resolve(f"zstat-shard-s$shard%03d.json"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -4096,12 +4308,20 @@ object LocalKVStore {
 
   /** [[LocalKVStore.samplePageCached]]'s backing map:
     * (root, table, asOfSeq) → (viewVersion at sampling time, sample).
-    * One entry per distinct table a JVM touches (the sample is the
-    * inference page, ≤ ~1 MB of parsed items); a new version REPLACES
-    * the entry, so the map never grows with mutation history.
+    * A new version REPLACES the entry, so the map never grows with
+    * mutation history; distinct snapshots, roots and dropped tables do
+    * add entries, so it keeps the [[sampleCacheEntries]] most recently
+    * used (each sample is the inference page, ≤ ~1 MB of parsed items).
+    * Accessed under its own lock.
     */
-  private val sampleCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Option[Long]), (String, Seq[Item])]
+  private[graft] val sampleCacheEntries = 64
+  private[graft] val sampleCache =
+    new java.util.LinkedHashMap[(String, String, Option[Long]), (String, Seq[Item])](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String, Option[Long]), (String, Seq[Item])]): Boolean =
+        size > sampleCacheEntries
+    }
 
   /** True for the value types DynamoDB accepts as KEY attributes
     * (S/N/B). Index visibility and shard placement consult this —
@@ -4381,22 +4601,67 @@ object LocalKVStore {
     jvmLocks.computeIfAbsent(path, _ => new java.util.concurrent.locks.ReentrantLock)
 
   /** UTF-8 byte length of a string without materializing the byte
-    * array — [[LocalKVStore.WalWriter.append]]'s return unit (journal
-    * bytes on disk). Surrogate halves count 2 each (a valid pair is 4
-    * UTF-8 bytes); an unpaired surrogate actually encodes as the 1-byte
-    * replacement '?', so the count over-approximates by 1 there —
-    * malformed input, conservative direction for WCU billing.
+    * array, equal to `s.getBytes(UTF_8).length` — the journal bytes
+    * [[LocalKVStore.WalWriter.append]] returns and the line lengths
+    * behind every page offset. A valid surrogate pair is 4 bytes; an
+    * unpaired surrogate encodes as the 1-byte replacement '?'.
     */
   private[dynamo] def utf8Length(s: String): Int = {
     var i = 0; var n = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      n += (if (c < 0x80) 1 else if (c < 0x800) 2
-            else if (Character.isSurrogate(c)) 2 else 3)
+      if (c < 0x80) n += 1
+      else if (c < 0x800) n += 2
+      else if (!Character.isSurrogate(c)) n += 3
+      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+          Character.isLowSurrogate(s.charAt(i + 1))) { n += 4; i += 1 }
+      else n += 1 // unpaired: the encoder writes the replacement '?'
       i += 1
     }
     n
   }
+
+  /** An item decorated with its sort keys, computed once: `hash` is
+    * the encoded placement (or index hash) key, `range` the sort-key
+    * value or null when the item lacks it.
+    */
+  private[dynamo] final class Keyed(val hash: String, val range: AttrVal, val item: Item)
+
+  /** Decorate `items` in their given order, folding each into `stats`
+    * when one is given.
+    */
+  private[dynamo] def keyedBy(items: Vector[Item], hashOf: Item => String,
+      rangeKey: String, stats: ShardStats.Builder): Array[Keyed] = {
+    val out = new Array[Keyed](items.length)
+    var i = 0
+    items.foreach { it =>
+      out(i) = new Keyed(hashOf(it),
+        if (rangeKey == null) null else it.getOrElse(rangeKey, null), it)
+      if (stats != null) stats.add(it)
+      i += 1
+    }
+    out
+  }
+
+  /** Stable sort by (hash, typed sort key) — DynamoDB's within-
+    * partition order. Two items that both carry a sort key compare by
+    * [[PageIndex.tryCompare]], falling back to the encoded keys across
+    * types; an item without one ties (`missingRangeFirst = false`, the
+    * base layout) or sorts first (the index layout).
+    */
+  private[dynamo] def sortKeyed(keyed: Array[Keyed], missingRangeFirst: Boolean): Unit =
+    java.util.Arrays.sort(keyed, (x: Keyed, y: Keyed) => {
+      val c = x.hash.compareTo(y.hash)
+      if (c != 0) c
+      else {
+        val a = x.range; val b = y.range
+        if (a != null && b != null)
+          PageIndex.tryCompare(a, b).getOrElse(encKeyAttr(a).compareTo(encKeyAttr(b)))
+        else if (!missingRangeFirst || (a == null && b == null)) 0
+        else if (a == null) -1
+        else 1
+      }
+    })
 
   private val pubClocks =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()

@@ -115,9 +115,7 @@ object PageIndex {
     * Cross-type or non-key types: None (incomparable → never prune).
     */
   def tryCompare(a: AttrVal, b: AttrVal): Option[Int] = (a, b) match {
-    case (AttrVal.S(x), AttrVal.S(y)) =>
-      Some(org.apache.spark.unsafe.types.UTF8String.fromString(x)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)))
+    case (AttrVal.S(x), AttrVal.S(y)) => Some(AttrStats.utf8Compare(x, y))
     case (AttrVal.N(x), AttrVal.N(y)) => Some(x.compare(y))
     case (AttrVal.B(x), AttrVal.B(y)) =>
       var i = 0
@@ -383,12 +381,11 @@ object PageIndex {
         "len" -> AttrVal.N(BigDecimal(p.len)),
         "minH" -> AttrVal.S(p.minH), "maxH" -> AttrVal.S(p.maxH),
         "minR" -> p.minR, "maxR" -> p.maxR)
-      // HLL registers dropped: NDV never answers from page grain, and
-      // the sketch would multiply the sidecar's size per page
+      // page stats carry no HLL registers (ShardStats.Builder
+      // .withoutSketch): NDV never answers from page grain, and the
+      // sketch would multiply the sidecar's size per page
       val withStats = p.stats.fold(base) { st =>
-        val slim = st.copy(attrs = st.attrs.map { case (a, s) =>
-          a -> s.copy(hll = None) })
-        base + ("stats" -> (AttrVal.S(ShardStats.toJson(slim)): AttrVal))
+        base + ("stats" -> (AttrVal.S(ShardStats.toJson(st)): AttrVal))
       }
       sb.append(ItemJson.write(withStats)).append('\n')
     }

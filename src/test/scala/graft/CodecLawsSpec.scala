@@ -65,6 +65,55 @@ class CodecLawsSpec extends AnyFunSuite {
     }
   }
 
+  test("ItemJson.write emits the same text as a per-char, sorted-pairs writer") {
+    // the reference: keys sorted as (key, value) pairs, every string
+    // char matched on its own
+    def str(sb: StringBuilder, s: String): Unit = {
+      sb.append('"')
+      s.foreach {
+        case '"'  => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
+      }
+      sb.append('"')
+    }
+    def obj(sb: StringBuilder, m: Map[String, AttrVal]): Unit = {
+      sb.append('{')
+      m.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((k, v), i) =>
+        if (i > 0) sb.append(',')
+        str(sb, k); sb.append(':'); attr(sb, v)
+      }
+      sb.append('}')
+    }
+    def attr(sb: StringBuilder, a: AttrVal): Unit = a match {
+      case AttrVal.S(v)    => sb.append("{\"S\":"); str(sb, v); sb.append('}')
+      case AttrVal.N(v)    => sb.append("{\"N\":\"").append(v.bigDecimal.toPlainString).append("\"}")
+      case AttrVal.Bool(v) => sb.append("{\"BOOL\":").append(v).append('}')
+      case AttrVal.Null    => sb.append("{\"NULL\":true}")
+      case AttrVal.B(v)    =>
+        sb.append("{\"B\":"); str(sb, java.util.Base64.getEncoder.encodeToString(v)); sb.append('}')
+      case AttrVal.L(v) =>
+        sb.append("{\"L\":[")
+        v.zipWithIndex.foreach { case (e, i) => if (i > 0) sb.append(','); attr(sb, e) }
+        sb.append("]}")
+      case AttrVal.M(v) => sb.append("{\"M\":"); obj(sb, v); sb.append('}')
+    }
+    val genText: Gen[String] = Gen.listOf(Gen.oneOf(Gen.asciiPrintableChar,
+      Gen.oneOf('"', '\\', '\n', '\r', '\t', '\u0001', '\u001f', '\u00e9', '\ud83d', '\ude00')))
+      .map(_.mkString)
+    val genEscaped: Gen[Item] = Gen.mapOf(Gen.zip(genText,
+      Gen.oneOf(genText.map(t => AttrVal.S(t): AttrVal), genAttr(2))))
+    forAll(Gen.oneOf(genItem, genEscaped)) { item =>
+      val want = new StringBuilder
+      obj(want, item)
+      assert(ItemJson.write(item) === want.toString)
+    }
+  }
+
   test("ItemJson handles escapes, unicode, and control characters") {
     val item: Item = Map(
       "q" -> AttrVal.S("he said \"hi\"\\ \n\t\r"),

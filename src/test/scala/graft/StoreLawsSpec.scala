@@ -8,7 +8,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.dynamo.{AttrVal, LocalKVStore, TableMeta}
+import graft.sources.dynamo.{AttrVal, ItemJson, LocalKVStore, TableMeta}
 import graft.sources.dynamo.ItemJson.Item
 
 /** Property laws for the store's WAL-replay merge semantics
@@ -2313,5 +2313,391 @@ class StoreLawsSpec extends AnyFunSuite {
     val viaBase = store.scanSegment("t", 0, 1).map(_._1)
       .flatMap(store.indexView(store.describe("t"), ix, _)).toVector
     assert(viaCopy.sortBy(_.toString) === viaBase.sortBy(_.toString))
+  }
+
+  test("the schema-sample cache keeps at most its bound of snapshots; evicted reads re-sample") {
+    val root = Files.createTempDirectory("graft-samplecache").toString
+    val store = new LocalKVStore(root)
+    store.bulkLoad("s", TableMeta("id", None, shards = 2, throughput = 1000000L),
+      (0 until 20).iterator.map(i => Map("id" -> (AttrVal.S(s"k$i"): AttrVal))))
+    val bound = LocalKVStore.sampleCacheEntries
+    val cache = LocalKVStore.sampleCache
+    def held(seq: Long): Boolean =
+      cache.synchronized(cache.containsKey((root, "s", Some(seq))))
+    val seqs = (1 to bound + 10).map(i => Long.MaxValue - i)
+    val first = store.samplePageCached("s", Some(seqs.head))
+    seqs.tail.foreach(q => assert(store.samplePageCached("s", Some(q)) === first))
+    assert(cache.synchronized(cache.size) === bound)
+    assert(!held(seqs.head), "the least recently used snapshot is evicted")
+    assert(held(seqs.last))
+    assert(store.samplePageCached("s", Some(seqs.head)) === first)
+    assert(store.samplePageCached("s", Some(seqs.last)) === first)
+    assert(cache.synchronized(cache.size) === bound)
+  }
+
+  // ---- zone-map accumulation: the builder against the reference fold ----
+
+  /** Attribute names: ten common ones, and enough others that a wide
+    * item passes [[ShardStats.maxTrackedAttrs]].
+    */
+  private val zoneNames: IndexedSeq[String] = (0 until 80).map(i => f"a$i%02d")
+
+  /** `N` in the representations that differ only in scale, plus sums
+    * that overflow a 34-digit context.
+    */
+  private val genZoneNum: Gen[BigDecimal] = Gen.oneOf(
+    Gen.oneOf("1.50", "1.5", "300", "3E+2", "1E+2", "-0", "0.00", "-7.250",
+      "0.1", "7.0000", "1E-40", "12345678901234567890123456789012345",
+      "-99999999999999999999999999999999999.9").map(BigDecimal(_)),
+    Gen.chooseNum(-1000L, 1000L).map(BigDecimal(_)),
+    Gen.zip(Gen.chooseNum(-99999L, 99999L), Gen.chooseNum(-2, 4))
+      .map { case (u, sc) => BigDecimal(BigInt(u), sc) })
+
+  /** Strings around the UTF8String-order edge: supplementary chars
+    * (code-point order ≠ UTF-16 order against U+E000..U+FFFF), and,
+    * when `loneSurrogates`, unpaired halves that encode as '?'.
+    */
+  private def genZoneStr(loneSurrogates: Boolean): Gen[String] = {
+    val chars = Seq('a', 'b', '?', '\u00e9', '\ud7ff', '\ue000', '\uffff') ++
+      (if (loneSurrogates) Seq('\ud800', '\udc00', '\ud83d', '\ude00') else Nil)
+    Gen.oneOf(
+      Gen.oneOf("", "a", "\ud83d\ude00", "\ud83d\ude00x", "\uffff", "\ue000", "?"),
+      Gen.chooseNum(0, 4).flatMap(n => Gen.listOfN(n, Gen.oneOf(chars)).map(_.mkString)),
+      Gen.chooseNum(0, 3).flatMap(n => Gen.listOfN(n, Gen.oneOf(
+        "\ud83d\ude00", "\ud800\udc00", "x", "\uffff"))).map(_.mkString))
+  }
+
+  private def genZoneVal(loneSurrogates: Boolean): Gen[AttrVal] = Gen.frequency(
+    5 -> genZoneNum.map(AttrVal.N),
+    5 -> genZoneStr(loneSurrogates).map(AttrVal.S),
+    1 -> Gen.listOfN(3, Gen.chooseNum(-128, 127)).map(bs => AttrVal.B(bs.map(_.toByte).toArray)),
+    1 -> Gen.oneOf(true, false).map(AttrVal.Bool),
+    1 -> Gen.const(AttrVal.Null),
+    1 -> Gen.zip(genZoneNum, genZoneStr(loneSurrogates)).map { case (n, s) =>
+      AttrVal.L(Vector(AttrVal.N(n), AttrVal.S(s))) },
+    1 -> genZoneNum.map(n => AttrVal.M(Map("x" -> AttrVal.N(n), "y" -> AttrVal.Null))))
+
+  /** Mostly narrow items over ten shared names; sometimes one wider
+    * than the tracked-attribute bound, so `complete` flips.
+    */
+  private def genZoneAttrs(loneSurrogates: Boolean): Gen[Item] = Gen.frequency(
+    8 -> Gen.chooseNum(0, 6).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.oneOf(zoneNames.take(10)), genZoneVal(loneSurrogates))).map(_.toMap)),
+    1 -> Gen.chooseNum(60, 80).flatMap(n => Gen.pick(n, zoneNames)).flatMap(names =>
+      Gen.sequence[Seq[(String, AttrVal)], (String, AttrVal)](
+        names.map(a => genZoneVal(loneSurrogates).map(a -> _))).map(_.toMap)))
+
+  test("LAW: the zone-map accumulator equals the reference fold, JSON byte for byte") {
+    import graft.sources.dynamo.ShardStats
+    def same(got: ShardStats, want: ShardStats, what: String): Unit = {
+      assert(ShardStats.toJson(got) === ShardStats.toJson(want), what)
+      assert(got === want, what)
+    }
+    val genCase = Gen.zip(
+      // past 32 changed registers a sketch turns dense
+      Gen.chooseNum(0, 120).flatMap(n => Gen.listOfN(n, genZoneAttrs(loneSurrogates = true))),
+      Gen.chooseNum(0, 120))
+    forAll(genCase) { case (items, cut) =>
+      val want = items.foldLeft(ShardStats.empty)(ZoneModel.widen)
+      val b = ShardStats.Builder()
+      items.foreach(b.add)
+      same(b.result(), want, "builder fold")
+      same(items.foldLeft(ShardStats.empty)(_.widen(_)), want, "one-item widens")
+      // seeded from a sidecar read back mid-stream (the index applier's
+      // shape), then continued
+      val (pre, post) = items.splitAt(cut)
+      val seed = ShardStats.fromJson(ShardStats.toJson(pre.foldLeft(ShardStats.empty)(ZoneModel.widen)))
+      val seeded = ShardStats.Builder.from(seed)
+      post.foreach(seeded.add)
+      same(seeded.result(), post.foldLeft(seed)(ZoneModel.widen), "seeded fold")
+      // ADD increments: every numeric attr of an item is an increment
+      val withAdds = items.map(it => it -> it.collect { case (a, AttrVal.N(v)) => a -> v })
+      val inc = ShardStats.Builder()
+      withAdds.foreach { case (it, adds) => inc.addIncrements(it, adds) }
+      same(inc.result(), withAdds.foldLeft(ShardStats.empty) { case (st, (it, adds)) =>
+        ZoneModel.widenAdd(st, it, adds) }, "increments")
+      // page grain: the same fold with no sketch
+      val page = ShardStats.Builder.withoutSketch()
+      items.foreach(page.add)
+      same(page.result(), ZoneModel.slim(want), "page fold")
+    }
+  }
+
+  test("LAW: WAL and transaction zone maps equal the reference fold of the journal rule") {
+    import graft.sources.dynamo.ShardStats
+    val genTagged = Gen.zip(
+      Gen.oneOf("PUT", "UPDATE", "DELETE", "PUTNX", "UPDIF", "ADDN", "RMATTR", "RMIF", "PATH"),
+      genZoneAttrs(loneSurrogates = false))
+    forAll(Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, genTagged))) { tagged =>
+      val root = Files.createTempDirectory("graft-zonejournal").toString
+      val store = new LocalKVStore(root)
+      val meta = TableMeta("id", None, shards = 3, throughput = 1000000L)
+      store.createTable("t", meta)
+      val ops: Seq[store.Op] = tagged.zipWithIndex.map { case ((tag, a), i) =>
+        val key = Map("id" -> (AttrVal.S(s"k$i"): AttrVal))
+        tag match {
+          case "PUT" => store.Put(a ++ key)
+          case "UPDATE" => store.Update(a ++ key)
+          case "DELETE" => store.Delete(key)
+          case "PUTNX" => store.PutIfAbsent(a ++ key)
+          case "UPDIF" => store.UpdateIfExists(a ++ key)
+          case "ADDN" =>
+            val adds = a.collect { case (n, AttrVal.N(v)) => n -> v }
+            store.AddTo(adds.map { case (n, v) => n -> (AttrVal.N(v): AttrVal) } ++ key, adds)
+          case "RMATTR" => store.RemoveAttrs(a.map { case (n, _) => n -> (AttrVal.Null: AttrVal) } ++ key)
+          case "RMIF" => store.RemoveAttrsIfExists(a.map { case (n, _) => n -> (AttrVal.Null: AttrVal) } ++ key)
+          case _ => store.PathEdits(key, a.keys.toSeq.sorted.take(2).map(n =>
+            LocalKVStore.PathEdit(Seq(Left(n), Left("x")), a.get(n))))
+        }
+      }
+      def modelOp(st: ShardStats, op: store.Op): ShardStats = op match {
+        case _: store.Delete | _: store.RemoveAttrs | _: store.RemoveAttrsIfExists => st
+        case pe: store.PathEdits => ZoneModel.widen(st, pe.key ++ pe.edits.collect {
+          case LocalKVStore.PathEdit(Left(t) +: _, _, _) => t -> (AttrVal.M(Map.empty): AttrVal)
+        }.toMap)
+        case a: store.AddTo => ZoneModel.widenAdd(st, a.item, a.adds)
+        case _ => ZoneModel.widen(st, op.item)
+      }
+      val dir = java.nio.file.Paths.get(root, "t")
+      def sidecar(suffix: String): String = {
+        val f = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.startsWith("zstat-") && n.endsWith(suffix)).toSeq
+        assert(f.size === 1, s"$suffix: $f")
+        new String(Files.readAllBytes(dir.resolve(f.head)), java.nio.charset.StandardCharsets.UTF_8)
+      }
+      // per-shard WAL files
+      val w = store.walWriter("t", 1L, "wz")
+      ops.foreach(w.append)
+      w.close()
+      ops.groupBy(op => store.shardOf(meta, op.item)).foreach { case (sh, shardOps) =>
+        assert(sidecar(f"-wz-s$sh%03d.json") ===
+          ShardStats.toJson(shardOps.foldLeft(ShardStats.empty)(modelOp)), s"WAL shard $sh")
+      }
+      // one transaction file
+      store.transactWrite("t", 2L, "tz", ops)
+      assert(sidecar("-tz-sall.json") ===
+        ShardStats.toJson(ops.foldLeft(ShardStats.empty)(modelOp)), "transaction")
+    }
+  }
+
+  test("LAW: compaction, bulk load and index builds write base, page and zone-map files byte-identical to the reference writer") {
+    import graft.sources.dynamo.{IndexMeta, PageIndex, ShardStats}
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    // key values of all three key types, with scale variants, ties
+    // under the typed order and supplementary characters
+    val genKeyVal: Gen[AttrVal] = Gen.frequency(
+      4 -> Gen.oneOf("1.50", "1.5", "-2", "300", "3E+2", "0.25", "10", "-0.5").map(t => AttrVal.N(BigDecimal(t))),
+      4 -> genZoneStr(loneSurrogates = false).map(AttrVal.S),
+      1 -> Gen.listOfN(2, Gen.chooseNum(-128, 127)).map(bs => AttrVal.B(bs.map(_.toByte).toArray)))
+    val genRow: Gen[Item] = for {
+      h <- Gen.oneOf(Gen.chooseNum(0, 5).map(i => AttrVal.S(s"h$i"): AttrVal),
+        Gen.oneOf("7", "7.0", "-1").map(t => AttrVal.N(BigDecimal(t)): AttrVal))
+      r <- genKeyVal
+      g <- Gen.option(Gen.oneOf(Gen.chooseNum(0, 3).map(i => AttrVal.S(s"g$i"): AttrVal), genKeyVal))
+      r2 <- Gen.frequency(4 -> genKeyVal.map(Some(_)), 1 -> Gen.const(None))
+      a <- genZoneAttrs(loneSurrogates = false)
+    } yield a ++ Map("h" -> h, "r" -> r) ++ g.map("g" -> _) ++ r2.map("r2" -> _)
+    val genCase = Gen.zip(Gen.oneOf(true, false), Gen.chooseNum(1, 4),
+      Gen.chooseNum(0, 400).flatMap(n => Gen.listOfN(n, genRow)),
+      Gen.chooseNum(0, 60).flatMap(n => Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 2), genRow))))
+    forAll(genCase) { case (ranged, shards, rows, journal) =>
+      val root = Files.createTempDirectory("graft-zonefiles").toString
+      val store = new LocalKVStore(root)
+      val ix = IndexMeta("g", Some("r2"), None)
+      val meta = TableMeta("h", if (ranged) Some("r") else None, shards, 1000000L,
+        indexes = Map("byg" -> ix))
+      val dir = java.nio.file.Paths.get(root, "t")
+      def reread(it: Item): Item = ItemJson.parse(ItemJson.write(it))
+      def read(name: String): Array[Byte] = Files.readAllBytes(dir.resolve(name))
+      /** The reference writer: a sort that re-derives both items' keys
+        * per compare, and page maps folded as immutable copies.
+        */
+      def check(prefix: String, shard: Int, items: Vector[Item], hashOf: Item => String,
+          rangeKey: Option[String], missingFirst: Boolean, indexable: Boolean => Boolean): Unit = {
+        val sorted = items.sorted(ZoneModel.ordering(hashOf, rangeKey, missingFirst))
+        val base = new StringBuilder
+        val pages = Vector.newBuilder[PageIndex.Page]
+        var off = 0L; var pOff = 0L; var pLen = 0L; var pCount = 0
+        var minH, maxH: String = null
+        var minR, maxR: AttrVal = null
+        var pStats = ShardStats.empty
+        def close(): Unit = if (pCount > 0) {
+          pages += PageIndex.Page(pOff, pLen, minH, maxH, minR, maxR, Some(ZoneModel.slim(pStats)))
+          pCount = 0; pLen = 0; pStats = ShardStats.empty
+        }
+        val paged = indexable(sorted.forall(it => rangeKey.forall(it.contains)))
+        sorted.foreach { it =>
+          val line = ItemJson.write(it)
+          val bytes = line.getBytes(utf8).length + 1L
+          if (paged) {
+            val h = hashOf(it)
+            val r = rangeKey.fold(PageIndex.NoSortKey)(it(_))
+            if (pCount >= PageIndex.pageAlignMinItems && maxH != null && h != maxH) close()
+            if (pCount == 0) { pOff = off; minH = h; minR = r }
+            maxH = h; maxR = r
+            pCount += 1; pLen += bytes
+            pStats = ZoneModel.widen(pStats, it)
+            if (pCount >= PageIndex.pageMaxItems || pLen >= PageIndex.pageMaxBytes) close()
+          }
+          base.append(line).append('\n')
+          off += bytes
+        }
+        close()
+        val (shardFile, idxFile) =
+          if (prefix.isEmpty) (f"shard-$shard%03d.jsonl", f"pageidx-s$shard%03d.jsonl")
+          else (f"gsi-$prefix-shard-$shard%03d.jsonl", f"gsi-pageidx-$prefix-s$shard%03d.jsonl")
+        assert(new String(read(shardFile), utf8) === base.toString, s"$prefix base $shard")
+        if (paged) {
+          val got = read(idxFile)
+          val mtime = ItemJson.parse(new String(got, utf8).linesIterator.next())("mtime")
+            .asInstanceOf[AttrVal.N].v.toLong
+          val ref = Files.createTempFile("graft-refidx", ".jsonl")
+          PageIndex.write(ref, PageIndex.ShardIndex(off, mtime, pages.result()))
+          assert(new String(got, utf8) === new String(Files.readAllBytes(ref), utf8),
+            s"$prefix page directory $shard")
+          Files.delete(ref)
+        } else assert(!Files.exists(dir.resolve(idxFile)), s"$prefix page directory $shard")
+      }
+      def zstat(name: String, want: ShardStats): Unit =
+        assert(new String(read(name), utf8) === ShardStats.toJson(want), name)
+      def placement(it: Item): String = store.placementOf(meta, it)
+
+      // bulk load: shard maps fold the input in order, bases sort the
+      // spilled (re-read) items
+      store.bulkLoad("t", meta, rows.iterator)
+      (0 until shards).foreach { sh =>
+        val mine = rows.filter(store.shardOf(meta, _) == sh)
+        zstat(f"zstat-shard-s$sh%03d.json", mine.foldLeft(ShardStats.empty)(ZoneModel.widen))
+        check("", sh, mine.map(reread).toVector, placement, meta.rangeKey, missingFirst = false, _ => true)
+      }
+      // compaction over a journal, then the index rebuild it runs
+      val ops = journal.map { case (kind, it) => kind match {
+        case 0 => store.Put(it)
+        case 1 => store.Delete(it.filter { case (a, _) => a == "h" || (ranged && a == "r") })
+        case _ => store.Update(it)
+      }}
+      if (ops.nonEmpty) store.appendWal("t", 1L, "j", ops)
+      val merged = (0 until shards).map(sh => store.scanSegment("t", sh, shards).map(_._1).toVector)
+      store.compact("t")
+      (0 until shards).foreach { sh =>
+        zstat(f"zstat-shard-s$sh%03d.json", merged(sh).foldLeft(ShardStats.empty)(ZoneModel.widen))
+        check("", sh, merged(sh), placement, meta.rangeKey, missingFirst = false, _ => true)
+      }
+      val projected = store.scanSegment("t", 0, 1).map(_._1).flatMap(store.indexView(meta, ix, _)).toVector
+      (0 until shards).foreach { sh =>
+        val mine = projected.filter(it => store.indexShardOf(meta, it("g")) == sh)
+        zstat(f"gsi-zstat-byg-s$sh%03d.json", mine.foldLeft(ShardStats.empty)(ZoneModel.widen))
+        check("byg", sh, mine.map(reread), it => ZoneModel.encKey(it("g")), ix.rangeKey,
+          missingFirst = true, allHaveRange => allHaveRange)
+      }
+    }
+  }
+}
+
+/** The zone-map fold as immutable maps, one copy per item — the
+  * reference the accumulator must equal — with strings ordered through
+  * `UTF8String` and a sort comparator that re-derives both items' keys
+  * on every compare.
+  */
+private object ZoneModel {
+  import graft.sources.dynamo.{AttrStats, ShardStats}
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val utf8Order: Ordering[String] = (a: String, b: String) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  private def scaleOf(n: BigDecimal): Int = math.max(0, n.bigDecimal.stripTrailingZeros.scale)
+  private def hllEnc(v: AttrVal): String = v match {
+    case AttrVal.S(s)    => "s:" + s
+    case AttrVal.N(n)    => "n:" + n.bigDecimal.stripTrailingZeros.toPlainString
+    case AttrVal.Bool(b) => if (b) "t" else "f"
+    case AttrVal.B(b)    => "b:" + java.util.Base64.getEncoder.encodeToString(b)
+    case AttrVal.L(xs)   => xs.map(hllEnc).mkString("l[", ",", "]")
+    case AttrVal.M(m)    => m.toSeq.sortBy(_._1)
+      .map { case (k, x) => k + "=" + hllEnc(x) }.mkString("m{", ",", "}")
+    case AttrVal.Null    => "0"
+  }
+  private def hllAdd(regs: Vector[Byte], v: AttrVal): Vector[Byte] = {
+    val enc = hllEnc(v)
+    val hi = scala.util.hashing.MurmurHash3.stringHash(enc, 0x5bd1e995)
+    val hr = scala.util.hashing.MurmurHash3.stringHash(enc, 0x9747b28c)
+    val idx = hi & (AttrStats.hllM - 1)
+    val rank = (java.lang.Integer.numberOfTrailingZeros(hr | 0x80000000) + 1).toByte
+    if (rank > regs(idx)) regs.updated(idx, rank) else regs
+  }
+
+  def widenAttr(s: AttrStats, v: AttrVal): AttrStats = v match {
+    case AttrVal.N(n) => s.copy(
+      nMin = Some(s.nMin.filter(_ <= n).getOrElse(n)),
+      nMax = Some(s.nMax.filter(_ >= n).getOrElse(n)),
+      present = s.present.map(_ + 1L),
+      nSum = s.nSum.map(_ + n),
+      nWhole = s.nWhole && n.isWhole,
+      hll = s.hll.map(hllAdd(_, v)),
+      nScaleMax = s.nScaleMax.map(m => math.max(m, scaleOf(n))))
+    case AttrVal.S(x) => s.copy(
+      sMin = Some(s.sMin.filter(utf8Order.lteq(_, x)).getOrElse(x)),
+      sMax = Some(s.sMax.filter(utf8Order.gteq(_, x)).getOrElse(x)),
+      present = s.present.map(_ + 1L),
+      hll = s.hll.map(hllAdd(_, v)))
+    case AttrVal.Null => s
+    case _ => s.copy(other = true, present = s.present.map(_ + 1L),
+      hll = s.hll.map(hllAdd(_, v)))
+  }
+  def widenAttrAdd(s: AttrStats, v: BigDecimal): AttrStats = s.copy(
+    present = s.present.map(_ + 1L),
+    nSum = s.nSum.map(_ + v),
+    nWhole = s.nWhole && v.isWhole,
+    hll = None,
+    nOpen = true,
+    nScaleMax = s.nScaleMax.map(m => math.max(m, scaleOf(v))))
+
+  private def fold(st: ShardStats, item: Item)(f: (String, AttrStats, AttrVal) => AttrStats): ShardStats = {
+    val counted =
+      if (!st.complete && st.attrs.isEmpty) st
+      else item.foldLeft(st) { case (acc, (a, v)) =>
+        acc.attrs.get(a) match {
+          case Some(as) => acc.copy(attrs = acc.attrs.updated(a, f(a, as, v)))
+          case None if acc.attrs.size < ShardStats.maxTrackedAttrs =>
+            acc.copy(attrs = acc.attrs.updated(a, f(a, AttrStats.empty, v)))
+          case None => acc.copy(complete = false)
+        }
+      }
+    counted.copy(items = counted.items.map(_ + 1L))
+  }
+  def widen(st: ShardStats, item: Item): ShardStats = fold(st, item)((_, as, v) => widenAttr(as, v))
+  def widenAdd(st: ShardStats, item: Item, adds: Map[String, BigDecimal]): ShardStats =
+    fold(st, item)((a, as, v) => adds.get(a).fold(widenAttr(as, v))(widenAttrAdd(as, _)))
+  /** A page directory's form: no sketches. */
+  def slim(st: ShardStats): ShardStats =
+    st.copy(attrs = st.attrs.map { case (a, s) => a -> s.copy(hll = None) })
+
+  def encKey(a: AttrVal): String = a match {
+    case AttrVal.S(v) => "s:" + v
+    case AttrVal.N(v) => "n:" + v.bigDecimal.stripTrailingZeros.toPlainString
+    case AttrVal.B(v) => "b:" + java.util.Base64.getEncoder.encodeToString(v)
+    case other => throw new IllegalArgumentException(s"unsupported key type $other")
+  }
+  private def typed(a: AttrVal, b: AttrVal): Option[Int] = (a, b) match {
+    case (AttrVal.S(x), AttrVal.S(y)) => Some(utf8Order.compare(x, y))
+    case (AttrVal.N(x), AttrVal.N(y)) => Some(x.compare(y))
+    case (AttrVal.B(x), AttrVal.B(y)) =>
+      x.iterator.zip(y.iterator).map { case (p, q) => Integer.compare(p & 0xff, q & 0xff) }
+        .find(_ != 0).orElse(Some(Integer.compare(x.length, y.length)))
+    case _ => None
+  }
+  /** Recomputes both items' keys on every compare. */
+  def ordering(hashOf: Item => String, rangeKey: Option[String],
+      missingFirst: Boolean): Ordering[Item] = (x: Item, y: Item) => {
+    val c = hashOf(x).compareTo(hashOf(y))
+    if (c != 0) c
+    else rangeKey match {
+      case Some(rk) => (x.get(rk), y.get(rk)) match {
+        case (Some(a), Some(b)) => typed(a, b).getOrElse(encKey(a).compareTo(encKey(b)))
+        case (None, Some(_)) if missingFirst => -1
+        case (Some(_), None) if missingFirst => 1
+        case _ => 0
+      }
+      case None => 0
+    }
   }
 }

@@ -12,28 +12,43 @@
 #   2. graft.BenchSeq over the real q_dyn_* read keys (shared seeded
 #      root, min-of-2 so the seed lands in rep 1 and the timing is
 #      rep 2).
-# Usage: tools/store_probe.sh [sf]   (sf = 3 default, or 10)
+# Usage: tools/store_probe.sh [sf | fixture_dir]
+#   sf          = 3 (default) or 10: builds the sf1 and sf<sf> fixtures
+#                 under /tmp/testdata when absent;
+#   fixture_dir = an existing fixture directory (e.g. an sf0.1 one),
+#                 probed as is — small enough to compare the write and
+#                 fold phases of two checkouts on one machine.
+# SPARK_DRIVER_MEM (default 8g) and SPARK_GRAFT_CPUS (default 32) pin
+# the JVM.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-SF="${1:-3}"
-SF1=${SF1_DIR:-/tmp/testdata/sf1}
-SFD="/tmp/testdata/sf$SF"
-OUT="BENCH_store_sf${SF}probe.json"
-
-if [ ! -f "$SF1/lineitem.parquet" ]; then
-  echo "== building sf1 fixture at $SF1 (deterministic, from sf0.1) =="
-  python tools/make_sf.py /root/testdata/sf0.1 "$SF1" 10
-fi
-if [ ! -f "$SFD/lineitem.parquet" ]; then
-  echo "== building sf$SF fixture at $SFD (deterministic, from sf1) =="
-  python tools/make_sf.py "$SF1" "$SFD" "$SF"
+if [ -d "${1:-}" ]; then
+  SFD="$(cd "$1" && pwd)"
+  SF="$(basename "$SFD")"
+  SF="${SF#sf}"
+  echo "== fixture at $SFD =="
 else
-  echo "== sf$SF fixture present at $SFD =="
+  SF="${1:-3}"
+  SF1=${SF1_DIR:-/tmp/testdata/sf1}
+  SFD="/tmp/testdata/sf$SF"
+  if [ ! -f "$SF1/lineitem.parquet" ]; then
+    echo "== building sf1 fixture at $SF1 (deterministic, from sf0.1) =="
+    python tools/make_sf.py /root/testdata/sf0.1 "$SF1" 10
+  fi
+  if [ ! -f "$SFD/lineitem.parquet" ]; then
+    echo "== building sf$SF fixture at $SFD (deterministic, from sf1) =="
+    python tools/make_sf.py "$SF1" "$SFD" "$SF"
+  else
+    echo "== sf$SF fixture present at $SFD =="
+  fi
 fi
+OUT="BENCH_store_sf${SF}probe.json"
+MEM="${SPARK_DRIVER_MEM:-8g}"
+CPUS="${SPARK_GRAFT_CPUS:-32}"
 
-echo "== StoreProbe lifecycle at sf$SF (pinned 8 GB heap) =="
-env SPARK_DRIVER_MEM=8g SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="$SFD" \
+echo "== StoreProbe lifecycle at sf$SF (pinned $MEM heap) =="
+env SPARK_DRIVER_MEM="$MEM" SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_SF_DIR="$SFD" \
   SPARK_GRAFT_BENCH_OUT=/tmp/store_probe_lifecycle.json \
   sbt -batch "runMain graft.StoreProbe" | tee /tmp/store_probe_run.log
 
@@ -43,7 +58,7 @@ KEYS=(
   q_dyn_point q_dyn_range
 )
 echo "== BenchSeq store read keys at sf$SF =="
-env SPARK_DRIVER_MEM=8g SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="$SFD" \
+env SPARK_DRIVER_MEM="$MEM" SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_SF_DIR="$SFD" \
   SPARK_GRAFT_BENCH_OUT=/tmp/store_probe_keys.json \
   sbt -batch "runMain graft.BenchSeq ${KEYS[*]}" | tee /tmp/store_probe_keys.log
 
