@@ -448,7 +448,7 @@ final class DynamoTable(
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(opts.asOfSeq.isEmpty,
       "asOfSeq is a snapshot-read option: DELETE always applies to the current table")
-    DeleteWhere.run(opts, it => filters.forall(FilterEval.eval(_, it)), tag = "delw")
+    DeleteWhere.run(opts, filters.toSeq.map(Left(_)), tag = "delw")
   }
 }
 
@@ -457,30 +457,23 @@ final class DynamoTable(
   * ([[DynamoWriteBuilder.overwrite]]): one merged scan of the table
   * appending per-key delete markers to the journal — the same
   * non-atomic append model as every other write (A14). Same
-  * visibility and throughput rules as every read path: a TTL-expired
-  * item is invisible, so the condition is never evaluated against it
-  * (lazy expiry reclaims it instead), and the scan draws from the
-  * table's read capacity like any other.
+  * visibility and throughput rules as every read path — it reads the
+  * base table as one [[ItemSource]] partition: a TTL-expired item is
+  * invisible, so the condition is never evaluated against it (lazy
+  * expiry reclaims it instead), and the scan draws from the table's
+  * read capacity like any other.
   */
 private[dynamo] object DeleteWhere {
-  def run(opts: DynamoOptions, matches: Item => Boolean, tag: String): Unit = {
-    val store = new LocalKVStore(opts.path)
-    val meta = store.describe(opts.tableName)
-    val keyAttrs = Set(meta.hashKey) ++ meta.rangeKey
-    val ttlNow = Ttl.now(opts)
-    val limiter = new RateLimiter(
-      math.max(0.1, opts.targetCapacity * opts.throughput.getOrElse(meta.throughput).toDouble))
-    val consistencyFactor = if (opts.stronglyConsistentReads) 1.0 else 0.5
-    val wal = store.walWriter(opts.tableName, System.currentTimeMillis(),
+  def run(opts: DynamoOptions, conds: Seq[Either[Filter, PredicateV2.VPred]],
+      tag: String): Unit = {
+    // base items only: the delete matches table items, never an index view
+    val items = ItemSource.wholeTable(opts.copy(indexName = None),
+      conds.collect { case Left(f) => f }.toArray, conds.collect { case Right(p) => p })
+    val keyAttrs = Set(items.meta.hashKey) ++ items.meta.rangeKey
+    val wal = items.store.walWriter(opts.tableName, System.currentTimeMillis(),
       f"$tag-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      store.scanSegment(opts.tableName, 0, 1)
-        .flatMap { case (it, sz) =>
-          limiter.acquire(sz.toDouble / opts.bytesPerRCU * consistencyFactor)
-          Ttl.visibleItem(opts, ttlNow, None, store)(it)
-        }
-        .filter(matches)
-        .foreach(it => wal.append(store.Delete(it.view.filterKeys(keyAttrs).toMap)))
+      items.foreach(it => wal.append(items.store.Delete(it.view.filterKeys(keyAttrs).toMap)))
       wal.flush()
     } finally wal.close()
   }
@@ -1393,6 +1386,8 @@ private object ScanMetrics {
     override def name(): String = metricName
     override def value(): Long = v
   }
+  def task(scanned: Long, filtered: Long): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(TaskMetric("itemsScanned", scanned), TaskMetric("itemsFiltered", filtered))
 }
 
 object DynamoScan {
@@ -1475,34 +1470,6 @@ object DynamoScan {
     if (meta.layout >= 2) Seq(meta.hashKey)
     else Seq(meta.hashKey) ++ meta.rangeKey
 
-  /** Reader-side item source: the base merged view, or the table's
-    * materialized index copy when planning chose it
-    * (`partition.viaIndex` — items arrive pre-projected, and
-    * [[Ttl.visibleItem]]'s projection is idempotent on them).
-    */
-  def partitionItems(store: LocalKVStore, opts: DynamoOptions,
-      partition: DynamoInputPartition,
-      windows: Seq[PageIndex.KeyWindow] = Nil): Iterator[(Item, Int)] =
-    if (partition.viaIndex && partition.deltaFiles.nonEmpty)
-      store.scanIndexSegmentDelta(opts.tableName, opts.indexName.get,
-        partition.segment, partition.totalSegments, partition.deltaFiles,
-        imageWal = partition.pinnedWal.map(_.toSet),
-        journalRounds = partition.journalFiles)
-    else if (partition.viaIndex)
-      store.scanIndexSegment(opts.tableName, opts.indexName.get,
-        partition.segment, partition.totalSegments,
-        windows = windows,
-        journalRounds = partition.journalFiles)
-    else
-      store.scanSegment(opts.tableName, partition.segment,
-        partition.totalSegments, opts.asOfSeq,
-        allowedWal = partition.pinnedWal.map(_.toSet),
-        // windows reaching a base read were derived in TABLE-key
-        // space ([[queryWindow]]'s `viaIndex = false` contract: base
-        // windows for plain reads and LOCAL-index fallbacks, Nil for
-        // a GSI fallback whose pins live in index-key space)
-        windows = windows)
-
   private[dynamo] def conjuncts(f: Filter): Seq[Filter] = f match {
     case org.apache.spark.sql.sources.And(l, r) => conjuncts(l) ++ conjuncts(r)
     case other => Seq(other)
@@ -1532,40 +1499,6 @@ object DynamoScan {
         vs <- pinnedValues(filters, attr)
         if vs.forall(v => PageIndex.literalAttr(v).isDefined)
       } yield n * vs.length
-    }
-
-  /** The `Query`-shape page window for the partition's OWN key space,
-    * or Nil. `viaIndex = true` (materialized-copy read): windows on
-    * the INDEX keys — the copy is sorted by (index hash, index sort).
-    * `viaIndex = false` (base read): windows on the TABLE keys,
-    * derived for plain reads AND for a LOCAL index's base-path serve
-    * — an LSI's hash pins ARE table-partition pins, so the owning
-    * hash group's pages bound the read (DynamoDB's LSI Query cost:
-    * O(one partition's matching items), even under
-    * `stronglyConsistentReads`); conditions on the ALTERNATE sort key
-    * are not positional in base pages and derive no bound. A GSI
-    * base fallback gets Nil (its pins are index-key-space claims).
-    * A hash-only table's windows pin the hash value alone (its pages
-    * carry no sort bounds, see [[PageIndex.NoSortKey]]).
-    * Purely an I/O skip either way: every emitted item still passes
-    * through the same filter evaluation.
-    */
-  def queryWindow(meta: TableMeta, opts: DynamoOptions,
-      pushed: Array[Filter], viaIndex: Boolean): Seq[PageIndex.KeyWindow] =
-    opts.indexName match {
-      case Some(ixName) if viaIndex =>
-        meta.indexes.get(ixName).toSeq.flatMap(ix =>
-          ix.rangeKey.toSeq.flatMap(rk =>
-            PageIndex.deriveWindows(pushed.toSeq, ix.hashKey, rk)))
-      case Some(ixName) =>
-        if (meta.layout < 2 ||
-            !meta.indexes.get(ixName).exists(ix =>
-              ix.local && ix.hashKey == meta.hashKey)) Nil
-        else meta.rangeKey.toSeq.flatMap(rk =>
-          PageIndex.deriveWindows(pushed.toSeq, meta.hashKey, rk))
-      case None =>
-        if (meta.layout < 2) Nil
-        else PageIndex.deriveWindows(pushed.toSeq, meta.hashKey, meta.rangeKey)
     }
 }
 
@@ -1844,20 +1777,17 @@ final class DynamoScan(
     * count, and Catalyst resolves that against the ACTUAL partitions
     * at execution.
     */
-  private def placementCols(meta: TableMeta): Seq[String] =
-    DynamoScan.placementCols(meta)
-
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     val store = new LocalKVStore(opts.path)
     val meta = store.describe(opts.tableName)
     if (reportsPerShard(store, meta)) {
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         Array[v2expr.Expression](
-          v2expr.Expressions.bucket(meta.shards, placementCols(meta): _*)),
+          v2expr.Expressions.bucket(meta.shards, DynamoScan.placementCols(meta): _*)),
         meta.shards)
     } else
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
-        fullScanSegments(store, meta))
+        DynamoScan.fullScanSegments(store, meta, opts))
   }
 
   /** True when this scan's segments ARE the table's shard layout — the
@@ -1871,7 +1801,7 @@ final class DynamoScan(
     * the same shard the store files use.
     */
   private def reportsPerShard(store: LocalKVStore, meta: TableMeta): Boolean =
-    fullScanSegments(store, meta) == meta.shards && opts.indexName.isEmpty &&
+    DynamoScan.fullScanSegments(store, meta, opts) == meta.shards && opts.indexName.isEmpty &&
       !pinSingleSegment && // limit/offset full-push pins one merged segment
       // ungrouped-agg output isn't keyed; a KEYED grouped push is —
       // its rows (final or flushed partials) stay keyed by the
@@ -1880,10 +1810,7 @@ final class DynamoScan(
       // bounded partial push — still reuse the layout
       ((aggs.isEmpty && grouped.isEmpty) || grouped.exists(_.keyed)) &&
       !opts.cdc &&
-      placementCols(meta).forall(readSchema().fieldNames.contains)
-
-  private def fullScanSegments(store: LocalKVStore, meta: TableMeta): Int =
-    DynamoScan.fullScanSegments(store, meta, opts)
+      DynamoScan.placementCols(meta).forall(readSchema().fieldNames.contains)
 
   /** The session opted into partially-clustered storage-partitioned
     * joins (both `v2.bucketing` confs), the condition for the SPJ pad
@@ -1922,7 +1849,7 @@ final class DynamoScan(
     * live in: the connector's `GetItem`/`Query` analogue (a key-pinned
     * read touches 1 shard instead of all of them, at any table size),
     * and each reader windows its owning shard to the pinned keys' pages
-    * ([[DynamoScan.queryWindow]]), hash-only tables included. A full-key
+    * ([[ItemSource]]), hash-only tables included. A full-key
     * pin of at most [[PageIndex.maxHashWindows]] keys runs these same
     * partitions on the driver instead ([[DynamoLocalScan]]), with no
     * Spark job.
@@ -2255,7 +2182,7 @@ final class DynamoScan(
                   journalFiles = journalRounds,
                   pinnedWal = pin): InputPartition)
             }
-            val n = fullScanSegments(store, meta)
+            val n = DynamoScan.fullScanSegments(store, meta, opts)
             val rate = math.max(0.1, opts.targetCapacity * throughput / n)
             return Array.tabulate(n)(i =>
               DynamoInputPartition(i, n, rate, viaIndex = true,
@@ -2301,7 +2228,7 @@ final class DynamoScan(
             pinnedWal = pin): InputPartition)
         } else live
       case None =>
-        val n = fullScanSegments(store, meta)
+        val n = DynamoScan.fullScanSegments(store, meta, opts)
         val rate = math.max(0.1, opts.targetCapacity * throughput / n)
         Array.tabulate(n)(i => DynamoInputPartition(i, n, rate, pinnedWal = pin))
     }
@@ -2397,7 +2324,7 @@ final class DynamoScan(
     if (meta.rangeKey.isEmpty || meta.layout < 2) return None
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
       GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
-    val flat = pushed.toSeq.flatMap(conjuncts)
+    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
     val windowable = flat.forall {
       case EqualTo(a, v) => v != null &&
         (a == meta.hashKey || meta.rangeKey.contains(a))
@@ -2447,7 +2374,7 @@ final class DynamoScan(
     if (meta.rangeKey.isEmpty || meta.layout < 2) return None
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
       GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
-    val flat = pushed.toSeq.flatMap(conjuncts)
+    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
     val windowable = flat.forall {
       case EqualTo(a, v) => v != null &&
         (a == meta.hashKey || meta.rangeKey.contains(a))
@@ -2504,7 +2431,7 @@ final class DynamoScan(
       GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
     val ix = meta.indexes(ixName)
     val rk = ix.rangeKey.getOrElse(return None)
-    val flat = pushed.toSeq.flatMap(conjuncts)
+    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
     val windowable = flat.forall {
       case EqualTo(a, v) => v != null && (a == ix.hashKey || a == rk)
       case In(a, vs) => a == ix.hashKey && vs != null && vs.nonEmpty
@@ -2623,7 +2550,7 @@ final class DynamoScan(
       GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
     val ix = meta.indexes(ixName)
     val rk = ix.rangeKey.getOrElse(return None)
-    val flat = pushed.toSeq.flatMap(conjuncts)
+    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
     val windowable = flat.forall {
       case EqualTo(a, v) => v != null && (a == ix.hashKey || a == rk)
       case In(a, vs) => a == ix.hashKey && vs != null && vs.nonEmpty
@@ -2875,17 +2802,6 @@ final class DynamoScan(
     }
   }
 
-  /** Candidate shard set when the filters pin the placement key; None
-    * = not pinned (full scan). Under partition-key placement (layout
-    * 2, current) pinning the HASH key alone prunes — DynamoDB's
-    * `Query` shape: all of a partition key's items live in one shard,
-    * any range-key predicate narrows within it. Legacy full-key
-    * stores (layout 1) need the whole composite pinned, since their
-    * placement hashed hash|range. GSI reads never prune (index keys
-    * don't determine base-shard placement).
-    */
-  private def conjuncts(f: Filter): Seq[Filter] = DynamoScan.conjuncts(f)
-
   /** Values the pushed/runtime filters pin `attr` to by equality. */
   private def pinned(attr: String): Option[Seq[Any]] =
     DynamoScan.pinnedValues((pushed ++ runtime).toSeq, attr)
@@ -2904,6 +2820,15 @@ final class DynamoScan(
       }
     } yield attrs.map(store.indexShardOf(meta, _)).toSet
 
+  /** Candidate shard set when the filters pin the placement key; None
+    * = not pinned (full scan). Under partition-key placement (layout
+    * 2, current) pinning the HASH key alone prunes — DynamoDB's
+    * `Query` shape: all of a partition key's items live in one shard,
+    * any range-key predicate narrows within it. Legacy full-key
+    * stores (layout 1) need the whole composite pinned, since their
+    * placement hashed hash|range. GSI reads never prune (index keys
+    * don't determine base-shard placement).
+    */
   private def keyShards(store: LocalKVStore, meta: TableMeta): Option[Set[Int]] = {
     // A secondary-index read's pins live in INDEX-key space and claim
     // nothing about base placement — EXCEPT a LOCAL index, whose hash
@@ -3301,8 +3226,7 @@ final class DynamoWalReader(
   override def get(): InternalRow = current
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ScanMetrics.TaskMetric("itemsScanned", scanned),
-      ScanMetrics.TaskMetric("itemsFiltered", filtered))
+    ScanMetrics.task(scanned, filtered)
 
   override def close(): Unit = ()
 }
@@ -3327,142 +3251,11 @@ final class DynamoReaderFactory(
           metaNames)
     }
   }
-
-  /** Vectorized path for flat primitive schemas: rows pack into
-    * `ColumnarBatch`es so the scan feeds WholeStageCodegen columnar
-    * input instead of one virtual call per row. Nested types (and any
-    * schema holding them) fall back to the row reader — same decode
-    * either way, so the two paths cannot disagree. A pushed top-N
-    * emits ≤ n rows per segment — nothing left to vectorize.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    topN.isEmpty &&
-      schema.fields.forall(f => DynamoColumnarReader.supported(f.dataType))
-
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[DynamoInputPartition]
-    new DynamoColumnarReader(
-      new DynamoPartitionReader(opts, schema, pushed, p, limit, adv, offset, sample,
-        metaNames), schema)
-  }
 }
 
-/** Batches the row reader's output into on-heap column vectors —
-  * decode, pushed filters, TTL, rate limiting, and metrics all run in
-  * the wrapped [[DynamoPartitionReader]] unchanged; this layer only
-  * changes the shipping format.
-  */
-object DynamoColumnarReader {
-  private def flat(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType |
-         FloatType | BooleanType | StringType | BinaryType |
-         TimestampType | DateType => true
-    case _ => false
-  }
-  /** Flat primitives plus one level of array-of-primitive — the
-    * embedding-table shape (`Array[Float]` columns), which would
-    * otherwise demote the whole scan to the row path. Nested
-    * arrays/structs/maps still fall back.
-    */
-  def supported(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case ArrayType(et, _) => flat(et)
-    case other => flat(other)
-  }
-}
-
-final class DynamoColumnarReader(
-    rows: DynamoPartitionReader, schema: StructType, batchSize: Int = 4096)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private var batch: ColumnarBatch = _
-
-  /** One scalar cell into a writable vector at row `n`. Shared by the
-    * top-level fill and the array-element fill so the two cannot
-    * diverge on a type.
-    */
-  private def putScalar(
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-      n: Int, dt: org.apache.spark.sql.types.DataType,
-      row: org.apache.spark.sql.catalyst.expressions.SpecializedGetters, i: Int): Unit =
-    dt match {
-      case LongType | TimestampType => v.putLong(n, row.getLong(i))
-      case IntegerType | DateType   => v.putInt(n, row.getInt(i))
-      case ShortType   => v.putShort(n, row.getShort(i))
-      case ByteType    => v.putByte(n, row.getByte(i))
-      case DoubleType  => v.putDouble(n, row.getDouble(i))
-      case FloatType   => v.putFloat(n, row.getFloat(i))
-      case BooleanType => v.putBoolean(n, row.getBoolean(i))
-      case StringType =>
-        val b = row.getUTF8String(i).getBytes
-        v.putByteArray(n, b, 0, b.length)
-      case BinaryType =>
-        val b = row.getBinary(i)
-        v.putByteArray(n, b, 0, b.length)
-      case other => throw new UnsupportedOperationException(
-        s"columnar read of $other (factory gates on supported types)")
-    }
-
-  override def next(): Boolean = {
-    if (batch != null) { batch.close(); batch = null }
-    val vectors = OnHeapColumnVector.allocateColumns(batchSize, schema)
-    var n = 0
-    // If the row reader (or a decode) throws mid-batch the vectors are
-    // not yet owned by a ColumnarBatch — close them here or they leak
-    // until GC.
-    try {
-      while (n < batchSize && rows.next()) {
-        val row = rows.get()
-        var i = 0
-        while (i < schema.length) {
-          val v = vectors(i)
-          if (row.isNullAt(i)) v.putNull(n)
-          else schema.fields(i).dataType match {
-            case ArrayType(et, _) =>
-              val arr = row.getArray(i)
-              val child = v.arrayData()
-              val start = child.getElementsAppended
-              val len = arr.numElements()
-              child.reserve(start + len)
-              var j = 0
-              while (j < len) {
-                if (arr.isNullAt(j)) child.appendNull()
-                else { putScalar(child, start + j, et, arr, j); child.addElementsAppended(1) }
-                j += 1
-              }
-              v.putArray(n, start, len)
-            case dt => putScalar(v, n, dt, row, i)
-          }
-          i += 1
-        }
-        n += 1
-      }
-    } catch {
-      case t: Throwable => vectors.foreach(_.close()); throw t
-    }
-    if (n == 0) { vectors.foreach(_.close()); false }
-    else { batch = new ColumnarBatch(vectors.map(v => v: ColumnVector), n); true }
-  }
-
-  override def get(): ColumnarBatch = batch
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    rows.currentMetricsValues()
-
-  override def close(): Unit = {
-    if (batch != null) { batch.close(); batch = null }
-    rows.close()
-  }
-}
-
-/** Executor-side segment reader (A1/A3/A9): streams the segment's
-  * items, applies pushed filters BEFORE decoding (DynamoDB
-  * FilterExpression semantics — saves decode, not storage I/O), then
-  * converts wire items to `InternalRow` through the precompiled codec.
-  * The rate limiter post-pays consumed capacity per item, like the
-  * reference acquiring each page's `ConsumedCapacity`.
+/** Executor-side row reader (A1/A3/A9): decodes the partition's
+  * [[ItemSource]] items to `InternalRow` through the precompiled codec,
+  * applying a pushed limit/offset and synthesizing metadata columns.
   */
 final class DynamoPartitionReader(
     opts: DynamoOptions,
@@ -3476,7 +3269,7 @@ final class DynamoPartitionReader(
     metaNames: Set[String] = DynamoMetaCols.names)
     extends PartitionReader[InternalRow] {
 
-  private val store = new LocalKVStore(opts.path)
+  private val items = new ItemSource(opts, pushed, adv, sample, partition)
   // Metadata columns (`_shard`/`_size`) are synthesized here, not
   // decoded: split them out of the codec's schema and re-insert their
   // values at the right ordinals per item. `metaNames` excludes names
@@ -3489,73 +3282,22 @@ final class DynamoPartitionReader(
   private val dataSchema: StructType =
     if (metaCols.isEmpty) schema
     else StructType(schema.fields.filterNot(f => metaNames(f.name)))
-  private lazy val placementMeta: TableMeta = store.describe(opts.tableName)
   private val decode = Codec.rowReader(dataSchema)
-  private val limiter = new RateLimiter(partition.ratePerSegment)
-  // Eventually-consistent reads cost half an RCU per 4 KB, like DynamoDB.
-  private val consistencyFactor = if (opts.stronglyConsistentReads) 1.0 else 0.5
-
-  /** GSI view (A8): sparse-skip + projection applied before filters,
-    * so pushed predicates see exactly the attributes the index exposes
-    * (DynamoDB evaluates index-scan filters on projected attrs too).
-    */
-  private val index: Option[(TableMeta, IndexMeta)] = opts.indexName.map { ix =>
-    val meta = store.describe(opts.tableName)
-    val im = meta.indexes.getOrElse(ix,
-      throw new IllegalArgumentException(s"no index '$ix' on ${opts.tableName}"))
-    // LOCAL index: clear the projection — a base-path LSI read
-    // fetches non-projected attributes from the co-located base item
-    // (DynamoDB LSI semantics; filters may name them too). Copy-served
-    // items arrive pre-projected, so the wider view is idempotent on
-    // them; the sparse rule (all index keys present) still applies.
-    (meta, if (im.local) im.copy(projection = None) else im)
-  }
-
-  // A pad partition exists only to keep the shard layout visible to
-  // SPJ planning (see planInputPartitions); it owns no matching rows.
-  private val items: Iterator[(Item, Int)] =
-    if (partition.padEmpty) Iterator.empty
-    else DynamoScan.partitionItems(store, opts, partition,
-      DynamoScan.queryWindow(placementMeta, opts, pushed, partition.viaIndex))
-
-  // One clock per scan task: every item in the partition sees the same
-  // expiry cutoff (TTL — expired items are hidden, counted as filtered).
-  private val ttlNow = Ttl.now(opts)
-
-  // Pushed-TABLESAMPLE membership, decided on the BASE item's
-  // canonical primary key (pre-index-projection — a GSI view samples
-  // the same items its base table would). Key-only, so it commutes
-  // with every pushed/runtime filter; see [[PushedSample]].
-  private val inSample: Item => Boolean = sample match {
-    case Some(s) => it => s.keeps(store.keyOf(placementMeta, it))
-    case None => _ => true
-  }
 
   private var current: InternalRow = _
   // Post-filter rows seen, INCLUDING ones a pushed offset skips: Spark
   // negotiates the paired limit before the offset (the limit is the
   // pre-offset row budget), so skipped rows count against it.
   private var seen = 0
-  private var scanned = 0L
-  private var filtered = 0L
 
   override def next(): Boolean = {
-    while (items.hasNext) {
-      if (limit.exists(seen >= _)) return false // pushed limit: stop the scan early
-      val (item0, sz) = items.next()
-      scanned += 1
-      limiter.acquire(sz.toDouble / opts.bytesPerRCU * consistencyFactor)
-      val visible =
-        if (inSample(item0)) Ttl.visibleItem(opts, ttlNow, index, store)(item0) else None
-      visible match {
-        case Some(it) if pushed.forall(FilterEval.eval(_, it)) &&
-            adv.forall(PredicateV2.eval(_, it)) =>
-          seen += 1
-          if (!offset.exists(seen <= _)) { // first `m` rows: pushed-OFFSET skip
-            current = withMetaCols(decode(it), it, sz)
-            return true
-          }
-        case _ => filtered += 1 // dropped by pushed filter or sparse index
+    // pushed limit: stop pulling, and with it the store read
+    while (!limit.exists(seen >= _) && items.hasNext) {
+      val it = items.next()
+      seen += 1
+      if (!offset.exists(seen <= _)) { // first `m` rows: pushed-OFFSET skip
+        current = withMetaCols(decode(it), it, items.wireSize)
+        return true
       }
     }
     false
@@ -3574,7 +3316,7 @@ final class DynamoPartitionReader(
     while (i < schema.length) {
       val f = schema.fields(i)
       if (metaNames(f.name) && f.name == DynamoMetaCols.Shard)
-        full.update(i, store.shardOf(placementMeta, it))
+        full.update(i, items.store.shardOf(items.meta, it))
       else if (metaNames(f.name) && f.name == DynamoMetaCols.Size) full.update(i, sz)
       else { full.update(i, base.get(di, dataSchema.fields(di).dataType)); di += 1 }
       i += 1
@@ -3585,8 +3327,7 @@ final class DynamoPartitionReader(
   override def get(): InternalRow = current
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ScanMetrics.TaskMetric("itemsScanned", scanned),
-      ScanMetrics.TaskMetric("itemsFiltered", filtered))
+    items.metrics
 
   override def close(): Unit = ()
 }
@@ -3612,17 +3353,8 @@ final class DynamoGroupedAggReaderFactory(
   * rows are final: a `GROUP BY <partition key>` over a 100 TB table
   * runs entirely inside the scan with zero shuffle and ships only
   * group rows. Otherwise they are map-side partials Spark
-  * re-aggregates. Group state is in-memory per segment but BOUNDED:
-  * a partial push flushes its accumulated group rows downstream
-  * whenever the map reaches `maxPushedGroups` (default 65536) and
-  * starts fresh — Spark's final aggregate merges the extra partials,
-  * so a `GROUP BY <high-cardinality column>` holds at most
-  * `maxPushedGroups` groups per segment no matter the segment size.
-  * A COMPLETE push cannot flush (its rows are final), so completeness
-  * is only claimed when the plan-time cardinality screen says groups
-  * look bounded ([[DynamoScanBuilder.groupsLookBounded]]). Group
-  * values decode through the same [[Codec]] path as row reads;
-  * doubles normalize -0.0/NaN the way Spark's grouping does.
+  * re-aggregates. Group state is bounded per segment
+  * ([[AggAccs.GroupFold]]).
   */
 final class DynamoGroupedAggReader(
     opts: DynamoOptions, pushed: Array[Filter],
@@ -3632,158 +3364,12 @@ final class DynamoGroupedAggReader(
     sample: Option[PushedSample] = None)
     extends PartitionReader[InternalRow] {
 
-  private val store = new LocalKVStore(opts.path)
-  private val limiter = new RateLimiter(partition.ratePerSegment)
-  private val consistencyFactor = if (opts.stronglyConsistentReads) 1.0 else 0.5
-  private val groupDecode = Codec.rowReader(StructType(group.fields))
-  private val groupTypes = group.fields.map(_.dataType)
-
-  private val index: Option[(TableMeta, IndexMeta)] = opts.indexName.map { ix =>
-    val meta = store.describe(opts.tableName)
-    val im = meta.indexes.getOrElse(ix,
-      throw new IllegalArgumentException(s"no index '$ix' on ${opts.tableName}"))
-    // LOCAL index: clear the projection — a base-path LSI read
-    // fetches non-projected attributes from the co-located base item
-    // (DynamoDB LSI semantics; filters may name them too). Copy-served
-    // items arrive pre-projected, so the wider view is idempotent on
-    // them; the sparse rule (all index keys present) still applies.
-    (meta, if (im.local) im.copy(projection = None) else im)
-  }
-
-  private var matched = 0L
-  private var scanned = 0L
-  private val ttlNow = Ttl.now(opts)
-
-  // Pushed-TABLESAMPLE membership on the base item's key — same rule
-  // as the row reader ([[PushedSample]]); the aggregate sees exactly
-  // the rows a sampled row scan would ship.
-  private lazy val baseMeta: TableMeta = store.describe(opts.tableName)
-  private val inSample: Item => Boolean = sample match {
-    case Some(s) => it => s.keeps(store.keyOf(baseMeta, it))
-    case None => _ => true
-  }
-
-  // Query-shape page window, derived from the same pushed conjuncts
-  // this reader evaluates — a `GROUP BY ... WHERE hash = h AND range
-  // BETWEEN a AND b` aggregates over O(matching pages), not O(shard).
-  private lazy val queryWin: Seq[PageIndex.KeyWindow] =
-    DynamoScan.queryWindow(baseMeta, opts, pushed, partition.viaIndex)
-
-  /** Spark's grouping equates 0.0 with -0.0 and all NaNs; boxed
-    * Double/Float equals does neither, so normalize map-key values.
-    */
-  private def normKey(v: Any): Any = v match {
-    case d: java.lang.Double if d.isNaN => java.lang.Double.valueOf(Double.NaN)
-    case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
-    case f: java.lang.Float if f.isNaN => java.lang.Float.valueOf(Float.NaN)
-    case f: java.lang.Float if f.floatValue() == 0.0f => java.lang.Float.valueOf(0.0f)
-    case other => other
-  }
-
-  // A COMPLETE push must emit exactly one final row per group, so it
-  // never flushes (the plan-time screen keeps unbounded groupings out
-  // of complete mode); a partial push caps its map and flushes.
-  private val maxGroups = if (group.complete) Int.MaxValue else opts.maxPushedGroups
-
-  /** Runtime backstop for COMPLETE pushes: completeness (for non-unique
-    * groupings) is claimed off a one-page cardinality sample
-    * ([[DynamoScanBuilder.groupsLookBounded]]), and a non-representative
-    * page can admit a grouping whose cardinality scales with rows — the
-    * exact unbounded-map shape the screen exists to prevent. A complete
-    * push cannot flush (its rows must be final), so if the map blows
-    * past a hard multiple of `maxPushedGroups`, fail loudly with the
-    * remedy instead of letting one segment eat the executor heap.
-    */
-  private val completeHardCap: Int =
-    math.min(16L * opts.maxPushedGroups, Int.MaxValue - 1L).toInt
-  private def checkCompleteCap(size: Int): Unit =
-    if (size > completeHardCap)
-      throw new IllegalStateException(
-        s"complete grouped pushdown exceeded $completeHardCap groups in one " +
-          s"segment (16 x maxPushedGroups): the plan-time cardinality sample " +
-          s"was not representative for grouping " +
-          s"[${group.fields.map(_.name).mkString(", ")}]. Raise maxPushedGroups " +
-          "if this group count is genuinely bounded and fits executor memory; " +
-          "otherwise rerun the query with the aggregate kept Spark-side " +
-          "(e.g. group on an expression, which the scan builder never claims).")
-
-  private lazy val rows: Iterator[InternalRow] = {
-    // local alias: inside the anonymous Iterator, `partition` would
-    // resolve to Iterator#partition
-    val part = partition
-    if (part.padEmpty) Iterator.empty
-    else if (group.unique) {
-      // grouping ⊇ the full primary key: the store holds one item per
-      // key, so every item is its own (final) group — stream rows with
-      // zero group state, at any segment size
-      DynamoScan.partitionItems(store, opts, part, queryWin)
-        .flatMap { case (item0, sz) =>
-          limiter.acquire(sz.toDouble / opts.bytesPerRCU * consistencyFactor)
-          scanned += 1
-          val visible =
-            if (inSample(item0)) Ttl.visibleItem(opts, ttlNow, index, store)(item0) else None
-          visible.filter(it => pushed.forall(FilterEval.eval(_, it)) &&
-              adv.forall(PredicateV2.eval(_, it))).map { it =>
-            matched += 1
-            val g = groupDecode(it)
-            val vals = Array.tabulate[Any](groupTypes.length)(i =>
-              if (g.isNullAt(i)) null else g.get(i, groupTypes(i)))
-            val accs = AggAccs.make(aggs)
-            accs.foreach(_.update(it))
-            InternalRow.fromSeq(vals.toSeq ++ accs.map(_.result))
-          }
-        }
-    }
-    else new Iterator[InternalRow] {
-      private val src =
-        DynamoScan.partitionItems(store, opts, part, queryWin)
-      // LinkedHashMap: group emission order = first-seen order, so
-      // re-runs of the same segment emit identically (scan order is
-      // file order, which is deterministic).
-      private val groups = scala.collection.mutable.LinkedHashMap
-        .empty[List[Any], (Array[Any], Array[AggAccs.Acc])]
-      private var batch: Iterator[InternalRow] = Iterator.empty
-      private var drained = false
-
-      /** Scan until the map reaches `maxGroups` (or the segment ends),
-        * then materialize the accumulated group rows as the next
-        * emission batch — at most `maxGroups` rows of memory at once.
-        */
-      private def refill(): Unit = {
-        while (src.hasNext && groups.size < maxGroups) {
-          val (item0, sz) = src.next()
-          limiter.acquire(sz.toDouble / opts.bytesPerRCU * consistencyFactor)
-          scanned += 1
-          val visible =
-            if (inSample(item0)) Ttl.visibleItem(opts, ttlNow, index, store)(item0) else None
-          visible.filter(it => pushed.forall(FilterEval.eval(_, it)) &&
-              adv.forall(PredicateV2.eval(_, it))).foreach { it =>
-            matched += 1
-            val g = groupDecode(it)
-            val vals = Array.tabulate[Any](groupTypes.length)(i =>
-              if (g.isNullAt(i)) null else g.get(i, groupTypes(i)))
-            val key = vals.map(normKey).toList
-            val (_, accs) = groups.getOrElseUpdate(key, (vals, AggAccs.make(aggs)))
-            if (group.complete) checkCompleteCap(groups.size)
-            accs.foreach(_.update(it))
-          }
-        }
-        if (!src.hasNext) drained = true
-        batch = groups.values.toVector.iterator.map { case (vals, accs) =>
-          InternalRow.fromSeq(vals.toSeq ++ accs.map(_.result))
-        }
-        groups.clear()
-      }
-
-      override def hasNext: Boolean = {
-        while (!batch.hasNext && !drained) refill()
-        batch.hasNext
-      }
-
-      override def next(): InternalRow =
-        if (hasNext) batch.next() else throw new NoSuchElementException
-    }
-  }
+  private val items = new ItemSource(opts, pushed, adv, sample, partition)
+  // grouping ⊇ the full primary key (`unique`): the store holds one
+  // item per key, so every item is its own final group — a one-group
+  // flush streams rows with zero group state, at any segment size
+  private val rows = new AggAccs.GroupFold(group.fields, aggs).rows(items,
+    if (group.unique) 1 else opts.maxPushedGroups, group.complete && !group.unique)
 
   private var current: InternalRow = _
 
@@ -3793,8 +3379,7 @@ final class DynamoGroupedAggReader(
   override def get(): InternalRow = current
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ScanMetrics.TaskMetric("itemsScanned", scanned),
-      ScanMetrics.TaskMetric("itemsFiltered", scanned - matched))
+    items.metrics
 
   override def close(): Unit = ()
 }
@@ -3920,9 +3505,11 @@ final class DynamoGroupAnswerReader(
   override def close(): Unit = ()
 }
 
-/** Aggregate accumulators shared by the ungrouped ([[DynamoAggReader]])
-  * and grouped ([[DynamoGroupedAggReader]]) pushed scans — one
-  * machinery, so the two paths cannot disagree on aggregate semantics.
+/** Aggregate accumulators and the group fold shared by the ungrouped
+  * ([[DynamoAggReader]]) and grouped ([[DynamoGroupedAggReader]])
+  * pushed scans and by aggregates pushed over a join
+  * ([[DynamoJoinReader]]) — one machinery, so the paths cannot
+  * disagree on aggregate semantics.
   */
 private[dynamo] object AggAccs {
   /** One accumulator per pushed aggregate, in push order. */
@@ -4038,6 +3625,84 @@ private[dynamo] object AggAccs {
     case PushedAgg.MaxOf(f) => new ExtremumAcc(f, -1)
     case PushedAgg.AvgOf(f) => new AvgAcc(f)
   }.toArray
+
+  /** Spark's grouping and equality equate 0.0 with -0.0 and all NaNs;
+    * boxed Double/Float equals does neither, so normalize map-key values.
+    */
+  def normKey(v: Any): Any = v match {
+    case d: java.lang.Double if d.isNaN => java.lang.Double.valueOf(Double.NaN)
+    case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
+    case f: java.lang.Float if f.isNaN => java.lang.Float.valueOf(Float.NaN)
+    case f: java.lang.Float if f.floatValue() == 0.0f => java.lang.Float.valueOf(0.0f)
+    case other => other
+  }
+
+  /** Hash aggregation of items into rows `(group values..., aggregate
+    * results...)`. Group values decode through the same [[Codec]] path
+    * as row reads. Groups emit in first-seen order, so re-runs over the
+    * same items emit identically.
+    */
+  final class GroupFold(fields: Seq[StructField], aggs: Seq[PushedAgg]) {
+    private val decode = Codec.rowReader(StructType(fields))
+    private val types = fields.map(_.dataType)
+
+    /** State is bounded. A partial fold emits its accumulated rows
+      * downstream whenever the map holds `maxGroups` groups and starts
+      * fresh — Spark's final aggregate merges the extra partials, so a
+      * `GROUP BY <high-cardinality column>` holds at most `maxGroups`
+      * groups no matter how many items arrive. A `complete` fold's rows
+      * are final, so it cannot flush; completeness is only claimed when
+      * the plan-time cardinality screen says groups look bounded
+      * ([[DynamoScanBuilder.groupsLookBounded]]), off a one-page
+      * sample. A non-representative page can admit a grouping whose
+      * cardinality scales with rows, so past 16 × `maxGroups` groups a
+      * complete fold fails loudly with the remedy instead of letting
+      * one segment eat the executor heap.
+      */
+    def rows(items: Iterator[Item], maxGroups: Int, complete: Boolean): Iterator[InternalRow] =
+      new Iterator[InternalRow] {
+        private val flushAt = if (complete) Int.MaxValue else maxGroups
+        private val hardCap =
+          if (complete) math.min(16L * maxGroups, Int.MaxValue - 1L).toInt else Int.MaxValue
+        private val groups = scala.collection.mutable.LinkedHashMap
+          .empty[List[Any], (Array[Any], Array[Acc])]
+        private var batch: Iterator[InternalRow] = Iterator.empty
+        private var drained = false
+
+        private def refill(): Unit = {
+          while (items.hasNext && groups.size < flushAt) {
+            val it = items.next()
+            val g = decode(it)
+            val vals = Array.tabulate[Any](types.length)(i =>
+              if (g.isNullAt(i)) null else g.get(i, types(i)))
+            val (_, accs) = groups.getOrElseUpdate(vals.map(normKey).toList, (vals, make(aggs)))
+            if (groups.size > hardCap)
+              throw new IllegalStateException(
+                s"complete grouped pushdown exceeded $hardCap groups in one " +
+                  s"segment (16 x maxPushedGroups): the plan-time cardinality sample " +
+                  s"was not representative for grouping " +
+                  s"[${fields.map(_.name).mkString(", ")}]. Raise maxPushedGroups " +
+                  "if this group count is genuinely bounded and fits executor memory; " +
+                  "otherwise rerun the query with the aggregate kept Spark-side " +
+                  "(e.g. group on an expression, which the scan builder never claims).")
+            accs.foreach(_.update(it))
+          }
+          if (!items.hasNext) drained = true
+          batch = groups.values.toVector.iterator.map { case (vals, accs) =>
+            InternalRow.fromSeq(vals.toSeq ++ accs.map(_.result))
+          }
+          groups.clear()
+        }
+
+        override def hasNext: Boolean = {
+          while (!batch.hasNext && !drained) refill()
+          batch.hasNext
+        }
+
+        override def next(): InternalRow =
+          if (hasNext) batch.next() else throw new NoSuchElementException
+      }
+  }
 }
 
 final class DynamoAggReader(
@@ -4047,60 +3712,16 @@ final class DynamoAggReader(
     sample: Option[PushedSample] = None)
     extends PartitionReader[InternalRow] {
 
-  private val store = new LocalKVStore(opts.path)
-  private val limiter = new RateLimiter(partition.ratePerSegment)
-  private val consistencyFactor = if (opts.stronglyConsistentReads) 1.0 else 0.5
-
-  private val index: Option[(TableMeta, IndexMeta)] = opts.indexName.map { ix =>
-    val meta = store.describe(opts.tableName)
-    val im = meta.indexes.getOrElse(ix,
-      throw new IllegalArgumentException(s"no index '$ix' on ${opts.tableName}"))
-    // LOCAL index: clear the projection — a base-path LSI read
-    // fetches non-projected attributes from the co-located base item
-    // (DynamoDB LSI semantics; filters may name them too). Copy-served
-    // items arrive pre-projected, so the wider view is idempotent on
-    // them; the sparse rule (all index keys present) still applies.
-    (meta, if (im.local) im.copy(projection = None) else im)
-  }
-
+  private val items = new ItemSource(opts, pushed, adv, sample, partition)
   private val accs: Array[AggAccs.Acc] = AggAccs.make(aggs)
-
   private var emitted = false
-  private var matched = 0L
-  private var scanned = 0L
-  private val ttlNow = Ttl.now(opts)
 
-  // Pushed-TABLESAMPLE membership — same key-only rule as the row
-  // reader, so `sample(p).count()` counts exactly the sampled rows.
-  private lazy val baseMeta: TableMeta = store.describe(opts.tableName)
-  private val inSample: Item => Boolean = sample match {
-    case Some(s) => it => s.keeps(store.keyOf(baseMeta, it))
-    case None => _ => true
-  }
-
-  // Query-shape page window — a pushed `count(*) WHERE hash = h AND
-  // range BETWEEN a AND b` reads O(matching pages), not O(shard).
-  private lazy val queryWin: Seq[PageIndex.KeyWindow] =
-    DynamoScan.queryWindow(baseMeta, opts, pushed, partition.viaIndex)
-
-  override def next(): Boolean = {
-    if (emitted) return false
-    if (partition.padEmpty) { emitted = true; return true } // empty partials
-    DynamoScan.partitionItems(store, opts, partition, queryWin)
-      .foreach { case (item0, sz) =>
-        limiter.acquire(sz.toDouble / opts.bytesPerRCU * consistencyFactor)
-        scanned += 1
-        val visible =
-          if (inSample(item0)) Ttl.visibleItem(opts, ttlNow, index, store)(item0) else None
-        visible.filter(it => pushed.forall(FilterEval.eval(_, it)) &&
-            adv.forall(PredicateV2.eval(_, it))).foreach { it =>
-          matched += 1
-          accs.foreach(_.update(it))
-        }
-      }
-    emitted = true
-    true
-  }
+  override def next(): Boolean =
+    !emitted && {
+      items.foreach(it => accs.foreach(_.update(it)))
+      emitted = true
+      true
+    }
 
   override def get(): InternalRow =
     InternalRow.fromSeq(accs.map(_.result).toSeq)
@@ -4109,8 +3730,7 @@ final class DynamoAggReader(
   // reports the same UI metrics as the row readers (items the pushed
   // filters dropped never reach the aggregates).
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ScanMetrics.TaskMetric("itemsScanned", scanned),
-      ScanMetrics.TaskMetric("itemsFiltered", scanned - matched))
+    items.metrics
 
   override def close(): Unit = ()
 }
@@ -4251,45 +3871,6 @@ private object WriteMetrics {
   * the write-rate budget across writers (A16: targetCapacity × WCU /
   * numPartitions).
   */
-/** DynamoDB TTL semantics (a service-level feature the connector
-  * surfaces as a read option): with `ttlAttribute` set, an item whose
-  * attribute holds a number <= the scan's epoch-second clock is
-  * expired and hidden from batch reads — the service deletes expired
-  * items lazily (up to ~48 h later), so correct readers filter.
-  * Missing or non-numeric attributes never expire an item, and the
-  * CDC journal keeps full history (TTL is a read-view concern, not a
-  * log rewrite). `ttlNow` pins the clock for reproducible reads.
-  */
-private object Ttl {
-  def now(opts: DynamoOptions): Long =
-    opts.ttlNow.getOrElse(System.currentTimeMillis() / 1000)
-
-  // DynamoDB expires items whose attribute is STRICTLY LESS than the
-  // current epoch time, so an item stamped exactly `now` is still alive.
-  def alive(opts: DynamoOptions, nowEpochS: Long)(item: Item): Boolean =
-    opts.ttlAttribute.forall { attr =>
-      item.get(attr) match {
-        case Some(AttrVal.N(v)) => v >= BigDecimal(nowEpochS)
-        case _ => true
-      }
-    }
-
-  /** Shared visibility rule for scan and COUNT readers — TTL checks
-    * the BASE item BEFORE any index projection (a projection may omit
-    * the ttl attribute, and DynamoDB expires index entries with their
-    * table item regardless of projection).
-    */
-  def visibleItem(
-      opts: DynamoOptions, nowEpochS: Long,
-      index: Option[(TableMeta, IndexMeta)], store: LocalKVStore)(
-      item0: Item): Option[Item] =
-    if (!alive(opts, nowEpochS)(item0)) None
-    else index match {
-      case None => Some(item0)
-      case Some((meta, ix)) => store.indexView(meta, ix, item0)
-    }
-}
-
 private object WriteSetup {
   def ratePerWriter(opts: DynamoOptions, numPartitions: Int): Double = {
     val store = new LocalKVStore(opts.path)
@@ -4371,9 +3952,7 @@ final class DynamoBatchWrite(
     overwriteWhere.foreach { conds =>
       val store = new LocalKVStore(opts.path)
       if (store.exists(opts.tableName))
-        DeleteWhere.run(opts,
-          it => conds.forall(_.fold(FilterEval.eval(_, it), PredicateV2.eval(_, it))),
-          tag = "ovw")
+        DeleteWhere.run(opts, conds, tag = "ovw")
     }
     new DynamoWriterFactory(opts, schema,
       WriteSetup.ratePerWriter(opts, info.numPartitions), seq = System.currentTimeMillis())
@@ -4606,8 +4185,7 @@ final class DynamoDataWriter(
   override def close(): Unit = ()
 }
 
-/** Columnar bulk-ingest path — the write-side mirror of
-  * [[DynamoColumnarReader]]. Spark 4.1.2's DSv2 write surface is
+/** Columnar bulk-ingest path. Spark 4.1.2's DSv2 write surface is
   * row-only (`DataWriter[InternalRow]`; no columnar-write negotiation
   * exists upstream), so the columnar input is taken from the PLAN:
   * when the DataFrame's executed plan ends in a columnar segment
@@ -4648,9 +4226,22 @@ object DynamoColumnarIngest {
     case _ => None
   }
 
+  private def flat(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | DoubleType |
+         FloatType | BooleanType | StringType | BinaryType |
+         TimestampType | DateType => true
+    case _ => false
+  }
+
+  /** Flat primitives plus one level of array-of-primitive (the
+    * embedding-table shape, `Array[Float]` columns): the type set
+    * [[Codec.vectorCellWriter]] reads out of column vectors.
+    */
   def supported(schema: StructType): Boolean =
-    schema.fields.nonEmpty &&
-      schema.fields.forall(f => DynamoColumnarReader.supported(f.dataType))
+    schema.fields.nonEmpty && schema.fields.forall(_.dataType match {
+      case ArrayType(et, _) => flat(et)
+      case other => flat(other)
+    })
 
   def ingest(df: DataFrame, path: String, tableName: String,
       hashKey: String, rangeKey: Option[String] = None,

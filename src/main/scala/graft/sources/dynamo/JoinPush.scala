@@ -221,11 +221,11 @@ final class DynamoJoinReaderFactory(
 }
 
 /** Executor-side join task: hash-build the filtered right table, then
-  * stream this task's left segment through it. Right items that fail
-  * their side's pushed filters or TTL visibility never enter the map;
-  * merged candidates re-evaluate the FULL join condition (hash keys
-  * are a sound subset, see [[PushedJoinSpec.equiKeys]]) and then the
-  * post-join pushed filters.
+  * stream this task's left segment through it. Both sides read through
+  * [[ItemSource]], so right items that fail their side's pushed filters
+  * or TTL visibility never enter the map; merged candidates re-evaluate
+  * the FULL join condition (hash keys are a sound subset, see
+  * [[PushedJoinSpec.equiKeys]]) and then the post-join pushed filters.
   */
 final class DynamoJoinReader(
     spec: PushedJoinSpec,
@@ -245,24 +245,7 @@ final class DynamoJoinReader(
   private def project(it: Item, cols: Seq[(String, String)]): Item =
     cols.flatMap { case (c, a) => it.get(c).map(a -> _) }.toMap
 
-  private def sideVisible(side: PushedJoinSide, ttlNow: Long)(it: Item): Boolean =
-    Ttl.alive(side.opts, ttlNow)(it) &&
-      side.pushed.forall(FilterEval.eval(_, it)) &&
-      side.adv.forall(PredicateV2.eval(_, it))
-
   private val keys = spec.equiKeys
-
-  /** Spark's grouping/equality treats 0.0 ≡ -0.0 and NaN ≡ NaN; boxed
-    * equals does neither — normalize typed hash-key values the same
-    * way the grouped-aggregate reader does.
-    */
-  private def normKey(v: Any): Any = v match {
-    case d: java.lang.Double if d.isNaN => java.lang.Double.valueOf(Double.NaN)
-    case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
-    case f: java.lang.Float if f.isNaN => java.lang.Float.valueOf(Float.NaN)
-    case f: java.lang.Float if f.floatValue() == 0.0f => java.lang.Float.valueOf(0.0f)
-    case other => other
-  }
 
   /** TYPED equi-key of a projected item (left side reads the left
     * alias, right the right) — None when any key attr is missing,
@@ -271,40 +254,27 @@ final class DynamoJoinReader(
   private def keyOf(it: Item, leftSide: Boolean): Option[Seq[Any]] = {
     val vs = keys.map { case (lc, rc, dt) =>
       PredicateV2.typedValue(it, if (leftSide) lc else rc, dt) }
-    if (vs.forall(_.isDefined)) Some(vs.map(v => normKey(v.get))) else None
+    if (vs.forall(_.isDefined)) Some(vs.map(v => AggAccs.normKey(v.get))) else None
   }
 
-  private var scanned = 0L
-  private var filtered = 0L
+  private val probe = new ItemSource(spec.left.opts, spec.left.pushed, spec.left.adv,
+    None, partition)
+  // Build side: the whole (filtered) right table, read once the first
+  // probe item survives its side's filters. Its read budget divides by
+  // the probe task count, like any other concurrent reader of a table
+  // (totalSegments tasks each run this build).
+  private lazy val build = ItemSource.wholeTable(spec.right.opts, spec.right.pushed,
+    spec.right.adv, budgetShare = math.max(1, partition.totalSegments))
+  private var built = false
+  // probe items whose every join candidate was dropped
+  private var unmatched = 0L
 
-  // Build side: the whole (filtered) right table, hashed on the typed
-  // equi keys — or a flat vector when the condition has none (rare;
-  // the nested-loop fallback is still bounded by joinBuildMaxBytes).
-  // The build's read budget divides by the probe task count, like any
-  // other concurrent reader of a table (totalSegments tasks each run
-  // this build).
+  // Hashed on the typed equi keys — or a flat vector when the condition
+  // has none (rare; the nested-loop fallback is still bounded by
+  // joinBuildMaxBytes).
   private lazy val (rightByKey, rightAll) = {
-    val s = spec.right
-    val store = new LocalKVStore(s.opts.path)
-    val meta = store.describe(s.opts.tableName)
-    val limiter = new RateLimiter(math.max(0.1,
-      s.opts.targetCapacity * s.opts.throughput.getOrElse(meta.throughput).toDouble /
-        math.max(1, partition.totalSegments)))
-    val consistency = if (s.opts.stronglyConsistentReads) 1.0 else 0.5
-    val ttlNow = Ttl.now(s.opts)
-    val rows = store.scanSegment(s.opts.tableName, 0, 1, s.opts.asOfSeq)
-      .map { case (it, sz) =>
-        limiter.acquire(sz.toDouble / s.opts.bytesPerRCU * consistency)
-        scanned += 1
-        it
-      }
-      .filter { it =>
-        val ok = sideVisible(s, ttlNow)(it)
-        if (!ok) filtered += 1
-        ok
-      }
-      .map(project(_, s.cols))
-      .toVector
+    built = true
+    val rows = build.map(project(_, spec.right.cols)).toVector
     if (keys.isEmpty) (Map.empty[Seq[Any], Vector[Item]], rows)
     else {
       val m = rows.flatMap(it => keyOf(it, leftSide = false).map(_ -> it))
@@ -313,120 +283,57 @@ final class DynamoJoinReader(
     }
   }
 
-  private val leftStore = new LocalKVStore(spec.left.opts.path)
-  private lazy val leftTtlNow = Ttl.now(spec.left.opts)
-  private val leftLimiter = new RateLimiter(partition.ratePerSegment)
-  private val leftConsistency =
-    if (spec.left.opts.stronglyConsistentReads) 1.0 else 0.5
-
   /** One element per surviving probe row: that row's merged output
     * rows, in build order — the RUN structure [[joinGroupComplete]]'s
     * finality argument rests on (a group tuple containing the probe
     * primary key can never span two runs).
     */
   private def probeRuns: Iterator[Vector[Item]] =
-    leftStore.scanSegment(spec.left.opts.tableName, partition.segment,
-        partition.totalSegments, spec.left.opts.asOfSeq)
-      .flatMap { case (it0, sz) =>
-        leftLimiter.acquire(sz.toDouble / spec.left.opts.bytesPerRCU * leftConsistency)
-        scanned += 1
-        if (!sideVisible(spec.left, leftTtlNow)(it0)) { filtered += 1; Iterator.empty }
-        else {
-          val l = project(it0, spec.left.cols)
-          val candidates =
-            if (keys.isEmpty) rightAll
-            else keyOf(l, leftSide = true)
-              .map(rightByKey.getOrElse(_, Vector.empty))
-              .getOrElse(Vector.empty)
-          val merged = candidates
-            .map(r => l ++ r)
-            .filter(m => spec.cond.fold(FilterEval.eval(_, m), PredicateV2.eval(_, m)))
-          // LEFT OUTER: a probe row with no surviving candidate emits
-          // once, null-extended (right attrs absent → decode nulls)
-          val joinedRows =
-            if (spec.outer && merged.isEmpty) Vector(l) else merged
-          val out = joinedRows.filter(m =>
-            postFilters.forall(FilterEval.eval(_, m)) &&
-              postAdv.forall(PredicateV2.eval(_, m)))
-          // a probe item whose every candidate was dropped counts as
-          // filtered, like a row a pushed filter rejected
-          if (out.isEmpty) { filtered += 1; Iterator.empty }
-          else Iterator.single(out)
-        }
-      }
+    probe.flatMap { it0 =>
+      val l = project(it0, spec.left.cols)
+      val candidates =
+        if (keys.isEmpty) rightAll
+        else keyOf(l, leftSide = true)
+          .map(rightByKey.getOrElse(_, Vector.empty))
+          .getOrElse(Vector.empty)
+      val merged = candidates
+        .map(r => l ++ r)
+        .filter(m => spec.cond.fold(FilterEval.eval(_, m), PredicateV2.eval(_, m)))
+      // LEFT OUTER: a probe row with no surviving candidate emits
+      // once, null-extended (right attrs absent → decode nulls)
+      val joinedRows =
+        if (spec.outer && merged.isEmpty) Vector(l) else merged
+      val out = joinedRows.filter(m =>
+        postFilters.forall(FilterEval.eval(_, m)) &&
+          postAdv.forall(PredicateV2.eval(_, m)))
+      // a probe item whose every candidate was dropped counts as
+      // filtered, like a row a pushed filter rejected
+      if (out.isEmpty) { unmatched += 1; Iterator.empty }
+      else Iterator.single(out)
+    }
 
   private lazy val mergedItems: Iterator[Item] = probeRuns.flatten
 
+  private lazy val fold = new AggAccs.GroupFold(grouped.get.fields, aggs)
+
   /** Grouped-aggregate-over-join: hash-aggregate this task's merged
-    * rows into per-group partial rows, flushing the map downstream
-    * whenever it reaches `maxPushedGroups` (never complete — Spark's
-    * final aggregate merges the extra partials), exactly the plain
-    * grouped reader's bounded partial mode over joined items.
+    * rows into per-group partial rows, flushing at `maxPushedGroups`
+    * (never complete — Spark's final aggregate merges the extra
+    * partials), exactly the plain grouped reader's bounded partial
+    * mode over joined items.
     */
-  private lazy val groupedRows: Iterator[InternalRow] = {
-    val g = grouped.get
-    val groupDecode = Codec.rowReader(StructType(g.fields))
-    val groupTypes = g.fields.map(_.dataType)
-    val maxGroups = spec.left.opts.maxPushedGroups
-    new Iterator[InternalRow] {
-      private val groups = scala.collection.mutable.LinkedHashMap
-        .empty[List[Any], (Array[Any], Array[AggAccs.Acc])]
-      private var batch: Iterator[InternalRow] = Iterator.empty
-      private var drained = false
-
-      private def refill(): Unit = {
-        while (mergedItems.hasNext && groups.size < maxGroups) {
-          val m = mergedItems.next()
-          val gr = groupDecode(m)
-          val vals = Array.tabulate[Any](groupTypes.length)(i =>
-            if (gr.isNullAt(i)) null else gr.get(i, groupTypes(i)))
-          val key = vals.map(normKey).toList
-          val (_, accs) = groups.getOrElseUpdate(key, (vals, AggAccs.make(aggs)))
-          accs.foreach(_.update(m))
-        }
-        if (!mergedItems.hasNext) drained = true
-        batch = groups.values.toVector.iterator.map { case (vals, accs) =>
-          InternalRow.fromSeq(vals.toSeq ++ accs.map(_.result))
-        }
-        groups.clear()
-      }
-
-      override def hasNext: Boolean = {
-        while (!batch.hasNext && !drained) refill()
-        batch.hasNext
-      }
-
-      override def next(): InternalRow =
-        if (hasNext) batch.next() else throw new NoSuchElementException
-    }
-  }
+  private lazy val groupedRows: Iterator[InternalRow] =
+    fold.rows(mergedItems, spec.left.opts.maxPushedGroups, complete = false)
 
   /** COMPLETE grouped-over-join: aggregate each probe run into final
     * group rows — the group tuple carries the probe primary key, so a
     * group never spans runs and per-run results are final (Spark
     * planned no aggregate above this scan). State: one small map per
-    * run, bounded by a single key's build-side fan-out.
+    * run, bounded by a single key's build-side fan-out, so a run folds
+    * whole.
     */
-  private lazy val groupedFinalRows: Iterator[InternalRow] = {
-    val g = grouped.get
-    val groupDecode = Codec.rowReader(StructType(g.fields))
-    val groupTypes = g.fields.map(_.dataType)
-    probeRuns.flatMap { run =>
-      val groups = scala.collection.mutable.LinkedHashMap
-        .empty[List[Any], (Array[Any], Array[AggAccs.Acc])]
-      run.foreach { m =>
-        val gr = groupDecode(m)
-        val vals = Array.tabulate[Any](groupTypes.length)(i =>
-          if (gr.isNullAt(i)) null else gr.get(i, groupTypes(i)))
-        val key = vals.map(normKey).toList
-        val (_, accs) = groups.getOrElseUpdate(key, (vals, AggAccs.make(aggs)))
-        accs.foreach(_.update(m))
-      }
-      groups.values.iterator.map { case (vals, accs) =>
-        InternalRow.fromSeq(vals.toSeq ++ accs.map(_.result))
-      }
-    }
-  }
+  private lazy val groupedFinalRows: Iterator[InternalRow] =
+    probeRuns.flatMap(run => fold.rows(run.iterator, Int.MaxValue, complete = false))
 
   private var current: InternalRow = _
   private var aggEmitted = false
@@ -454,9 +361,10 @@ final class DynamoJoinReader(
   // itemsScanned counts BOTH sides' wire items (the build read is real
   // I/O); itemsFiltered counts items that contributed nothing — build
   // rows a side filter dropped plus probe rows with no output.
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ScanMetrics.TaskMetric("itemsScanned", scanned),
-      ScanMetrics.TaskMetric("itemsFiltered", filtered))
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val sides = if (built) Seq(probe, build) else Seq(probe)
+    ScanMetrics.task(sides.map(_.scanned).sum, sides.map(_.filtered).sum + unmatched)
+  }
 
   override def close(): Unit = ()
 }

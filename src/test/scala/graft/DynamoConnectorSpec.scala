@@ -77,12 +77,7 @@ class DynamoConnectorSpec extends AnyFunSuite {
     seedFruit(root)
     val d = spark.read.dynamo(root, "fruit")
       .select("name", "color", "weight_kg", "stock")
-    // the executed plan marks a columnar scan with a ColumnarToRow
-    // bridge above the BatchScan
-    d.collect()
-    val plan = d.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), plan)
-    // and the batched values are the written ones, nulls included
+    // the read values are the written ones
     val rows = d.orderBy("name").collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3)))
     assert(rows.toSeq === Seq(
@@ -109,14 +104,9 @@ class DynamoConnectorSpec extends AnyFunSuite {
 
     val d = spark.read.dynamo(root, "emb")
       .select("vec_id", "embedding", "label")
-    d.collect()
-    val plan = d.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"),
-      s"array schema fell back to the row path:\n$plan")
 
-    // The columnar layer wraps the SAME row reader (decode, filters,
-    // TTL all shared), so value equality with the written rows is the
-    // whole contract — floats widen to double through the store's N
+    // Value equality with the written rows, null vector and null
+    // element included — floats widen to double through the store's N
     // type, like ints widen to long.
     val got = d.orderBy("vec_id").collect().map { r =>
       (r.getLong(0),
@@ -765,6 +755,57 @@ class DynamoConnectorSpec extends AnyFunSuite {
       }
       Seq("spark.sql.catalog.jpart", "spark.sql.catalog.jpart.path",
         "spark.sql.catalog.jpart.readPartitions").foreach(spark.conf.unset)
+    }
+  }
+
+  test("key-pinned pushed join skips the SPJ pad partition's shard") {
+    import spark.implicits._
+    import graft.sources.dynamo.AttrVal
+    val root = freshRoot()
+    // 800 hash keys over the default 16 shards: every shard, the pad's
+    // neighbour included, holds items
+    (0 until 800).map(i => (f"k$i%04d", i.toLong, s"d${i % 4}"))
+      .toDF("id", "v", "dim").write.dynamo(root, "probe", "id")
+    Seq(("d0", "zero"), ("d1", "one"), ("d2", "two"), ("d3", "three"))
+      .toDF("dim", "label").write.dynamo(root, "dims", "dim")
+    def joined() = {
+      val l = spark.read.format("dynamo").option("path", root)
+        .option("tableName", "probe").option("readPartitions", "16").load()
+      val r = spark.read.dynamo(root, "dims")
+      l.filter(col("id") === "k0042").join(r, l("dim") === r("dim"))
+        .select(l("id"), l("v"), col("label"))
+    }
+    def snap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+    val expect = snap(joined())
+    assert(expect === Seq(("k0042", 42L, "two")))
+
+    val store = new LocalKVStore(root)
+    val meta = store.describe("probe")
+    val owning = store.shardOf(meta, Map("id" -> AttrVal.S("k0042")))
+    def shardItems(sh: Int) = store.scanSegment("probe", sh, meta.shards).size.toLong
+    assert(shardItems((owning + 1) % meta.shards) > 0, "the pad's shard must hold items")
+    val prev = Seq("spark.sql.optimizer.datasourceV2JoinPushdown",
+      "spark.sql.sources.v2.bucketing.enabled",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
+      .map(k => k -> spark.conf.getOption(k))
+    try {
+      prev.foreach { case (k, _) => spark.conf.set(k, "true") }
+      // the probe prunes to its owning shard and, with both bucketing
+      // confs on, plans a pad partition for a neighbouring shard
+      val j = joined()
+      assert(snap(j) === expect)
+      val scan = j.queryExecution.executedPlan.collectLeaves()
+        .find(_.nodeName.contains("BatchScan")).getOrElse(fail("no BatchScan"))
+      assert(scan.toString.contains("PushedJoin"), scan.toString)
+      // itemsScanned counts both sides' wire items: the owning shard
+      // and the 4-item build table, never the pad's shard
+      val scanned = scan.metrics("itemsScanned").value
+      assert(scanned <= shardItems(owning) + 4,
+        s"scanned $scanned, owning shard ${shardItems(owning)} + 4 build items")
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
