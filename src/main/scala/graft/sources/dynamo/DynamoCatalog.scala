@@ -134,7 +134,7 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
     val schema =
       if (java.nio.file.Files.isRegularFile(sp))
         DataType.fromJson(java.nio.file.Files.readString(sp)).asInstanceOf[StructType]
-      else Codec.inferSchema(store.samplePageCached(ident.name()))
+      else store.sampleSchemaCached(ident.name())
     val opts = asOfSeq.fold(tableOpts(ident.name()))(seq =>
       tableOpts(ident.name()).copy(asOfSeq = Some(seq)))
     new DynamoTable(opts, schema, acceptAnySchema = false)
@@ -210,7 +210,7 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
           val current =
             if (java.nio.file.Files.isRegularFile(sp))
               DataType.fromJson(java.nio.file.Files.readString(sp)).asInstanceOf[StructType]
-            else Codec.inferSchema(store.samplePageCached(ident.name()))
+            else store.sampleSchemaCached(ident.name())
           val updated = changes.foldLeft(current) {
             case (sch, add: TableChange.AddColumn) =>
               require(add.fieldNames().length == 1,
@@ -224,7 +224,7 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
               // to — a re-added column must come back under a type the
               // stored values actually carry (numeric widening is fine,
               // the decoder reads N as any numeric).
-              Codec.inferSchema(store.samplePageCached(ident.name()))
+              store.sampleSchemaCached(ident.name())
                 .find(_.name == col).foreach { stored =>
                   val ok = stored.dataType == add.dataType() ||
                     (stored.dataType.isInstanceOf[NumericType] &&

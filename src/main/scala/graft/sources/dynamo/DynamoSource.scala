@@ -247,14 +247,17 @@ class DynamoTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "dynamo"
 
   /** Dynamic schema from a ~1 MB sample page (A6), unless the user
-    * supplied `.schema(...)` (then Spark never calls this).
+    * supplied `.schema(...)` (then Spark never calls this). A base-table
+    * read takes the schema cached with the sample page
+    * ([[LocalKVStore.sampleSchemaCached]]), inferred once per table
+    * version.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = DynamoOptions(options)
     val store = new LocalKVStore(opts.path)
     store.assertNotRestorePending(opts.tableName)
-    val sample = opts.indexName match {
-      case None => store.samplePageCached(opts.tableName, asOfSeq = opts.asOfSeq)
+    val inferred = opts.indexName match {
+      case None => store.sampleSchemaCached(opts.tableName, asOfSeq = opts.asOfSeq)
       case Some(ix) => // index read (A8): sample through the index view
         val meta = store.describe(opts.tableName)
         val index = meta.indexes.getOrElse(ix, throw new IllegalArgumentException(
@@ -266,10 +269,9 @@ class DynamoTableProvider extends TableProvider with DataSourceRegister {
         // rule still applies). A GSI infers only the projection (it
         // cannot fetch).
         val viewIx = if (index.local) index.copy(projection = None) else index
-        store.samplePageCached(opts.tableName, asOfSeq = opts.asOfSeq)
-          .flatMap(store.indexView(meta, viewIx, _))
+        Codec.inferSchema(store.samplePageCached(opts.tableName, asOfSeq = opts.asOfSeq)
+          .flatMap(store.indexView(meta, viewIx, _)))
     }
-    val inferred = Codec.inferSchema(sample)
     // CDC reads surface the journal op alongside the item attributes.
     // A user attribute named `_op` would be silently shadowed by the
     // stream reader's tag — reject it up front with a clear error.
@@ -1112,51 +1114,85 @@ final class DynamoScanBuilder(
     val scan = new DynamoScan(opts, requiredSchema, pushed, limit, aggs, safeTopN, grouped,
       advPushed, offset, pinSingleSegment = pin, sample = sample, metaNames = metaNames,
       serveViaIndex = Some(indexServe.isDefined && !overfetch))
-    if (pointRead && !scan.declaresLayoutForSpj) new DynamoLocalScan(scan) else scan
+    if (servedLocally(scan)) new DynamoLocalScan(scan) else scan
   }
 
-  /** The GetItem / BatchGetItem shape, served on the driver
-    * ([[DynamoLocalScan]]): a plain row read of the base table whose
-    * pushed conjuncts pin the full primary key by `=`/`IN` to at most
-    * [[PageIndex.maxHashWindows]] keys, so its result is bounded by
-    * the key count. A Query (sort key open) stays a distributed scan:
-    * its result is unbounded.
+  /** A plain row read of the base table whose read is bounded at
+    * planning, served on the driver ([[DynamoLocalScan]]). Two shapes:
+    *  - GetItem / BatchGetItem: the pushed conjuncts pin the full
+    *    primary key by `=`/`IN` to at most [[PageIndex.maxHashWindows]]
+    *    keys, so the result is bounded by the key count;
+    *  - Query (layout 2): they pin the hash key by `=`/`IN` to at most
+    *    [[PageIndex.maxHashWindows]] values, the sort key open or
+    *    bounded, and the bytes the read can touch — the window's pages
+    *    of the owning shards plus those shards' journal
+    *    ([[LocalKVStore.sizeBytesWindows]]) — are at most
+    *    [[LocalKVStore.driverReadBytes]]. The bound protects driver
+    *    memory; the rows are the distributed reader's either way.
+    * A scan that declares its bucket layout for SPJ stays distributed.
+    * The decision reads the table's metadata once and lists its files
+    * at most once.
     */
-  private def pointRead: Boolean =
+  private def servedLocally(scan: DynamoScan): Boolean =
     limit.isEmpty && offset.isEmpty && topN.isEmpty && sample.isEmpty &&
-      aggs.isEmpty && grouped.isEmpty && opts.indexName.isEmpty && !opts.cdc &&
-      DynamoScan.pinnedKeyCount(pushed.toSeq,
-        new LocalKVStore(opts.path).describe(opts.tableName))
-        .exists(_ <= PageIndex.maxHashWindows)
+      aggs.isEmpty && grouped.isEmpty && opts.indexName.isEmpty && !opts.cdc && {
+        val store = new LocalKVStore(opts.path)
+        val meta = store.describe(opts.tableName)
+        val point =
+          DynamoScan.pinnedKeyCount(pushed.toSeq, meta).exists(_ <= PageIndex.maxHashWindows)
+        val windows =
+          if (point || meta.layout < 2) Nil
+          else PageIndex.deriveWindows(pushed.toSeq, meta.hashKey, meta.rangeKey)
+        lazy val (touched, total) = store.sizeBytesWindows(opts.tableName, meta,
+          scan.keyShards(store, meta).getOrElse((0 until meta.shards).toSet), windows)
+        (point || windows.nonEmpty && touched <= LocalKVStore.driverReadBytes) &&
+          !scan.declaresLayoutForSpj(meta, total)
+      }
 }
 
-/** A point read served on the driver. Spark plans a `LocalScan` as
-  * `LocalTableScanExec`, whose collect runs no job: [[rows]] runs the
-  * wrapped scan's own partitions through its own readers here, so the
-  * journal overlay, TTL, consistency, `asOfSeq`, pushed-filter
+/** A point read or bounded Query served on the driver
+  * ([[DynamoScanBuilder]]'s `servedLocally`). Spark plans a `LocalScan`
+  * as `LocalTableScanExec`, whose collect runs no job: [[rows]] runs
+  * the wrapped scan's own partitions through its own readers here, so
+  * the journal overlay, TTL, consistency, `asOfSeq`, pushed-filter
   * evaluation and the rate limiter are the distributed read's code.
   * The rows are taken when Spark builds the physical plan, like a file
   * source's listing: re-collecting the same DataFrame returns them
-  * again, and a new DataFrame sees later writes. No `itemsScanned`
-  * metric is reported (the node carries none). Statistics delegate, so
-  * a join against a point read still auto-broadcasts.
+  * again, and a new DataFrame sees later writes. The node carries no
+  * connector metric; the readers' `itemsScanned`/`itemsFiltered` of
+  * the last [[rows]] call are summed into [[itemsScanned]] and
+  * [[itemsFiltered]]. Statistics delegate, so a join against a point
+  * read still auto-broadcasts.
   */
 final class DynamoLocalScan private[dynamo] (scan: DynamoScan)
     extends LocalScan with SupportsReportStatistics {
+  @volatile private var counts = (0L, 0L)
+  def itemsScanned: Long = counts._1
+  def itemsFiltered: Long = counts._2
   override def readSchema(): StructType = scan.readSchema()
   override def description(): String = scan.description()
   override def estimateStatistics(): Statistics = scan.estimateStatistics()
   override def rows(): Array[InternalRow] = {
     val batch = scan.toBatch
     val factory = batch.createReaderFactory()
-    batch.planInputPartitions().flatMap { p =>
+    var scanned = 0L
+    var filtered = 0L
+    val taken = batch.planInputPartitions().flatMap { p =>
       val reader = factory.createReader(p)
       try {
         val out = Vector.newBuilder[InternalRow]
         while (reader.next()) out += reader.get().copy()
         out.result()
-      } finally reader.close()
+      } finally {
+        reader.currentMetricsValues().foreach { m =>
+          if (m.name == "itemsScanned") scanned += m.value
+          else if (m.name == "itemsFiltered") filtered += m.value
+        }
+        reader.close()
+      }
     }
+    counts = (scanned, filtered)
+    taken
   }
 }
 
@@ -1432,7 +1468,13 @@ object DynamoScan {
     * never what is read.
     */
   def fullScanSegments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions): Int =
-    segments(store, meta, opts, floor = sessionSlots)
+    fullScanSegments(meta, opts, store.sizeBytes(opts.tableName))
+
+  /** [[fullScanSegments]] over an already-listed stored size, read
+    * only when `readPartitions` is unset.
+    */
+  def fullScanSegments(meta: TableMeta, opts: DynamoOptions, tableBytes: => Long): Int =
+    segments(meta, opts, sessionSlots, tableBytes)
 
   /** The segment count the stored size alone asks for (no slot
     * floor): ONE exactly when neither `readPartitions` nor the stored
@@ -1442,13 +1484,13 @@ object DynamoScan {
     * is.
     */
   def sizeSegments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions): Int =
-    segments(store, meta, opts, floor = 1L)
+    segments(meta, opts, floor = 1L, store.sizeBytes(opts.tableName))
 
-  private def segments(store: LocalKVStore, meta: TableMeta, opts: DynamoOptions,
-      floor: Long): Int =
+  private def segments(meta: TableMeta, opts: DynamoOptions, floor: Long,
+      tableBytes: => Long): Int =
     opts.readPartitions.getOrElse(math.min(
       math.min(meta.shards, opts.defaultParallelism).toLong,
-      math.max(floor, store.sizeBytes(opts.tableName) / opts.maxPartitionBytes)).toInt)
+      math.max(floor, tableBytes / opts.maxPartitionBytes)).toInt)
 
   /** Task slots of the session planning the scan (driver side): a
     * table smaller than `slots * maxPartitionBytes` still spreads over
@@ -1801,7 +1843,11 @@ final class DynamoScan(
     * the same shard the store files use.
     */
   private def reportsPerShard(store: LocalKVStore, meta: TableMeta): Boolean =
-    DynamoScan.fullScanSegments(store, meta, opts) == meta.shards && opts.indexName.isEmpty &&
+    reportsPerShard(meta, store.sizeBytes(opts.tableName))
+
+  private def reportsPerShard(meta: TableMeta, tableBytes: => Long): Boolean =
+    DynamoScan.fullScanSegments(meta, opts, tableBytes) == meta.shards &&
+      opts.indexName.isEmpty &&
       !pinSingleSegment && // limit/offset full-push pins one merged segment
       // ungrouped-agg output isn't keyed; a KEYED grouped push is —
       // its rows (final or flushed partials) stay keyed by the
@@ -1823,15 +1869,13 @@ final class DynamoScan(
   }
 
   /** This scan declares the table's bucket layout to a session that
-    * joins on it shuffle-free. A driver-served point read
+    * joins on it shuffle-free. A driver-served read
     * ([[DynamoLocalScan]]) declares no layout, so the builder keeps
     * such a read distributed: its join partner would shuffle instead.
+    * `meta` and `tableBytes` are the builder's own metadata read.
     */
-  private[dynamo] def declaresLayoutForSpj: Boolean =
-    spjPadEnabled && {
-      val store = new LocalKVStore(opts.path)
-      reportsPerShard(store, store.describe(opts.tableName))
-    }
+  private[dynamo] def declaresLayoutForSpj(meta: TableMeta, tableBytes: => Long): Boolean =
+    spjPadEnabled && reportsPerShard(meta, tableBytes)
 
   /** Segment count = max(stored bytes / maxPartitionBytes, the
     * session's slots), clamped to the shard count and capped by
@@ -2829,7 +2873,7 @@ final class DynamoScan(
     * placement hashed hash|range. GSI reads never prune (index keys
     * don't determine base-shard placement).
     */
-  private def keyShards(store: LocalKVStore, meta: TableMeta): Option[Set[Int]] = {
+  private[dynamo] def keyShards(store: LocalKVStore, meta: TableMeta): Option[Set[Int]] = {
     // A secondary-index read's pins live in INDEX-key space and claim
     // nothing about base placement — EXCEPT a LOCAL index, whose hash
     // key IS the table's partition key: an LSI Query's hash pin

@@ -1691,6 +1691,56 @@ final class LocalKVStore(root: String) {
         sh == LocalKVStore.TxnShard || keep(sh)
       }.map(Files.size(_)).sum
 
+  /** [[sizeBytesShards]] for a Query read, and the table's total
+    * stored bytes ([[sizeBytes]]), from ONE directory pass: the bytes
+    * a read of the kept shards under the page `windows` can touch, by
+    * the rules [[scanSegmentTail]] reads with. Per kept base file, the
+    * pages of its directory that intersect its own windows
+    * ([[windowPages]]; the whole file when `windows` is empty or the
+    * directory is missing or stale); plus the kept shards' journal
+    * files and every transaction (`-sall`) file.
+    */
+  def sizeBytesWindows(table: String, meta: TableMeta, keep: Set[Int],
+      windows: Seq[PageIndex.KeyWindow]): (Long, Long) = {
+    var touched = 0L
+    var total = 0L
+    listFiles(table, "").foreach { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith("shard-")) {
+        val size = Files.size(p)
+        total += size
+        if (keep(shardIndex(p)))
+          touched += windowPages(p, meta, windows).fold(size)(_.pages.map(_.len).sum)
+      } else if (name.startsWith("wal-")) {
+        val size = Files.size(p)
+        total += size
+        val sh = walShard(p)
+        if (sh == LocalKVStore.TxnShard || keep(sh)) touched += size
+      }
+    }
+    (touched, total)
+  }
+
+  /** Base file `p`'s page directory narrowed to the pages the Query
+    * `windows` intersect. Under partition-key placement a window's
+    * hash names its shard, so a shard owning no window holds no key
+    * inside any window: its narrowed directory has no pages and none
+    * of its base is read. None = no windows, or no valid directory
+    * (missing, stale or unparsable): the whole file is read.
+    */
+  private def windowPages(p: Path, meta: TableMeta,
+      windows: Seq[PageIndex.KeyWindow]): Option[PageIndex.ShardIndex] = {
+    if (windows.isEmpty) return None
+    val own =
+      if (meta.layout < 2) windows
+      else windows.filter(w =>
+        math.floorMod(w.hashEnc.hashCode, meta.shards) == shardIndex(p))
+    if (own.isEmpty) Some(PageIndex.ShardIndex(0L, 0L, Vector.empty))
+    else PageIndex.load(p.resolveSibling(f"pageidx-s${shardIndex(p)}%03d.jsonl"), p)
+      .map(idx => idx.copy(pages =
+        idx.pages.filter(pg => own.exists(PageIndex.intersects(pg, _)))))
+  }
+
   // ---- primary key handling ----
 
   private def encKeyAttr(a: AttrVal): String = LocalKVStore.encKeyAttr(a)
@@ -3113,26 +3163,9 @@ final class LocalKVStore(root: String) {
     // absent-normal-form, carrying the same out-of-window key attrs
     // the caller's filters reject.
     val baseItems = shardFiles.iterator.flatMap { p =>
-      // Under partition-key placement a window's hash names its shard
-      // (the shard of the pinned key): a shard owning no window holds
-      // no key inside any window, so none of its base is read.
-      val own =
-        if (meta.layout < 2) windows
-        else windows.filter(w =>
-          math.floorMod(w.hashEnc.hashCode, meta.shards) == shardIndex(p))
-      val paged =
-        if (windows.isEmpty) None
-        else if (own.isEmpty) Some(Iterator.empty)
-        else {
-          val idxPath = p.resolveSibling(
-            f"pageidx-s${shardIndex(p)}%03d.jsonl")
-          PageIndex.load(idxPath, p).flatMap { idx =>
-            PageIndex.readPages(p, idx.pages.filter(pg =>
-              own.exists(PageIndex.intersects(pg, _))),
-              idx.fileBytes, idx.mtimeNanos)
-          }
-        }
-      paged.getOrElse(streamLines(p))
+      windowPages(p, meta, windows)
+        .flatMap(idx => PageIndex.readPages(p, idx.pages, idx.fileBytes, idx.mtimeNanos))
+        .getOrElse(streamLines(p))
     }.flatMap { line =>
       val item = ItemJson.parse(line)
       val k = keyOf(meta, item)
@@ -3159,7 +3192,7 @@ final class LocalKVStore(root: String) {
   /** First ~1 MB of items — schema-inference sample (A6), mirroring
     * the reference's one-page sample scan.
     */
-  def samplePage(table: String, maxBytes: Int = 1 << 20,
+  def samplePage(table: String, maxBytes: Int = LocalKVStore.driverReadBytes,
       asOfSeq: Option[Long] = None): Seq[Item] = {
     val it = scanSegment(table, 0, 1, asOfSeq)
     val out = Vector.newBuilder[Item]
@@ -3187,15 +3220,27 @@ final class LocalKVStore(root: String) {
     * page sizes go straight through.
     */
   def samplePageCached(table: String,
-      asOfSeq: Option[Long] = None): Seq[Item] = {
+      asOfSeq: Option[Long] = None): Seq[Item] =
+    sampleEntry(table, asOfSeq).items
+
+  /** `Codec.inferSchema` of [[samplePageCached]]'s page, held in the
+    * same cache entry: inferred once per sampled version instead of
+    * on every `load()`.
+    */
+  def sampleSchemaCached(table: String,
+      asOfSeq: Option[Long] = None): org.apache.spark.sql.types.StructType =
+    sampleEntry(table, asOfSeq).schema
+
+  private def sampleEntry(table: String,
+      asOfSeq: Option[Long]): LocalKVStore.SampleEntry = {
     val key = (root, table, asOfSeq)
     val ver = viewVersion(table)
     val cache = LocalKVStore.sampleCache
     val hit = cache.synchronized(cache.get(key))
-    if (hit != null && hit._1 == ver) hit._2
+    if (hit != null && hit.version == ver) hit
     else {
-      val fresh = samplePage(table, asOfSeq = asOfSeq)
-      cache.synchronized(cache.put(key, (ver, fresh)))
+      val fresh = new LocalKVStore.SampleEntry(ver, samplePage(table, asOfSeq = asOfSeq))
+      cache.synchronized(cache.put(key, fresh))
       fresh
     }
   }
@@ -4306,20 +4351,34 @@ object LocalKVStore {
     */
   val TxnShard: Int = -1
 
+  /** The most bytes a read on the driver takes: the schema-inference
+    * sample page ([[LocalKVStore.samplePage]]) and the bound under
+    * which a Query is served on the driver (`DynamoLocalScan`).
+    */
+  val driverReadBytes: Int = 1 << 20
+
+  /** One sampled version of a table: the sample page, and the schema
+    * inferred from it on first use.
+    */
+  private[graft] final class SampleEntry(val version: String, val items: Seq[Item]) {
+    lazy val schema: org.apache.spark.sql.types.StructType = Codec.inferSchema(items)
+  }
+
   /** [[LocalKVStore.samplePageCached]]'s backing map:
-    * (root, table, asOfSeq) → (viewVersion at sampling time, sample).
-    * A new version REPLACES the entry, so the map never grows with
-    * mutation history; distinct snapshots, roots and dropped tables do
-    * add entries, so it keeps the [[sampleCacheEntries]] most recently
-    * used (each sample is the inference page, ≤ ~1 MB of parsed items).
-    * Accessed under its own lock.
+    * (root, table, asOfSeq) → the [[SampleEntry]] of the viewVersion
+    * at sampling time. A new version REPLACES the entry, so the map
+    * never grows with mutation history; distinct snapshots, roots and
+    * dropped tables do add entries, so it keeps the
+    * [[sampleCacheEntries]] most recently used (each sample is the
+    * inference page, ≤ ~1 MB of parsed items). Accessed under its own
+    * lock.
     */
   private[graft] val sampleCacheEntries = 64
   private[graft] val sampleCache =
-    new java.util.LinkedHashMap[(String, String, Option[Long]), (String, Seq[Item])](
+    new java.util.LinkedHashMap[(String, String, Option[Long]), SampleEntry](
         16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Option[Long]), (String, Seq[Item])]): Boolean =
+          e: java.util.Map.Entry[(String, String, Option[Long]), SampleEntry]): Boolean =
         size > sampleCacheEntries
     }
 

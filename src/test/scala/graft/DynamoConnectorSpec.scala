@@ -6423,6 +6423,18 @@ class DynamoConnectorSpec extends AnyFunSuite {
     new LocalKVStore(root).compact(table)
   }
 
+  /** The driver-served scan of `df`'s plan: the `DynamoLocalScan` in
+    * its optimized plan, whose item counts are those of the rows that
+    * physical planning took.
+    */
+  private def servedScan(df: org.apache.spark.sql.DataFrame): graft.sources.dynamo.DynamoLocalScan = {
+    df.queryExecution.executedPlan
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.collectFirst { case s: graft.sources.dynamo.DynamoLocalScan => s }
+      .getOrElse(fail("no driver-served scan in the plan"))
+  }
+
   test("Query fast path: hash-eq + sort-key range reads only the matching pages of one shard") {
     val root = freshRoot()
     seedQueryTable(root, "qt")
@@ -6433,8 +6445,7 @@ class DynamoConnectorSpec extends AnyFunSuite {
       p.getFileName.toString.startsWith("pageidx-")).count()
     finally pidx.close()
     assert(nIdx > 0, "compaction should write page-directory sidecars")
-    // no orderBy: a shuffle would wrap the scan in AQE query stages
-    // and hide the BatchScan leaf from the metric lookup below
+    // a bounded Query: served on the driver, its count on the served scan
     val df = spark.read.dynamo(root, "qt")
       .filter(col("k") === "b" && col("r").between(100, 150))
       .select("k", "r", "payload")
@@ -6448,11 +6459,8 @@ class DynamoConnectorSpec extends AnyFunSuite {
     // table 6000; a 51-row window at ≤256-item pages must read ≤ 2
     // pages. itemsScanned well under one hash run proves BOTH the
     // single-shard plan and the sub-shard page skip.
-    val scan = df.queryExecution.executedPlan.collectLeaves()
-      .find(_.nodeName.contains("BatchScan"))
-      .getOrElse(fail("no BatchScan node in the final plan"))
-    val scanned = scan.metrics("itemsScanned").value
-    assert(scanned <= 600, s"expected a paged read, scanned $scanned items")
+    val scanned = servedScan(df).itemsScanned
+    assert(scanned > 0 && scanned <= 600, s"expected a paged read, scanned $scanned items")
   }
 
   test("Query fast path: journal overlay over skipped pages stays exact") {
@@ -6522,10 +6530,9 @@ class DynamoConnectorSpec extends AnyFunSuite {
     assert(got.length === 2 * 61)
     assert(got.forall { case (k, r) => (k == "a" || k == "c") && r >= 200 && r <= 260 })
     // two hash runs of 1500 items each; two ≤256-item pages per run
-    val scan = df.queryExecution.executedPlan.collectLeaves()
-      .find(_.nodeName.contains("BatchScan")).getOrElse(fail("no BatchScan"))
-    assert(scan.metrics("itemsScanned").value <= 1200,
-      s"expected paged reads in both runs, scanned ${scan.metrics("itemsScanned").value}")
+    val scanned = servedScan(df).itemsScanned
+    assert(scanned > 0 && scanned <= 1200,
+      s"expected paged reads in both runs, scanned $scanned")
   }
 
   test("GSI Query: index-sort-key window prunes the materialized copy's pages") {
@@ -7517,6 +7524,13 @@ class DynamoConnectorSpec extends AnyFunSuite {
       .toDF("h", "r", "n", "exp", "v").write.format("dynamo")
       .option("path", root).option("tableName", "po")
       .option("hashKey", "h").option("rangeKey", "r").mode("append").save()
+    // composite `pq` with a string sort key, for `begins_with`
+    def pqHash(h: Long): String = s"g$h"
+    (0 until n).map(i => (pqHash(i % 20), f"r$i%04d", i.toLong, exp(i), s"v$i"))
+      .toDF("h", "r", "n", "exp", "v").write.format("dynamo")
+      .option("path", root).option("tableName", "pq")
+      .option("hashKey", "h").option("rangeKey", "r").mode("append").save()
+    val tables = Seq("pc", "po", "pq")
     val rnd = new scala.util.Random(7)
     def pcKey(i: Int): String = f"k$i%04d"
     // full-key pins: `=`, IN of up to 64 keys, absent keys, keys on
@@ -7537,19 +7551,46 @@ class DynamoConnectorSpec extends AnyFunSuite {
           (s"IN ${hs.size}x${rs.size}", col("h").isin(hs: _*) && col("r").isin(rs: _*))
       }
     }
+    // Query pins: the hash key by `=`/IN (absent values included), the
+    // sort key open or bounded
+    def queryPins(table: String): Seq[(String, Column)] = {
+      val hs = Seq.fill(3)(rnd.nextInt(44).toLong).distinct
+      val a = rnd.nextInt(n).toLong
+      table match {
+        case "po" => Seq(
+          "Query open" -> (col("h") === hs.head),
+          "Query BETWEEN" -> (col("h") === hs.head && col("r").between(a, a + 120)),
+          "Query > <=" -> (col("h") === hs.head && col("r") > a && col("r") <= a + 200),
+          s"Query IN ${hs.size}" -> col("h").isin(hs: _*),
+          s"Query IN ${hs.size} >=" -> (col("h").isin(hs: _*) && col("r") >= a))
+        case "pq" =>
+          val prefix = f"r${a / 100}%02d"
+          Seq(
+            "Query open" -> (col("h") === pqHash(hs.head % 22)),
+            "Query begins_with" ->
+              (col("h") === pqHash(hs.head % 22) && col("r").startsWith(prefix)),
+            s"Query IN ${hs.size} begins_with" ->
+              (col("h").isin(hs.map(h => pqHash(h % 22)): _*) && col("r").startsWith(prefix)),
+            "Query BETWEEN" -> (col("h") === pqHash(hs.head % 22) &&
+              col("r").between(f"r$a%04d", f"r${a + 150}%04d")))
+        case _ => Nil
+      }
+    }
+    def allPins(table: String): Seq[(String, Column)] =
+      (if (table == "pq") Nil else pins(table)) ++ queryPins(table)
     def read(table: String, opts: Map[String, String]): DataFrame =
       spark.read.format("dynamo").option("path", root).option("tableName", table)
         .options(opts).load()
     def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
     def checkState(state: String, optionSets: Seq[(String, Map[String, String])]): Unit =
-      for ((optName, opts) <- optionSets; table <- Seq("pc", "po"); meta <- Seq(false, true)) {
+      for ((optName, opts) <- optionSets; table <- tables; meta <- Seq(false, true)) {
         val dataCols = read(table, opts).columns.toSeq
         val cols = (if (meta) dataCols ++ Seq("_shard", "_size") else dataCols).map(col)
         val fullRows = read(table, opts + ("filterPushdown" -> "false")).select(cols: _*).collect()
         val full = spark.createDataFrame(
           java.util.Arrays.asList(fullRows: _*), fullRows.headOption.fold(
             read(table, opts).select(cols: _*).schema)(_.schema))
-        pins(table).foreach { case (pinName, pin) =>
+        allPins(table).foreach { case (pinName, pin) =>
           val served = read(table, opts).select(cols: _*).filter(pin)
           val what = s"$state / $optName / $table / $pinName / meta=$meta"
           assert(scanNodes(served) === ((1, 0)), s"$what: not served locally")
@@ -7563,7 +7604,7 @@ class DynamoConnectorSpec extends AnyFunSuite {
       "strongly consistent" -> Map("stronglyConsistentReads" -> "true"),
       "consistentScan" -> Map("consistentScan" -> "true"))
     checkState("journal-only", common)
-    Seq("pc", "po").foreach(store.compact)
+    tables.foreach(store.compact)
     checkState("compacted", common)
     // journal over base: updates, deletes and new keys, in two files
     // so an asOfSeq cut between them hides the second
@@ -7571,6 +7612,9 @@ class DynamoConnectorSpec extends AnyFunSuite {
       "n" -> AttrVal.N(BigDecimal(i)), "exp" -> AttrVal.N(BigDecimal(exp(i))), "v" -> AttrVal.S(v))
     def poItem(i: Int, v: String): Map[String, AttrVal] = Map(
       "h" -> AttrVal.N(BigDecimal(i % 40)), "r" -> AttrVal.N(BigDecimal(i)),
+      "n" -> AttrVal.N(BigDecimal(i)), "exp" -> AttrVal.N(BigDecimal(exp(i))), "v" -> AttrVal.S(v))
+    def pqItem(i: Int, v: String): Map[String, AttrVal] = Map(
+      "h" -> AttrVal.S(pqHash(i % 20)), "r" -> AttrVal.S(f"r$i%04d"),
       "n" -> AttrVal.N(BigDecimal(i)), "exp" -> AttrVal.N(BigDecimal(exp(i))), "v" -> AttrVal.S(v))
     def pubSeqs(t: String): Seq[Long] =
       store.walFileNames(t).map(_.stripPrefix("wal-").takeWhile(_ != '-').toLong)
@@ -7580,15 +7624,19 @@ class DynamoConnectorSpec extends AnyFunSuite {
     store.appendWal("po", 1L, "j1", (0 until n + 40 by 5).map(i =>
       if (i % 10 == 0) store.Delete(poItem(i, "").filter(kv => kv._1 == "h" || kv._1 == "r"))
       else store.Update(poItem(i, s"j1-$i"))))
-    val cuts = Seq("pc", "po").map(t => t -> pubSeqs(t).max).toMap
+    store.appendWal("pq", 1L, "j1", (0 until n + 40 by 5).map(i =>
+      if (i % 10 == 0) store.Delete(pqItem(i, "").filter(kv => kv._1 == "h" || kv._1 == "r"))
+      else store.Put(pqItem(i, s"j1-$i"))))
+    val cuts = tables.map(t => t -> pubSeqs(t).max).toMap
     store.appendWal("pc", 2L, "j2", (1 until n + 40 by 7).map(i => store.Put(pcItem(i, s"j2-$i"))))
     store.appendWal("po", 2L, "j2", (1 until n + 40 by 7).map(i => store.Update(poItem(i, s"j2-$i"))))
+    store.appendWal("pq", 2L, "j2", (1 until n + 40 by 7).map(i => store.Update(pqItem(i, s"j2-$i"))))
     assert(cuts.forall { case (t, c) => pubSeqs(t).max > c })
     checkState("journal over base", common)
     // one cut per table: the two tables' journals carry their own pubSeqs
-    Seq("pc", "po").foreach { t =>
+    tables.foreach { t =>
       val opts = Map("asOfSeq" -> cuts(t).toString)
-      pins(t).foreach { case (pinName, pin) =>
+      allPins(t).foreach { case (pinName, pin) =>
         val served = read(t, opts).filter(pin)
         assert(scanNodes(served) === ((1, 0)), s"asOfSeq / $t / $pinName: not served locally")
         val fullRows = read(t, opts + ("filterPushdown" -> "false")).collect()
@@ -7603,7 +7651,7 @@ class DynamoConnectorSpec extends AnyFunSuite {
 
   test("point-read plan shape: full-key pins run no job; other shapes stay BatchScan") {
     import spark.implicits._
-    import graft.sources.dynamo.IndexMeta
+    import graft.sources.dynamo.{AttrVal, IndexMeta}
     val root = freshRoot()
     (0 until 300).map(i => (f"k$i%04d", i.toLong, s"c${i % 5}"))
       .toDF("id", "n", "c").write.dynamo(root, "ph", "id")
@@ -7625,12 +7673,54 @@ class DynamoConnectorSpec extends AnyFunSuite {
     assert(scanNodes(getComposite) === ((1, 0)))
     assert(jobsDuring(assert(getComposite.collect().map(_.getAs[Long]("n")).toSeq ===
       Seq(37L))) === 0)
+    // the Query shape: a hash pin on a range table, sort key open
+    val query = pr.filter(col("h") === 7L)
+    assert(scanNodes(query) === ((1, 0)))
+    assert(jobsDuring(assert(query.collect().map(_.getAs[Long]("r")).sorted.toSeq ===
+      (7L until 300L by 30L))) === 0)
     // the counter does see jobs: the same read distributed runs one
     val distributed = ph.filter(col("id") === "k0007").limit(1)
     assert(jobsDuring(distributed.collect()) >= 1)
+    // Queries whose bytes pass the 1 MiB driver-read bound, over
+    // compacted 16-shard tables (items of ~420 bytes)
+    val store = new LocalKVStore(root)
+    val pad = "x" * 400
+    def item(h: String, r: Int): Map[String, AttrVal] = Map("h" -> AttrVal.S(h),
+      "r" -> AttrVal.N(BigDecimal(r)), "p" -> AttrVal.S(pad))
+    val meta16 = TableMeta("h", Some("r"), shards = 16, throughput = 1000000L)
+    def shard(h: String): Int = store.shardOf(meta16, Map("h" -> AttrVal.S(h)))
+    // hash values sharing one shard with `h`
+    def neighbours(h: String, n: Int): Seq[String] =
+      Iterator.from(0).map(i => s"n$i").filter(g => g != h && shard(g) == shard(h)).take(n).toSeq
+    def q(t: String) = spark.read.dynamo(root, t)
+    // one hash group of ~1.3 MB: its window pages pass the bound, a
+    // sort-key range within it does not
+    store.bulkLoad("hot", meta16, (Iterator.range(0, 3000).map(item("hot", _)) ++
+      Iterator.range(0, 5).map(item("cold", _))))
+    val hotRange = q("hot").filter(col("h") === "hot" && col("r").between(10, 20))
+    assert(scanNodes(hotRange) === ((1, 0)))
+    assert(jobsDuring(assert(hotRange.collect().length === 11)) === 0)
+    assert(scanNodes(q("hot").filter(col("h") === "cold")) === ((1, 0)))
+    // a small group whose owning shard's journal passes the bound
+    store.bulkLoad("jr", meta16, Iterator.range(0, 5).map(item("j", _)))
+    assert(scanNodes(q("jr").filter(col("h") === "j")) === ((1, 0)))
+    store.appendWal("jr", 1L, "w", neighbours("j", 30).flatMap(g =>
+      (0 until 100).map(r => store.Put(item(g, r)))))
+    // a small group in a base shard of ~1.3 MB whose page directory
+    // goes stale: the whole base file counts
+    store.bulkLoad("st", meta16, Iterator.range(0, 5).map(item("s", _)) ++
+      neighbours("s", 30).iterator.flatMap(g => Iterator.range(0, 100).map(item(g, _))))
+    val stale = q("st").filter(col("h") === "s")
+    assert(scanNodes(stale) === ((1, 0)))
+    val base = java.nio.file.Paths.get(root, "st", f"shard-${shard("s")}%03d.jsonl")
+    assert(Files.size(base) > (1L << 20))
+    Files.setLastModifiedTime(base, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(base).toMillis + 5000L))
     // declined shapes keep the distributed scan
     val declined = Seq(
-      "hash-only pin on a range table" -> pr.filter(col("h") === 7L),
+      "hash group over 1 MiB" -> q("hot").filter(col("h") === "hot"),
+      "owning shard's journal over 1 MiB" -> q("jr").filter(col("h") === "j"),
+      "stale directory over a base of 1 MiB" -> q("st").filter(col("h") === "s"),
       "more than 64 keys" -> ph.filter(col("id").isin((0 until 65).map(i => f"k$i%04d"): _*)),
       "indexName" -> spark.read.format("dynamo").option("path", root)
         .option("tableName", "ph").option("indexName", "by_c").load()
@@ -7645,6 +7735,7 @@ class DynamoConnectorSpec extends AnyFunSuite {
       assert(scanNodes(df)._1 === 0, s"$name: must not be served locally")
       df.collect()
     }
+    assert(declined.take(3).map(_._2.count()) === Seq(3000L, 5L, 5L))
     // a join against a point read still sees its statistics and broadcasts
     val joined = ph.join(get.select(col("id"), col("n").as("n2")), "id")
     val plan = joined.queryExecution.executedPlan.toString

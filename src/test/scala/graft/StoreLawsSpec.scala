@@ -2335,6 +2335,30 @@ class StoreLawsSpec extends AnyFunSuite {
     assert(cache.synchronized(cache.size) === bound)
   }
 
+  test("LAW: the cached sample schema equals a fresh inference after any writes, deletes and compactions") {
+    import graft.sources.dynamo.Codec
+    forAll(genScenario) { case (base, jobs) =>
+      val root = Files.createTempDirectory("graft-schema-cache").toString
+      val store = new LocalKVStore(root)
+      store.bulkLoad("t", TableMeta("id", None, shards = 4, throughput = 1000000L),
+        base.map(_._2).iterator)
+      def check(what: String): Unit = {
+        val fresh = Codec.inferSchema(store.samplePage("t"))
+        assert(store.sampleSchemaCached("t") === fresh, what)
+        assert(store.sampleSchemaCached("t") === fresh, s"$what (cache hit)")
+      }
+      check("bulk load")
+      jobs.zipWithIndex.foreach { case (ops, j) =>
+        store.appendWal("t", seq = j.toLong, writerId = f"w$j%03d", ops.map(toOp(store)))
+        check(s"after job $j")
+        if (j % 2 == 1) {
+          store.compact("t")
+          check(s"after job $j and a compaction")
+        }
+      }
+    }
+  }
+
   // ---- zone-map accumulation: the builder against the reference fold ----
 
   /** Attribute names: ten common ones, and enough others that a wide
