@@ -21,39 +21,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The bench contract is local[32]; honor it when the driver does
-    // not pin SPARK_GRAFT_CPUS (a 4-thread run reads ~60% slower and
-    // would masquerade as a regression against 32-thread baselines).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // uniform for the whole run (q_dyn_spj / q_dyn_spj_pruned would
-      // otherwise flip them mid-run and make later timings
-      // order-dependent)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      // Generated-code compile cache sized for this suite (round 18):
-      // the default 100-entry LRU cannot hold even ONE large plan's
-      // codegen units (q_sim_ivf_pq alone compiles dozens per
-      // execution), so repeated materializations re-ran Janino every
-      // rep — measured 4.38 s → 1.96 s min-of-6 on that key from this
-      // config alone. Driver-side and scale-independent (compiled
-      // classes are KB-sized; the cache is an upper bound, not an
-      // allocation). FRESH-JVM requirement (round-19 advisor note):
-      // the conf is read once when the JVM-static codegen cache first
-      // initializes, so in a JVM where codegen already ran under
-      // another session (e.g. sbt tests before a runMain) the setting
-      // is silently ignored — the bench mains fork a fresh JVM, which
-      // is what makes it effective; a shared-JVM run losing the win is
-      // not a regression.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Uncounted warmup: JIT/codegen/parquet-reader init would otherwise
-    // land entirely on whichever query happens to run first.
-    spark.range(1000000).selectExpr("sum(id) s").collect()
+    val spark = session()
     spark.read.parquet(s"$sfDir/nation.parquet")
       .groupBy("n_regionkey").count().collect()
     // Connector first-touch warmup: store seeding (cold /tmp), schema
@@ -335,5 +303,48 @@ object Bench {
     }
     println(digest)
     spark.stop()
+  }
+
+  /** The session every bench and plan main runs in: `local[N]` with
+    * N = SPARK_GRAFT_CPUS, the confs below, WARN logging, and one
+    * uncounted warm-up job, so the timings and plans of [[Bench]],
+    * [[BenchOne]], [[BenchSeq]] and [[ExplainExec]] describe one
+    * session shape.
+    */
+  def session(): SparkSession = {
+    // The bench contract is local[32]; honor it when SPARK_GRAFT_CPUS
+    // is unset (a 4-thread run reads ~60% slower and would masquerade
+    // as a regression against 32-thread baselines).
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // uniform for the whole run (q_dyn_spj / q_dyn_spj_pruned would
+      // otherwise flip them mid-run and make later timings
+      // order-dependent)
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      // Generated-code compile cache sized for this suite:
+      // the default 100-entry LRU cannot hold even ONE large plan's
+      // codegen units (q_sim_ivf_pq alone compiles dozens per
+      // execution), so repeated materializations re-ran Janino every
+      // rep — measured 4.38 s → 1.96 s min-of-6 on that key from this
+      // config alone. Driver-side and scale-independent (compiled
+      // classes are KB-sized; the cache is an upper bound, not an
+      // allocation). FRESH-JVM requirement: the conf is read once
+      // when the JVM-static codegen cache first initializes, so in a
+      // JVM where codegen already ran under another session (e.g. sbt
+      // tests before a runMain) the setting is silently ignored — the
+      // bench mains fork a fresh JVM, which is what makes it
+      // effective; a shared-JVM run losing the win is not a
+      // regression.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Uncounted warmup: JIT/codegen/parquet-reader init would otherwise
+    // land entirely on whichever query happens to run first.
+    spark.range(1000000).selectExpr("sum(id) s").collect()
+    spark
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time one query by key: `runMain graft.BenchOne <key> [reps]` — the
   * same session shape and materializer as [[Bench]], for focused
   * optimization work without the full inventory run. Prints one line
@@ -13,17 +11,7 @@ object BenchOne {
       throw new IllegalArgumentException("usage: BenchOne <queryKey> [reps]"))
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id) s").collect()
+    val spark = Bench.session()
     val fn = SparkEntry.queries.getOrElse(key,
       throw new IllegalArgumentException(s"no query '$key'"))
     val times = (1 to reps).map { i =>

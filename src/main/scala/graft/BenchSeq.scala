@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a sequence of query keys in order with the same session shape
   * as [[Bench]] — for diagnosing order-dependent interference between
   * bench keys: `runMain graft.BenchSeq k1 k2 k3 ...` times each key
@@ -15,19 +13,7 @@ import org.apache.spark.sql.SparkSession
 object BenchSeq {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Same default as Bench: a diagnosis run must reproduce the bench's
-    // parallelism or its timings explain nothing.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id) s").collect()
+    val spark = Bench.session()
     val results = args.map { key =>
       val fn = SparkEntry.queries(key)
       val times = (1 to 2).map { _ =>

@@ -6,16 +6,17 @@ import org.apache.spark.sql.connector.read.SupportsReportPartitioning
 import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
-import graft.sources.dynamo.DynamoLocalScan
+import graft.sources.dynamo.{DynamoGroupAnswerPartition, DynamoLocalScan, DynamoZoneAnswerPartition}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional args
   * past (sfDir, outDir) restrict the dump to those query names (a name
   * ending in `*` selects every key with that prefix) — dev-loop
   * convenience; the driver always runs the full set. With
   * SPARK_GRAFT_LAYOUT_OUT set, each dumped key also appends
-  * `<name>\t<n>\t<l>` to that file, n = its connector scans that
+  * `<name>\t<n>\t<l>\t<a>` to that file, n = its connector scans that
   * report a key-grouped (bucket) layout at this session width, l = its
-  * connector point reads served on the driver (`LocalTableScanExec`). */
+  * connector point reads served on the driver (`LocalTableScanExec`),
+  * a = its connector scans that plan a statistics-answer partition. */
 object Verify extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
@@ -47,7 +48,7 @@ object Verify extends AdaptiveSparkPlanHelper {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         layoutOut.foreach(p => Files.writeString(p,
-          s"$name\t${keyGroupedScans(df)}\t${locallyServedScans(df)}\n",
+          s"$name\t${keyGroupedScans(df)}\t${locallyServedScans(df)}\t${answeredScans(df)}\n",
           StandardOpenOption.CREATE, StandardOpenOption.APPEND))
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -78,6 +79,16 @@ object Verify extends AdaptiveSparkPlanHelper {
           s.outputPartitioning().isInstanceOf[KeyGroupedPartitioning]
         case _ => false
       }
+
+  /** Scans whose planned partitions include a statistics answer
+    * (zone maps or page statistics, zero items read).
+    */
+  private def answeredScans(df: DataFrame): Int =
+    collectWithSubqueries(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      .count(_.inputPartitions.exists {
+        case _: DynamoZoneAnswerPartition | _: DynamoGroupAnswerPartition => true
+        case _ => false
+      })
 
   /** The physical `LocalTableScanExec` does not name its source, so
     * the driver-served connector reads are counted on the optimized

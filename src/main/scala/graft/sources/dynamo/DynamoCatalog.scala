@@ -600,7 +600,6 @@ private object DynamoProcedures {
       require(topN > 0, "top_n must be positive")
       val store = new LocalKVStore(root)
       val meta = store.describe(t)
-      val dir = java.nio.file.Paths.get(root, t)
       // stored volume per key, from pure pages (minH == maxH); a
       // hash-only table holds one item per key, so none of its keys
       // can own a page and its directory is not consulted
@@ -608,8 +607,7 @@ private object DynamoProcedures {
         var shard: Int = -1, var writes: Long = 0L)
       val byKey = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
       if (meta.rangeKey.isDefined) (0 until meta.shards).foreach { sh =>
-        PageIndex.load(dir.resolve(f"pageidx-s$sh%03d.jsonl"),
-            dir.resolve(f"shard-$sh%03d.jsonl")).foreach { idx =>
+        store.pageDirectory(t, sh, None).foreach { idx =>
           idx.pages.foreach { p =>
             if (p.minH == p.maxH) {
               val a = byKey.getOrElseUpdate(p.minH, Acc())

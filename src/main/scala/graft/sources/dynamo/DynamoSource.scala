@@ -1476,6 +1476,14 @@ object DynamoScan {
   def fullScanSegments(meta: TableMeta, opts: DynamoOptions, tableBytes: => Long): Int =
     segments(meta, opts, sessionSlots, tableBytes)
 
+  /** One partition's share of the read (or write) budget —
+    * `targetCapacity` × the table's throughput — across `n`
+    * concurrent partitions, floored at 0.1 units/s.
+    */
+  def partitionRate(opts: DynamoOptions, meta: TableMeta, n: Int): Double =
+    math.max(0.1, opts.targetCapacity *
+      opts.throughput.getOrElse(meta.throughput).toDouble / math.max(1, n))
+
   /** The segment count the stored size alone asks for (no slot
     * floor): ONE exactly when neither `readPartitions` nor the stored
     * bytes ask for more. The pushed LIMIT/OFFSET promise
@@ -1846,8 +1854,7 @@ final class DynamoScan(
     reportsPerShard(meta, store.sizeBytes(opts.tableName))
 
   private def reportsPerShard(meta: TableMeta, tableBytes: => Long): Boolean =
-    DynamoScan.fullScanSegments(meta, opts, tableBytes) == meta.shards &&
-      opts.indexName.isEmpty &&
+    opts.indexName.isEmpty &&
       !pinSingleSegment && // limit/offset full-push pins one merged segment
       // ungrouped-agg output isn't keyed; a KEYED grouped push is —
       // its rows (final or flushed partials) stay keyed by the
@@ -1856,7 +1863,9 @@ final class DynamoScan(
       // bounded partial push — still reuse the layout
       ((aggs.isEmpty && grouped.isEmpty) || grouped.exists(_.keyed)) &&
       !opts.cdc &&
-      DynamoScan.placementCols(meta).forall(readSchema().fieldNames.contains)
+      DynamoScan.placementCols(meta).forall(readSchema().fieldNames.contains) &&
+      // last: the only conjunct that may read the store
+      DynamoScan.fullScanSegments(meta, opts, tableBytes) == meta.shards
 
   /** The session opted into partially-clustered storage-partitioned
     * joins (both `v2.bucketing` confs), the condition for the SPJ pad
@@ -1908,7 +1917,8 @@ final class DynamoScan(
     // copy) to the live base fold.
     opts.indexName.foreach(ix =>
       meta.indexes.get(ix).foreach(DynamoScan.rejectGsiConsistent(opts, _)))
-    val throughput = opts.throughput.getOrElse(meta.throughput).toDouble
+    // one partition's share of the scan's read budget over n partitions
+    def rate(n: Int): Double = DynamoScan.partitionRate(opts, meta, n)
     // Consistent parallel scan: capture the journal listing ONCE here
     // (driver side) and pin it into every base-path partition — all
     // tasks and all task RETRIES replay the same snapshot. Index
@@ -1924,198 +1934,9 @@ final class DynamoScan(
     // what key-shard pruning or a size re-read would now say — a
     // re-split after the promise would count/skip PER segment,
     // silently wrong once Spark dropped its own operator.
-    if (pinSingleSegment) {
-      val rate = math.max(0.1, opts.targetCapacity * throughput)
-      return Array(DynamoInputPartition(0, 1, rate, pinnedWal = pin))
-    }
-    // Zone-map-ANSWERED aggregates: when the aggregation is
-    // min/max/count/integral-sum-only with nothing below it that
-    // stats cannot see (no filters of any kind, no sample, no
-    // TTL/snapshot/GSI/CDC view), the CLEAN shards — no journal
-    // files, so their base sidecars (bulk load / compaction) describe
-    // them exactly — fold into ONE metadata partition, and only the
-    // journal-DIRTY shards plan scan segments; Spark folds the
-    // answered partial with the scanned ones. At 100 TB,
-    // `SELECT min(ts), max(ts) FROM t` under ongoing writes costs
-    // O(shards) sidecar reads plus a scan of just the hot shards —
-    // the Parquet-footer-statistics move, applied to the store.
-    // Declines (normal scan) whenever any per-attribute subtlety
-    // (values a typed decode would reject or coerce, out-of-range
-    // numerics) makes the folded stats inexact.
-    if (aggs.nonEmpty && grouped.isEmpty && opts.indexName.isEmpty &&
-        !opts.cdc && opts.asOfSeq.isEmpty && opts.ttlAttribute.isEmpty &&
-        opts.zonePruning && sample.isEmpty &&
-        pushed.isEmpty && adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
-        aggs.forall {
-          case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
-          case PushedAgg.CountAll | _: PushedAgg.CountOf => true
-          case PushedAgg.SumOf(_, LongType) => true // exact; double sums are order-sensitive
-          case PushedAgg.SumOf(_, _: DecimalType) => true // exact too
-          case _ => false
-        }) {
-      zoneAnswerPlan(store, meta).foreach { case (vals, scanShards) =>
-        val rate = math.max(0.1,
-          opts.targetCapacity * throughput / math.max(1, scanShards.size))
-        val scans = scanShards.toSeq.sorted.map(sh =>
-          DynamoInputPartition(sh, meta.shards, rate,
-            pinnedWal = pin): InputPartition)
-        return (DynamoZoneAnswerPartition(vals) +: scans).toArray
-      }
-    }
-    // PAGE-statistics answering — the Query-shaped (key-pinned) form
-    // of the block above, closing its `pushed.isEmpty` gap: when the
-    // pushed conjuncts are EXACTLY a key window (hash =/IN, sort-key
-    // bounds), the owning shards are compacted (journal-clean), and
-    // every window-intersecting page is FULLY contained in its window,
-    // the per-page statistics recorded at compaction cover precisely
-    // the qualifying rows — `SELECT min(x), count(*) WHERE hk = ?`
-    // answers with ZERO item reads: DynamoDB Query composed with the
-    // Parquet-row-group-statistics move. Any boundary page (a page
-    // sharing rows with neighboring keys), journal delta on an owning
-    // shard, in-flight transaction, or extra non-key conjunct declines
-    // to the ordinary paged scan — never a wrong answer, only a
-    // cheaper one when provable.
-    if (aggs.nonEmpty && grouped.isEmpty && opts.indexName.isEmpty &&
-        !opts.cdc && opts.asOfSeq.isEmpty && opts.ttlAttribute.isEmpty &&
-        opts.zonePruning && sample.isEmpty &&
-        pushed.nonEmpty && adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
-        aggs.forall {
-          case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
-          case PushedAgg.CountAll | _: PushedAgg.CountOf => true
-          case PushedAgg.SumOf(_, LongType) => true
-          case PushedAgg.SumOf(_, _: DecimalType) => true // exact too
-          case _ => false
-        }) {
-      pageAnswerPlan(store, meta).foreach { vals =>
-        return Array[InputPartition](DynamoZoneAnswerPartition(vals))
-      }
-    }
-    // FILTERLESS GROUP BY <hash key> — the grouped analogue of the
-    // zone-answer block: the groups enumerate from the page
-    // directories' own (pure, decodable) hash bounds, so the whole
-    // grouped aggregate folds from sidecars with zero item reads.
-    if (aggs.nonEmpty && grouped.exists(_.fields.map(_.name) == Seq(meta.hashKey)) &&
-        opts.indexName.isEmpty &&
-        !opts.cdc && opts.asOfSeq.isEmpty && opts.ttlAttribute.isEmpty &&
-        opts.zonePruning && sample.isEmpty &&
-        pushed.isEmpty && adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
-        aggs.forall {
-          case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
-          case PushedAgg.CountAll | _: PushedAgg.CountOf => true
-          case PushedAgg.SumOf(_, LongType) => true
-          case PushedAgg.SumOf(_, _: DecimalType) => true
-          case _: PushedAgg.AvgOf => true // complete pushes; 2^53 proof
-          case _ => false
-        }) {
-      groupedZoneAnswerPlan(store, meta).foreach { rows =>
-        if (reportsPerShard(store, meta)) {
-          val byShard = rows.groupBy(_._1)
-          return (0 until meta.shards).map(sh =>
-            DynamoGroupAnswerPartition(sh, byShard.getOrElse(sh, Nil)
-              .map(r => (r._2, r._3))): InputPartition).toArray
-        }
-        return Array[InputPartition](
-          DynamoGroupAnswerPartition(0, rows.map(r => (r._2, r._3))))
-      }
-    }
-    // GROUPED page-statistics answering — `GROUP BY <hash key>` over a
-    // hash-IN window, closing the `grouped.isEmpty` gap above: each
-    // pinned hash value IS one group, hash-group page alignment makes
-    // each value's run page-pure, so ONE sidecar pass folds one exact
-    // partial PER GROUP — `SELECT hk, count(*), sum(v) WHERE hk IN
-    // (...) GROUP BY hk` reads zero items. A pinned value with no
-    // intersecting pages holds no rows and emits no group row (SQL
-    // GROUP BY semantics). Declines identically to the ungrouped path
-    // (boundary page, dirty shard, pending transaction, non-window
-    // conjunct, unanswerable stat). When the scan reports per-shard
-    // KeyGroupedPartitioning, the answered rows keep the segment↔shard
-    // identity (one partition per shard, group rows landing on their
-    // owning shard's segment) so SPJ layout claims stay honored.
-    if (aggs.nonEmpty && grouped.exists(_.fields.map(_.name) == Seq(meta.hashKey)) &&
-        opts.indexName.isEmpty &&
-        !opts.cdc && opts.asOfSeq.isEmpty && opts.ttlAttribute.isEmpty &&
-        opts.zonePruning && sample.isEmpty &&
-        pushed.nonEmpty && adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
-        aggs.forall {
-          case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
-          case PushedAgg.CountAll | _: PushedAgg.CountOf => true
-          case PushedAgg.SumOf(_, LongType) => true
-          case PushedAgg.SumOf(_, _: DecimalType) => true // exact too
-          case _: PushedAgg.AvgOf => true // complete pushes; 2^53 proof
-          case _ => false
-        }) {
-      groupedPageAnswerPlan(store, meta).foreach { rows =>
-        if (reportsPerShard(store, meta)) {
-          val byShard = rows.groupBy { case (h, _) =>
-            store.shardOf(meta, Map(meta.hashKey -> h)) }
-          return (0 until meta.shards).map(sh =>
-            DynamoGroupAnswerPartition(sh,
-              byShard.getOrElse(sh, Nil)): InputPartition).toArray
-        }
-        return Array[InputPartition](DynamoGroupAnswerPartition(0, rows))
-      }
-    }
-    // GSI Query aggregate answering — the index-key-pinned form of
-    // the page-statistics path above: when the materialized copy is
-    // provably EXACT (no delta, no journal overlay) and the pushed
-    // conjuncts are a key window on the INDEX keys whose intersecting
-    // copy pages are all fully contained, the aggregate folds from
-    // the copy's own page statistics with zero item reads — DynamoDB
-    // GSI Query + row-group stats. Same decline directions as the
-    // base path; any staleness tier other than Exact falls through to
-    // the ordinary serve.
-    if (aggs.nonEmpty && grouped.isEmpty && opts.indexName.isDefined &&
-        !opts.cdc && opts.asOfSeq.isEmpty && opts.ttlAttribute.isEmpty &&
-        opts.zonePruning && sample.isEmpty &&
-        // consistent reads must fold the live base (copy statistics
-        // describe a plan-time snapshot, not reader-time state)
-        !opts.stronglyConsistentReads &&
-        pushed.nonEmpty && adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
-        serveViaIndex.forall(identity) &&
-        aggs.forall {
-          case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
-          case PushedAgg.CountAll | _: PushedAgg.CountOf => true
-          case PushedAgg.SumOf(_, LongType) => true
-          case PushedAgg.SumOf(_, _: DecimalType) => true // exact too
-          case _ => false
-        }) {
-      val ixName = opts.indexName.get
-      if (meta.indexes.contains(ixName) &&
-          store.indexFreshness(opts.tableName, ixName) == LocalKVStore.IndexExact) {
-        indexPageAnswerPlan(store, meta, ixName).foreach { vals =>
-          return Array[InputPartition](DynamoZoneAnswerPartition(vals))
-        }
-      }
-    }
-    // GROUPED GSI Query aggregate answering — GROUP BY the INDEX hash
-    // key under an index-hash-IN pin over an EXACT copy: the grouped
-    // form of the block above, one per-group fold from the copy's own
-    // page directories (index builds align pages to hash-group
-    // boundaries exactly like compaction). The GSI path never reports
-    // per-shard partitioning, so one answer partition always suffices.
-    if (aggs.nonEmpty && opts.indexName.isDefined &&
-        meta.indexes.get(opts.indexName.get).exists(ix =>
-          grouped.exists(_.fields.map(_.name) == Seq(ix.hashKey))) &&
-        !opts.cdc && opts.asOfSeq.isEmpty && opts.ttlAttribute.isEmpty &&
-        opts.zonePruning && sample.isEmpty &&
-        !opts.stronglyConsistentReads && // same rule as the block above
-        pushed.nonEmpty && adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
-        serveViaIndex.forall(identity) &&
-        aggs.forall {
-          case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
-          case PushedAgg.CountAll | _: PushedAgg.CountOf => true
-          case PushedAgg.SumOf(_, LongType) => true
-          case PushedAgg.SumOf(_, _: DecimalType) => true
-          case _: PushedAgg.AvgOf => true // complete pushes; 2^53 proof
-          case _ => false
-        }) {
-      val ixName = opts.indexName.get
-      if (store.indexFreshness(opts.tableName, ixName) == LocalKVStore.IndexExact) {
-        indexGroupedPageAnswerPlan(store, meta, ixName).foreach { rows =>
-          return Array[InputPartition](DynamoGroupAnswerPartition(0, rows))
-        }
-      }
-    }
+    if (pinSingleSegment)
+      return Array(DynamoInputPartition(0, 1, rate(1), pinnedWal = pin))
+    statsAnswerPlan(store, meta, pin, rate).foreach(answer => return answer)
     // Materialized-GSI serve: when the copy is provably fresh — and
     // no read option needs BASE items (TTL liveness checks the base
     // item; snapshots address journal history the copy folded away) —
@@ -2203,36 +2024,21 @@ final class DynamoScan(
             }
           }
         }
-        indexKeyShards(store, meta, meta.indexes(ixName)) match {
-          case Some(shards) =>
-            val live = zoneSurviving(shards)
-            val rate = math.max(0.1,
-              opts.targetCapacity * throughput / math.max(1, live.size))
-            return live.toArray.sorted.map(sh =>
-              DynamoInputPartition(sh, meta.shards, rate,
-                viaIndex = true, deltaFiles = delta,
-                journalFiles = journalRounds,
-                pinnedWal = pin): InputPartition)
-          case None =>
-            val all = (0 until meta.shards).toSet
-            val live = zoneSurviving(all)
-            if (live.size < meta.shards) {
-              // strict subset: plan per-shard so the skip is real
-              val rate = math.max(0.1,
-                opts.targetCapacity * throughput / math.max(1, live.size))
-              return live.toArray.sorted.map(sh =>
-                DynamoInputPartition(sh, meta.shards, rate,
-                  viaIndex = true, deltaFiles = delta,
-                  journalFiles = journalRounds,
-                  pinnedWal = pin): InputPartition)
-            }
+        // An index-key pin, or a strict subset of live copy shards,
+        // plans one partition per live shard so the skip is real;
+        // otherwise the full-scan segmentation.
+        val keyed = indexKeyShards(store, meta, meta.indexes(ixName))
+        val live = zoneSurviving(keyed.getOrElse((0 until meta.shards).toSet))
+        val (segments, n) =
+          if (keyed.isDefined || live.size < meta.shards) (live.toSeq.sorted, meta.shards)
+          else {
             val n = DynamoScan.fullScanSegments(store, meta, opts)
-            val rate = math.max(0.1, opts.targetCapacity * throughput / n)
-            return Array.tabulate(n)(i =>
-              DynamoInputPartition(i, n, rate, viaIndex = true,
-                deltaFiles = delta, journalFiles = journalRounds,
-                pinnedWal = pin))
-        }
+            (0 until n, n)
+          }
+        return segments.map(i =>
+          DynamoInputPartition(i, n, rate(segments.size), viaIndex = true,
+            deltaFiles = delta, journalFiles = journalRounds,
+            pinnedWal = pin): InputPartition).toArray
       }
     }
     // Key pruning and zone-map pruning compose by intersection: both
@@ -2245,10 +2051,9 @@ final class DynamoScan(
     }
     candidateShards match {
       case Some(shards) =>
-        val rate = math.max(0.1, opts.targetCapacity * throughput / math.max(1, shards.size))
         // One partition per candidate shard; segment space = shard space.
         val live = shards.toArray.sorted
-          .map(sh => DynamoInputPartition(sh, meta.shards, rate,
+          .map(sh => DynamoInputPartition(sh, meta.shards, rate(shards.size),
             pinnedWal = pin): InputPartition)
         // Partially-clustered SPJ pad: a key-pinned scan pruned to ONE
         // shard would surface as Spark's SinglePartition (the exec
@@ -2268,13 +2073,12 @@ final class DynamoScan(
           // (length 0 happens when zone pruning excludes every shard —
           // the pad keeps the declared bucket layout non-degenerate)
           val pad = (shards.headOption.getOrElse(-1) + 1) % meta.shards
-          live :+ (DynamoInputPartition(pad, meta.shards, rate, padEmpty = true,
+          live :+ (DynamoInputPartition(pad, meta.shards, rate(shards.size), padEmpty = true,
             pinnedWal = pin): InputPartition)
         } else live
       case None =>
         val n = DynamoScan.fullScanSegments(store, meta, opts)
-        val rate = math.max(0.1, opts.targetCapacity * throughput / n)
-        Array.tabulate(n)(i => DynamoInputPartition(i, n, rate, pinnedWal = pin))
+        Array.tabulate(n)(i => DynamoInputPartition(i, n, rate(n), pinnedWal = pin))
     }
   }
 
@@ -2309,32 +2113,110 @@ final class DynamoScan(
     if (surviving.size < meta.shards) Some(surviving) else None
   }
 
-  /** The aggregate answer over the CLEAN shards plus the dirty-shard
-    * set that must still be scanned; None declines the fast path
-    * entirely. A shard is clean when it has no journal files (its
-    * base sidecar is exact — bulk load / compaction wrote it from the
-    * live items) and its stats are readable+complete; unreadable
+  /** Statistics-answered aggregates: an aggregation that statistics
+    * can answer exactly, with nothing below it that they cannot see,
+    * folds from store metadata with zero item reads — the zone maps
+    * bulk load and compaction write per shard, and the per-page
+    * statistics every sorted base and index-copy page records. One
+    * gate ([[answerKeys]], no store read), then one of three fold
+    * sources, each giving [[ShardStats]] per group:
+    *  - no pushed filter, ungrouped ([[zoneFold]]): the CLEAN shards'
+    *    zone maps, with the journal-dirty shards still to scan — at
+    *    100 TB, `SELECT min(ts), max(ts) FROM t` under ongoing writes
+    *    costs O(shards) sidecar reads plus a scan of just the hot
+    *    shards: the Parquet-footer-statistics move, applied to the
+    *    store;
+    *  - pushed conjuncts that are EXACTLY a key window (hash =/IN,
+    *    sort-key bounds) over the base table or an EXACT index copy
+    *    ([[windowFold]]): one fold per window from the page
+    *    directories — `SELECT min(x), count(*) WHERE hk = ?` is
+    *    DynamoDB Query composed with row-group statistics;
+    *  - no pushed filter, `GROUP BY` the hash key ([[pureGroupFold]]):
+    *    the groups enumerate from the pure pages' own hash bounds.
+    * One emit: an ungrouped answer is one [[DynamoZoneAnswerPartition]]
+    * (plus the dirty-shard scans, whose partials Spark folds with it);
+    * grouped answers are [[DynamoGroupAnswerPartition]]s — one per
+    * shard when the scan reports its per-shard layout, so each group
+    * row lands on its owning shard's segment and SPJ layout claims
+    * stay honored. A proof that fails anywhere (a boundary page, a
+    * journal delta on a folded shard, a pending transaction, a copy
+    * below Exact, a statistic whose typed decode is not exact)
+    * declines the whole plan to the ordinary scan: never a wrong
+    * answer, only a cheaper one when provable.
+    */
+  private def statsAnswerPlan(store: LocalKVStore, meta: TableMeta,
+      pin: Option[Seq[String]], rate: Int => Double): Option[Array[InputPartition]] = {
+    val (hashKey, rangeKey, index) = answerKeys(meta).getOrElse(return None)
+    def windows = windowFold(store, meta, hashKey, rangeKey, index)
+    grouped match {
+      case None =>
+        val (stats, scan) =
+          if (pushed.isEmpty) zoneFold(store, meta).getOrElse(return None)
+          else (windows.getOrElse(return None).map(_._3)
+            .foldLeft(ShardStats.empty)(_ union _), Set.empty[Int])
+        val vals = answerValues(stats).getOrElse(return None)
+        Some((DynamoZoneAnswerPartition(vals) +: scan.toSeq.sorted.map(sh =>
+          DynamoInputPartition(sh, meta.shards, rate(scan.size),
+            pinnedWal = pin): InputPartition)).toArray)
+      case Some(_) =>
+        val folds = (if (pushed.isEmpty) pureGroupFold(store, meta) else windows)
+          .getOrElse(return None)
+        val rows = folds.map { case (sh, h, st) =>
+          (sh, (h, answerValues(st).getOrElse(return None))) }
+        Some(if (reportsPerShard(store, meta))
+          Array.tabulate[InputPartition](meta.shards)(sh =>
+            DynamoGroupAnswerPartition(sh, rows.collect { case (`sh`, r) => r }))
+        else Array(DynamoGroupAnswerPartition(0, rows.map(_._2))))
+    }
+  }
+
+  /** The statistics-answer gate, from the pushed state and the table
+    * metadata alone: aggregates only MIN/MAX/COUNT and exact SUMs
+    * (long or decimal; double sums are order-sensitive), plus AVG when
+    * grouped (it arrives only on complete pushes, under the 2^53 proof
+    * in [[answerValues]]); no CDC, snapshot, TTL or sample view; no
+    * v2-only or runtime predicate; `zonePruning` on; a grouping, if
+    * any, on exactly the hash key. An index read also needs pushed
+    * key conjuncts, no `stronglyConsistentReads` (consistent reads
+    * fold the live base: copy statistics describe a plan-time
+    * snapshot, not reader-time state) and a serve the builder did not
+    * pin to the base path. Returns the hash key, sort key and index
+    * the folds work in; None declines.
+    */
+  private def answerKeys(meta: TableMeta): Option[(String, Option[String], Option[String])] = {
+    val keys = opts.indexName match {
+      case None => (meta.hashKey, meta.rangeKey, None)
+      case Some(name) =>
+        if (pushed.isEmpty || opts.stronglyConsistentReads ||
+            !serveViaIndex.forall(identity)) return None
+        val ix = meta.indexes.getOrElse(name, return None)
+        (ix.hashKey, ix.rangeKey, Some(name))
+    }
+    val answerable = aggs.nonEmpty && !opts.cdc && opts.asOfSeq.isEmpty &&
+      opts.ttlAttribute.isEmpty && opts.zonePruning && sample.isEmpty &&
+      adv.isEmpty && runtime.isEmpty && runtimeAdv.isEmpty &&
+      grouped.forall(_.fields.map(_.name) == Seq(keys._1)) &&
+      aggs.forall {
+        case _: PushedAgg.MinOf | _: PushedAgg.MaxOf => true
+        case PushedAgg.CountAll | _: PushedAgg.CountOf => true
+        case PushedAgg.SumOf(_, LongType | _: DecimalType) => true
+        case _: PushedAgg.AvgOf => grouped.isDefined
+        case _ => false
+      }
+    if (answerable) Some(keys) else None
+  }
+
+  /** Fold source 1: the CLEAN shards' zone maps folded into one
+    * [[ShardStats]], plus the dirty-shard set that must still be
+    * scanned; None declines. A shard is clean when it has no journal
+    * files (its base sidecar is exact — bulk load / compaction wrote
+    * it from the live items) and its stats are readable; unreadable
     * clean shards just join the scan set. Transaction journal files
     * (`-sall`) can land ops in ANY shard, so their presence declines
-    * everything. COUNT(*) sums the clean shards' item counters
-    * (DescribeTable's ItemCount, exact per clean shard). Per MIN/MAX
-    * attribute, the stats are usable only when every stored value is
-    * one the read schema's typed decode maps monotonically:
-    *  - numeric fields: only `N` values (an `S`/bool/binary value
-    *    would throw in [[Codec]] mid-scan — decline and let the real
-    *    scan surface it), integrals additionally within the type's
-    *    range (out-of-range wraps, which is not monotone);
-    *    BigDecimal→long/double truncation/rounding are monotone, so
-    *    decode(min of stored) = min of decoded.
-    *  - string fields: only `S` values (`N`/bool COERCE into strings
-    *    whose order differs from numeric order — "10" < "9").
-    *  - an attribute absent from a COMPLETE map provably never
-    *    occurs: the aggregate is null over every row.
-    * The answer is carried as wire [[AttrVal]]s and decoded by the
-    * same [[Codec]] path a scan would use — bit-identical results.
+    * everything, as does a plan with no clean shard left.
     */
-  private def zoneAnswerPlan(store: LocalKVStore,
-      meta: TableMeta): Option[(Seq[Option[AttrVal]], Set[Int])] = {
+  private def zoneFold(store: LocalKVStore,
+      meta: TableMeta): Option[(ShardStats, Set[Int])] = {
     val dirty = store.journalShards(opts.tableName)
     if (dirty.contains(LocalKVStore.TxnShard)) return None
     val perShard = store.tableZoneStats(opts.tableName, meta.shards)
@@ -2346,139 +2228,45 @@ final class DynamoScan(
         case None => scanSet += sh // unreadable sidecar: just scan it
       }
     }
-    if (scanSet.size >= meta.shards) return None // nothing answerable
-    answerValues(folded).map(vals => (vals, scanSet.toSet))
+    if (scanSet.size >= meta.shards) None // nothing answerable
+    else Some((folded, scanSet.toSet))
   }
 
-  /** Fold the page statistics of a fully-contained key window into
-    * one answerable [[ShardStats]] (None = decline; see the planner
-    * block for the exactness argument). Requirements, all provable
-    * from sidecars alone:
+  /** Fold source 2: the page statistics of a fully-contained key
+    * window set, over the base table (`index` None) or a materialized
+    * index copy — `(owning shard, pinned hash value, stats)` per
+    * window that holds pages, one window per pinned hash value (= per
+    * group). None declines; every requirement is provable from
+    * sidecars alone:
     *  - every pushed conjunct participates in the window shape (hash
     *    =/IN, sort-key range/begins_with) — anything else constrains
     *    rows WITHIN pages, which page grain cannot see;
-    *  - the owning shards have no journal (their pages are the whole
-    *    truth) and no transaction file is pending anywhere;
-    *  - each owning shard has a valid page directory whose window-
-    *    intersecting pages ALL carry stats and are ALL contained in
-    *    one of the windows.
+    *  - base: the table has a sort key and partition-key placement,
+    *    the owning shards have no journal (their pages are the whole
+    *    truth) and no transaction file is pending anywhere; index: the
+    *    copy is EXACT (no delta, no journal overlay), so its pages
+    *    describe exactly the index view;
+    *  - each owning shard has a valid page directory (a rewrite
+    *    racing this read fails its size/mtime validation) whose
+    *    window-intersecting pages ALL carry stats and each lie wholly
+    *    inside the window they intersect (compaction and index builds
+    *    both align pages to hash-group boundaries, so a large group's
+    *    run is page-pure).
+    * Windows have distinct hash values, so a contained page belongs
+    * to exactly one window, and the ungrouped answer is the union of
+    * the per-window folds. A pinned value with no intersecting pages
+    * holds no rows and yields no group (SQL GROUP BY semantics).
     */
-  private def pageAnswerPlan(store: LocalKVStore,
-      meta: TableMeta): Option[Seq[Option[AttrVal]]] = {
-    if (meta.rangeKey.isEmpty || meta.layout < 2) return None
+  private def windowFold(store: LocalKVStore, meta: TableMeta, hashKey: String,
+      rangeKey: Option[String], index: Option[String])
+      : Option[Seq[(Int, AttrVal, ShardStats)]] = {
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
       GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
-    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
-    val windowable = flat.forall {
-      case EqualTo(a, v) => v != null &&
-        (a == meta.hashKey || meta.rangeKey.contains(a))
-      case In(a, vs) => a == meta.hashKey && vs != null && vs.nonEmpty
-      case GreaterThan(a, v) => v != null && meta.rangeKey.contains(a)
-      case GreaterThanOrEqual(a, v) => v != null && meta.rangeKey.contains(a)
-      case LessThan(a, v) => v != null && meta.rangeKey.contains(a)
-      case LessThanOrEqual(a, v) => v != null && meta.rangeKey.contains(a)
-      case StringStartsWith(a, p) => p != null && meta.rangeKey.contains(a)
-      case _ => false
-    }
-    if (!windowable) return None
-    val windows = PageIndex.deriveWindows(pushed.toSeq, meta.hashKey,
-      meta.rangeKey.get)
-    if (windows.isEmpty) return None
-    val owning = keyShards(store, meta).getOrElse(return None)
-    val dirty = store.journalShards(opts.tableName)
-    if (dirty.contains(LocalKVStore.TxnShard) ||
-        owning.exists(dirty.contains)) return None
-    var folded = ShardStats.empty
-    owning.toSeq.sorted.foreach { sh =>
-      val dir = java.nio.file.Paths.get(store.rootDir, opts.tableName)
-      val idx = PageIndex.load(
-        dir.resolve(f"pageidx-s$sh%03d.jsonl"),
-        dir.resolve(f"shard-$sh%03d.jsonl")).getOrElse(return None)
-      idx.pages.foreach { p =>
-        if (windows.exists(PageIndex.intersects(p, _))) {
-          if (!windows.exists(PageIndex.contains(p, _))) return None
-          folded = folded.union(p.stats.getOrElse(return None))
-        }
-      }
-    }
-    answerValues(folded)
-  }
-
-  /** The GROUPED form of [[pageAnswerPlan]]: one [[ShardStats]] fold
-    * PER key window (= per pinned hash value = per group), under the
-    * same provability rules — every window-intersecting page must
-    * carry stats and be fully contained in its window, owning shards
-    * journal-clean, no transaction pending. Returns `(group value,
-    * answered aggregate values)` per NON-EMPTY group; None declines
-    * the whole plan (a single unanswerable group would otherwise
-    * split the aggregate across two execution paths).
-    */
-  private def groupedPageAnswerPlan(store: LocalKVStore,
-      meta: TableMeta): Option[Seq[(AttrVal, Seq[Option[AttrVal]])]] = {
-    if (meta.rangeKey.isEmpty || meta.layout < 2) return None
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
-      GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
-    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
-    val windowable = flat.forall {
-      case EqualTo(a, v) => v != null &&
-        (a == meta.hashKey || meta.rangeKey.contains(a))
-      case In(a, vs) => a == meta.hashKey && vs != null && vs.nonEmpty
-      case GreaterThan(a, v) => v != null && meta.rangeKey.contains(a)
-      case GreaterThanOrEqual(a, v) => v != null && meta.rangeKey.contains(a)
-      case LessThan(a, v) => v != null && meta.rangeKey.contains(a)
-      case LessThanOrEqual(a, v) => v != null && meta.rangeKey.contains(a)
-      case StringStartsWith(a, p) => p != null && meta.rangeKey.contains(a)
-      case _ => false
-    }
-    if (!windowable) return None
-    val wv = PageIndex.deriveWindowsWithValues(pushed.toSeq, meta.hashKey,
-      meta.rangeKey)
-    if (wv.isEmpty) return None
-    val owning = keyShards(store, meta).getOrElse(return None)
-    val dirty = store.journalShards(opts.tableName)
-    if (dirty.contains(LocalKVStore.TxnShard) ||
-        owning.exists(dirty.contains)) return None
-    val folds = scala.collection.mutable.Map.empty[Int, ShardStats]
-    owning.toSeq.sorted.foreach { sh =>
-      val dir = java.nio.file.Paths.get(store.rootDir, opts.tableName)
-      val idx = PageIndex.load(
-        dir.resolve(f"pageidx-s$sh%03d.jsonl"),
-        dir.resolve(f"shard-$sh%03d.jsonl")).getOrElse(return None)
-      idx.pages.foreach { p =>
-        wv.zipWithIndex.foreach { case ((_, w), i) =>
-          if (PageIndex.intersects(p, w)) {
-            if (!PageIndex.contains(p, w)) return None
-            folds(i) = folds.getOrElse(i, ShardStats.empty)
-              .union(p.stats.getOrElse(return None))
-          }
-        }
-      }
-    }
-    Some(wv.zipWithIndex.flatMap { case ((h, _), i) =>
-      folds.get(i).map { st =>
-        h -> answerValues(st).getOrElse(return None)
-      }
-    })
-  }
-
-  /** [[pageAnswerPlan]] over a MATERIALIZED INDEX COPY's page
-    * directories: windows derive from the INDEX keys, owning shards
-    * from the index hash placement, and page truth from the copy
-    * files (`gsi-<name>-shard-*` + `gsi-pageidx-<name>-s*`). Caller
-    * guarantees the copy is EXACT — the stats then describe exactly
-    * the index view. A copy invalidation racing this read fails the
-    * directory's size/mtime validation and declines.
-    */
-  private def indexPageAnswerPlan(store: LocalKVStore, meta: TableMeta,
-      ixName: String): Option[Seq[Option[AttrVal]]] = {
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
-      GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
-    val ix = meta.indexes(ixName)
-    val rk = ix.rangeKey.getOrElse(return None)
-    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
-    val windowable = flat.forall {
-      case EqualTo(a, v) => v != null && (a == ix.hashKey || a == rk)
-      case In(a, vs) => a == ix.hashKey && vs != null && vs.nonEmpty
+    val rk = rangeKey.getOrElse(return None)
+    if (index.isEmpty && meta.layout < 2) return None
+    val windowable = pushed.toSeq.flatMap(DynamoScan.conjuncts).forall {
+      case EqualTo(a, v) => v != null && (a == hashKey || a == rk)
+      case In(a, vs) => a == hashKey && vs != null && vs.nonEmpty
       case GreaterThan(a, v) => v != null && a == rk
       case GreaterThanOrEqual(a, v) => v != null && a == rk
       case LessThan(a, v) => v != null && a == rk
@@ -2487,46 +2275,55 @@ final class DynamoScan(
       case _ => false
     }
     if (!windowable) return None
-    val windows = PageIndex.deriveWindows(pushed.toSeq, ix.hashKey, rk)
+    val windows = PageIndex.deriveWindowsWithValues(pushed.toSeq, hashKey, rangeKey)
     if (windows.isEmpty) return None
-    val owning = indexKeyShards(store, meta, ix).getOrElse(return None)
-    val dir = java.nio.file.Paths.get(store.rootDir, opts.tableName)
-    var folded = ShardStats.empty
+    val owning = index.fold(keyShards(store, meta))(ix =>
+      indexKeyShards(store, meta, meta.indexes(ix))).getOrElse(return None)
+    val exact = index match {
+      case None =>
+        val dirty = store.journalShards(opts.tableName)
+        !dirty.contains(LocalKVStore.TxnShard) && !owning.exists(dirty.contains)
+      case Some(ix) =>
+        store.indexFreshness(opts.tableName, ix) == LocalKVStore.IndexExact
+    }
+    if (!exact) return None
+    val folds = Array.fill[Option[(Int, ShardStats)]](windows.size)(None)
     owning.toSeq.sorted.foreach { sh =>
-      val idx = PageIndex.load(
-        dir.resolve(f"gsi-pageidx-$ixName-s$sh%03d.jsonl"),
-        dir.resolve(f"gsi-$ixName-shard-$sh%03d.jsonl")).getOrElse(return None)
-      idx.pages.foreach { p =>
-        if (windows.exists(PageIndex.intersects(p, _))) {
-          if (!windows.exists(PageIndex.contains(p, _))) return None
-          folded = folded.union(p.stats.getOrElse(return None))
+      val dir = store.pageDirectory(opts.tableName, sh, index).getOrElse(return None)
+      dir.pages.foreach { p =>
+        windows.indices.foreach { i =>
+          val w = windows(i)._2
+          if (PageIndex.intersects(p, w)) {
+            if (!PageIndex.contains(p, w)) return None
+            folds(i) = Some((sh, folds(i).fold(ShardStats.empty)(_._2)
+              .union(p.stats.getOrElse(return None))))
+          }
         }
       }
     }
-    answerValues(folded)
+    Some(windows.indices.flatMap(i =>
+      folds(i).map { case (sh, st) => (sh, windows(i)._1, st) }))
   }
 
-  /** FILTERLESS `GROUP BY <hash key>` from page statistics alone: the
-    * grouped analogue of [[zoneAnswerPlan]], except the GROUPS come
-    * from the page directories themselves — hash-group alignment
-    * makes large keys' runs page-pure, each pure page names its
-    * group in its (decodable) encoded hash bound, and placement puts
-    * every group wholly inside one shard, so per-shard page folds ARE
-    * the grouped aggregate. `SELECT hk, count(*), sum(v) FROM t
-    * GROUP BY hk` over a compacted table then reads zero items at any
-    * size — the DescribeTable-statistics move, per group. Declines
-    * (None) whenever the proof fails: any journal anywhere (new
-    * groups could exist only in a journal), any IMPURE page (small
-    * interleaved groups pack densely below the alignment floor — the
-    * page's rows span groups page grain cannot split), a non-string
-    * group field (string hash values decode injectively; numeric
-    * coercions could merge store values the encoded grouping kept
-    * apart), more groups than `maxPushedGroups`, or any unanswerable
-    * stat. Returns `(owning shard, group value, answered values)` so
-    * a reported per-shard layout can keep the segment↔shard identity.
+  /** Fold source 3: FILTERLESS `GROUP BY <hash key>` from page
+    * statistics alone — the groups come from the page directories
+    * themselves: hash-group alignment makes large keys' runs
+    * page-pure, each pure page names its group in its (decodable)
+    * encoded hash bound, and placement puts every group wholly inside
+    * one shard, so per-shard page folds ARE the grouped aggregate.
+    * `SELECT hk, count(*), sum(v) FROM t GROUP BY hk` over a compacted
+    * table then reads zero items at any size — the DescribeTable-
+    * statistics move, per group. Declines (None) whenever the proof
+    * fails: any journal anywhere (new groups could exist only in a
+    * journal), any IMPURE page (small interleaved groups pack densely
+    * below the alignment floor — the page's rows span groups page
+    * grain cannot split), a group field that is neither string nor
+    * integral (see the type gate), or more groups than
+    * `maxPushedGroups`. Returns `(owning shard, group value, stats)`
+    * in shard order, groups in encoded order within a shard.
     */
-  private def groupedZoneAnswerPlan(store: LocalKVStore, meta: TableMeta)
-      : Option[Seq[(Int, AttrVal, Seq[Option[AttrVal]])]] = {
+  private def pureGroupFold(store: LocalKVStore, meta: TableMeta)
+      : Option[Seq[(Int, AttrVal, ShardStats)]] = {
     if (meta.rangeKey.isEmpty || meta.layout < 2) return None
     // Group-key type gate: the emitted group value must decode
     // BIT-IDENTICALLY to what the scanned plan's codec would produce.
@@ -2556,12 +2353,9 @@ final class DynamoScan(
         })
         case _ => false
       }
-    val dir = java.nio.file.Paths.get(store.rootDir, opts.tableName)
     var total = 0
     val perShard = (0 until meta.shards).map { sh =>
-      val idx = PageIndex.load(
-        dir.resolve(f"pageidx-s$sh%03d.jsonl"),
-        dir.resolve(f"shard-$sh%03d.jsonl")).getOrElse(return None)
+      val idx = store.pageDirectory(opts.tableName, sh, None).getOrElse(return None)
       val groups = scala.collection.mutable.LinkedHashMap.empty[String, ShardStats]
       idx.pages.foreach { p =>
         if (p.minH != p.maxH) return None
@@ -2576,62 +2370,27 @@ final class DynamoScan(
     }
     Some(perShard.flatMap { case (sh, groups) =>
       groups.toSeq.sortBy(_._1).map { case (enc, st) =>
-        val h = LocalKVStore.decKeyAttr(enc).getOrElse(return None)
-        (sh, h, answerValues(st).getOrElse(return None))
+        (sh, LocalKVStore.decKeyAttr(enc).getOrElse(return None), st)
       }
     })
   }
 
-  /** The GROUPED form of [[indexPageAnswerPlan]]: per-window folds
-    * over the EXACT materialized copy's page directories — one
-    * `(index hash value, answered values)` row per non-empty pinned
-    * group, zero item reads. Same all-or-nothing decline as the base
-    * grouped path.
+  /** The answered aggregate values of one fold, in push order, as
+    * wire values the readers decode through the scan's own [[Codec]]
+    * path (bit-identical results); None declines. Per MIN/MAX
+    * attribute, the stats are usable only when every stored value is
+    * one the read schema's typed decode maps monotonically:
+    *  - numeric fields: only `N` values (an `S`/bool/binary value
+    *    would throw in [[Codec]] mid-scan — decline and let the real
+    *    scan surface it), integrals additionally within the type's
+    *    range (out-of-range wraps, which is not monotone);
+    *    BigDecimal→long/double truncation/rounding are monotone, so
+    *    decode(min of stored) = min of decoded.
+    *  - string fields: only `S` values (`N`/bool COERCE into strings
+    *    whose order differs from numeric order — "10" < "9").
+    *  - an attribute absent from a COMPLETE map provably never
+    *    occurs: the aggregate is null over every row.
     */
-  private def indexGroupedPageAnswerPlan(store: LocalKVStore, meta: TableMeta,
-      ixName: String): Option[Seq[(AttrVal, Seq[Option[AttrVal]])]] = {
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
-      GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringStartsWith}
-    val ix = meta.indexes(ixName)
-    val rk = ix.rangeKey.getOrElse(return None)
-    val flat = pushed.toSeq.flatMap(DynamoScan.conjuncts)
-    val windowable = flat.forall {
-      case EqualTo(a, v) => v != null && (a == ix.hashKey || a == rk)
-      case In(a, vs) => a == ix.hashKey && vs != null && vs.nonEmpty
-      case GreaterThan(a, v) => v != null && a == rk
-      case GreaterThanOrEqual(a, v) => v != null && a == rk
-      case LessThan(a, v) => v != null && a == rk
-      case LessThanOrEqual(a, v) => v != null && a == rk
-      case StringStartsWith(a, p) => p != null && a == rk
-      case _ => false
-    }
-    if (!windowable) return None
-    val wv = PageIndex.deriveWindowsWithValues(pushed.toSeq, ix.hashKey, Some(rk))
-    if (wv.isEmpty) return None
-    val owning = indexKeyShards(store, meta, ix).getOrElse(return None)
-    val dir = java.nio.file.Paths.get(store.rootDir, opts.tableName)
-    val folds = scala.collection.mutable.Map.empty[Int, ShardStats]
-    owning.toSeq.sorted.foreach { sh =>
-      val idx = PageIndex.load(
-        dir.resolve(f"gsi-pageidx-$ixName-s$sh%03d.jsonl"),
-        dir.resolve(f"gsi-$ixName-shard-$sh%03d.jsonl")).getOrElse(return None)
-      idx.pages.foreach { p =>
-        wv.zipWithIndex.foreach { case ((_, w), i) =>
-          if (PageIndex.intersects(p, w)) {
-            if (!PageIndex.contains(p, w)) return None
-            folds(i) = folds.getOrElse(i, ShardStats.empty)
-              .union(p.stats.getOrElse(return None))
-          }
-        }
-      }
-    }
-    Some(wv.zipWithIndex.flatMap { case ((h, _), i) =>
-      folds.get(i).map { st =>
-        h -> answerValues(st).getOrElse(return None)
-      }
-    })
-  }
-
   private def answerValues(folded: ShardStats): Option[Seq[Option[AttrVal]]] = {
     if (!folded.complete) return None
     val vals = aggs.map {
@@ -3175,10 +2934,7 @@ final class DynamoMicroBatchStream(
     assertNotTrimmed(s, "stream offset")
     val files = store.walFileNames(opts.tableName)
       .filter(n => n > s && n <= e).sorted
-    val meta = store.describe(opts.tableName)
-    val throughput = opts.throughput.getOrElse(meta.throughput).toDouble
-    val rate = math.max(0.1,
-      opts.targetCapacity * throughput / math.max(1, files.size))
+    val rate = DynamoScan.partitionRate(opts, store.describe(opts.tableName), files.size)
     files.map(f => DynamoWalPartition(f, rate): InputPartition).toArray
   }
 
@@ -3384,8 +3140,7 @@ final class DynamoGroupedAggReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case g: DynamoGroupAnswerPartition =>
-        new DynamoGroupAnswerReader(group, aggs, g)
+      case g: DynamoGroupAnswerPartition => new DynamoAnswerReader(Some(group), aggs, g)
       case p: DynamoInputPartition =>
         new DynamoGroupedAggReader(opts, pushed, group, aggs, p, adv, sample)
     }
@@ -3480,36 +3235,19 @@ final class DynamoAggReaderFactory(opts: DynamoOptions, pushed: Array[Filter], a
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case z: DynamoZoneAnswerPartition => new DynamoZoneAnswerReader(aggs, z)
+      case z: DynamoZoneAnswerPartition => new DynamoAnswerReader(None, aggs, z)
       case p: DynamoInputPartition =>
         new DynamoAggReader(opts, pushed, aggs, p, adv, sample)
     }
 }
 
-/** The zone-map-answered MIN/MAX plan: ONE partition carrying the
-  * stats-derived wire values, computed on the driver from the base
-  * shard sidecars ([[DynamoScan.planInputPartitions]]'s fast path) —
-  * the scan reads zero items at any table size.
+/** The ungrouped statistics answer: ONE partition carrying the
+  * stats-derived wire values, computed on the driver from zone maps
+  * or page statistics ([[DynamoScan.planInputPartitions]]'s fast
+  * path) — the scan reads zero items at any table size.
   */
 final case class DynamoZoneAnswerPartition(values: Seq[Option[AttrVal]])
     extends InputPartition
-
-final class DynamoZoneAnswerReader(
-    aggs: Seq[PushedAgg], partition: DynamoZoneAnswerPartition)
-    extends PartitionReader[InternalRow] {
-  private var emitted = false
-  override def next(): Boolean = if (emitted) false else { emitted = true; true }
-  override def get(): InternalRow = {
-    // decode through the SAME Codec path a scan's values would take,
-    // so the answer is bit-identical to the scanned aggregate
-    val schema = StructType(aggs.zipWithIndex.map { case (a, i) => a.resultField(i) })
-    val item: Item = partition.values.zipWithIndex.collect {
-      case (Some(v), i) => s"agg$i" -> v
-    }.toMap
-    Codec.rowReader(schema)(item)
-  }
-  override def close(): Unit = ()
-}
 
 /** The grouped page-statistics answer plan: group rows computed on the
   * driver from page sidecars ([[DynamoScan.planInputPartitions]]) —
@@ -3525,26 +3263,25 @@ final case class DynamoGroupAnswerPartition(segment: Int,
   override def partitionKey(): InternalRow = InternalRow(segment)
 }
 
-/** Emits one row per answered group, decoding `(group value, agg
-  * values)` through the SAME [[Codec]] path the grouped scan reader
-  * uses — bit-identical to the scanned plan.
+/** Emits the rows of a statistics-answered partition — the one row of
+  * a [[DynamoZoneAnswerPartition]], one row per group of a
+  * [[DynamoGroupAnswerPartition]] — decoding each through the SAME
+  * [[Codec]] path the scan readers use, so the answer is
+  * bit-identical to the scanned aggregate.
   */
-final class DynamoGroupAnswerReader(
-    group: PushedGroupBy, aggs: Seq[PushedAgg],
-    partition: DynamoGroupAnswerPartition)
-    extends PartitionReader[InternalRow] {
-  private val schema = StructType(group.fields ++
-    aggs.zipWithIndex.map { case (a, i) => a.resultField(i) })
-  private val decode = Codec.rowReader(schema)
-  private val it = partition.rows.iterator
-  private var cur: InternalRow = _
-  override def next(): Boolean = it.hasNext && {
-    val (h, vals) = it.next()
-    val item: Item = Map(group.fields.head.name -> h) ++
-      vals.zipWithIndex.collect { case (Some(v), i) => s"agg$i" -> v }
-    cur = decode(item)
-    true
+final class DynamoAnswerReader(group: Option[PushedGroupBy], aggs: Seq[PushedAgg],
+    partition: InputPartition) extends PartitionReader[InternalRow] {
+  private val decode = Codec.rowReader(StructType(group.toSeq.flatMap(_.fields) ++
+    aggs.zipWithIndex.map { case (a, i) => a.resultField(i) }))
+  private def aggItem(vals: Seq[Option[AttrVal]]): Item =
+    vals.zipWithIndex.collect { case (Some(v), i) => s"agg$i" -> v }.toMap
+  private val items: Iterator[Item] = partition match {
+    case z: DynamoZoneAnswerPartition => Iterator.single(aggItem(z.values))
+    case g: DynamoGroupAnswerPartition => g.rows.iterator.map { case (h, vals) =>
+      aggItem(vals) ++ group.map(_.fields.head.name -> h) }
   }
+  private var cur: InternalRow = _
+  override def next(): Boolean = items.hasNext && { cur = decode(items.next()); true }
   override def get(): InternalRow = cur
   override def close(): Unit = ()
 }
@@ -3924,9 +3661,7 @@ private object WriteSetup {
       store.createTable(opts.tableName,
         TableMeta(hk, opts.rangeKey, opts.shards, opts.throughput.getOrElse(1000000L)))
     }
-    val meta = store.describe(opts.tableName)
-    val throughput = opts.throughput.getOrElse(meta.throughput).toDouble
-    math.max(0.1, opts.targetCapacity * throughput / math.max(1, numPartitions))
+    DynamoScan.partitionRate(opts, store.describe(opts.tableName), numPartitions)
   }
 
   /** Driver-side fail-fast: every written row needs the primary key,

@@ -116,9 +116,8 @@ object ItemSource {
     */
   def wholeTable(opts: DynamoOptions, pushed: Array[Filter],
       adv: Seq[PredicateV2.VPred], budgetShare: Int = 1): ItemSource = {
-    val meta = new LocalKVStore(opts.path).describe(opts.tableName)
-    val rate = math.max(0.1, opts.targetCapacity *
-      opts.throughput.getOrElse(meta.throughput).toDouble / budgetShare)
+    val rate = DynamoScan.partitionRate(opts,
+      new LocalKVStore(opts.path).describe(opts.tableName), budgetShare)
     new ItemSource(opts, pushed, adv, None, DynamoInputPartition(0, 1, rate))
   }
 

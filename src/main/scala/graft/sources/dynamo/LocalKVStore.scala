@@ -1513,9 +1513,7 @@ final class LocalKVStore(root: String) {
         val paged =
           if (windows.isEmpty) None
           else {
-            val idxPath = p.resolveSibling(
-              f"gsi-pageidx-$name-s${gsiShardIndex(name, p)}%03d.jsonl")
-            PageIndex.load(idxPath, p).flatMap { idx =>
+            pageDirectory(table, gsiShardIndex(name, p), Some(name)).flatMap { idx =>
               PageIndex.readPages(p, idx.pages.filter(pg =>
                 windows.exists(PageIndex.intersects(pg, _))),
                 idx.fileBytes, idx.mtimeNanos)
@@ -1710,7 +1708,8 @@ final class LocalKVStore(root: String) {
         val size = Files.size(p)
         total += size
         if (keep(shardIndex(p)))
-          touched += windowPages(p, meta, windows).fold(size)(_.pages.map(_.len).sum)
+          touched += windowPages(table, shardIndex(p), meta, windows)
+            .fold(size)(_.pages.map(_.len).sum)
       } else if (name.startsWith("wal-")) {
         val size = Files.size(p)
         total += size
@@ -1728,17 +1727,41 @@ final class LocalKVStore(root: String) {
     * of its base is read. None = no windows, or no valid directory
     * (missing, stale or unparsable): the whole file is read.
     */
-  private def windowPages(p: Path, meta: TableMeta,
+  private def windowPages(table: String, shard: Int, meta: TableMeta,
       windows: Seq[PageIndex.KeyWindow]): Option[PageIndex.ShardIndex] = {
     if (windows.isEmpty) return None
     val own =
       if (meta.layout < 2) windows
       else windows.filter(w =>
-        math.floorMod(w.hashEnc.hashCode, meta.shards) == shardIndex(p))
+        math.floorMod(w.hashEnc.hashCode, meta.shards) == shard)
     if (own.isEmpty) Some(PageIndex.ShardIndex(0L, 0L, Vector.empty))
-    else PageIndex.load(p.resolveSibling(f"pageidx-s${shardIndex(p)}%03d.jsonl"), p)
+    else pageDirectory(table, shard, None)
       .map(idx => idx.copy(pages =
         idx.pages.filter(pg => own.exists(PageIndex.intersects(pg, _)))))
+  }
+
+  /** The page directory of base shard `shard`, or with `index` of
+    * that index copy's shard: per page its byte range, key bounds and
+    * statistics. None when the directory is missing, unparsable, or
+    * stale against the file it describes. The one place the
+    * directory file names are spelled.
+    */
+  def pageDirectory(table: String, shard: Int,
+      index: Option[String]): Option[PageIndex.ShardIndex] = {
+    val (idx, file) = pagedFiles(table, shard, index)
+    PageIndex.load(idx, file)
+  }
+
+  /** (directory, data file) of a base or index-copy shard. */
+  private def pagedFiles(table: String, shard: Int,
+      index: Option[String]): (Path, Path) = {
+    val dir = tableDir(table)
+    index match {
+      case None => (dir.resolve(f"pageidx-s$shard%03d.jsonl"),
+        dir.resolve(f"shard-$shard%03d.jsonl"))
+      case Some(n) => (dir.resolve(f"gsi-pageidx-$n-s$shard%03d.jsonl"),
+        dir.resolve(f"gsi-$n-shard-$shard%03d.jsonl"))
+    }
   }
 
   // ---- primary key handling ----
@@ -3163,7 +3186,7 @@ final class LocalKVStore(root: String) {
     // absent-normal-form, carrying the same out-of-window key attrs
     // the caller's filters reject.
     val baseItems = shardFiles.iterator.flatMap { p =>
-      windowPages(p, meta, windows)
+      windowPages(table, shardIndex(p), meta, windows)
         .flatMap(idx => PageIndex.readPages(p, idx.pages, idx.fileBytes, idx.mtimeNanos))
         .getOrElse(streamLines(p))
     }.flatMap { line =>
@@ -3279,10 +3302,11 @@ final class LocalKVStore(root: String) {
     LocalKVStore.sortKeyed(keyed, missingRangeFirst = false)
     // Page directory published under partition-key placement (layout
     // 2 — the layout where one hash key's sort run is shard-contiguous).
+    val (idxPath, finalPath) = pagedFiles(table, shard, None)
     writePagedFile(
       tmp = dir.resolve(f"compact-$shard%03d.tmp"),
-      finalPath = dir.resolve(f"shard-$shard%03d.jsonl"),
-      idxPath = dir.resolve(f"pageidx-s$shard%03d.jsonl"),
+      finalPath = finalPath,
+      idxPath = idxPath,
       sorted = keyed,
       indexable = meta.layout >= 2,
       rangeOf = meta.rangeKey match {
@@ -3375,10 +3399,11 @@ final class LocalKVStore(root: String) {
     val sorted = LocalKVStore.keyedBy(items, it => encKeyAttr(it(ix.hashKey)),
       ix.rangeKey.orNull, stats = null)
     LocalKVStore.sortKeyed(sorted, missingRangeFirst = true)
+    val (idxPath, finalPath) = pagedFiles(table, shard, Some(name))
     writePagedFile(
       tmp = dir.resolve(f".gsi-$name-shard-$shard%03d.jsonl.tmp"),
-      finalPath = dir.resolve(f"gsi-$name-shard-$shard%03d.jsonl"),
-      idxPath = dir.resolve(f"gsi-pageidx-$name-s$shard%03d.jsonl"),
+      finalPath = finalPath,
+      idxPath = idxPath,
       sorted = sorted,
       indexable = ix.rangeKey.isDefined && sorted.forall(_.range != null),
       rangeOf = it => it(ix.rangeKey.get))

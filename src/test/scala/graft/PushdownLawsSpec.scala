@@ -445,6 +445,128 @@ class PushdownLawsSpec extends AnyFunSuite {
         .toDF("id", "n", "s", "d").write.dynamo(root, "t", "id")
       assert(agg(zone = true) === agg(zone = false), s"iteration $it dirty")
     }
+    rangeKeyAnswerLaw()
+  }
+
+  /** The page-statistics answers on a range-key table with a GSI: a
+    * hash `=`/`IN` window with sort-key bounds (ungrouped and grouped
+    * by the hash key), the filterless `GROUP BY` hash key (string and
+    * integral keys), and the exact-GSI window (ungrouped and grouped),
+    * each equal to the same read with `zonePruning=false`. Every
+    * group's last page holds at least `pageAlignMinItems` rows, so
+    * each group's pages are pure: page-aligned bounds must then be
+    * answered from statistics on the compacted table (the law must not
+    * compare a scan with a scan), and random bounds that cut through a
+    * page must decline or still agree.
+    */
+  private def rangeKeyAnswerLaw(): Unit = {
+    import graft.sources.dynamo.{AttrVal, DynamoGroupAnswerPartition,
+      DynamoZoneAnswerPartition, IndexMeta, LocalKVStore, TableMeta}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.types._
+    val plans = new AdaptiveSparkPlanHelper {}
+    def answered(df: DataFrame): Boolean =
+      plans.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.inputPartitions
+      }.flatten.exists {
+        case _: DynamoZoneAnswerPartition | _: DynamoGroupAnswerPartition => true
+        case _ => false
+      }
+    (0 until 6).foreach { it =>
+      val rnd = new scala.util.Random(4100L + it)
+      val intKey = it % 2 == 1
+      // last-page sizes 40..249, 44..243 and 48..187: all pure
+      def groupSize(): Int =
+        Seq(40 + rnd.nextInt(210), 300 + rnd.nextInt(200), 560 + rnd.nextInt(140))(rnd.nextInt(3))
+      val sizes = Seq.fill(3 + rnd.nextInt(3))(groupSize())
+      val hks: Seq[AttrVal] = sizes.indices.map(i =>
+        if (intKey) AttrVal.N(BigDecimal(i * 1000003L - 5)) else AttrVal.S(s"h$i"))
+      // GSI groups g0 and g1 get pure-tail sizes too; g2 sorts last in
+      // its index shard and takes the rest
+      val g0 = groupSize(); val g1 = groupSize()
+      val rows = sizes.zip(hks).flatMap { case (n, h) => (0 until n).map(r => (h, r)) }
+      val items = rows.zipWithIndex.map { case ((h, r), i) =>
+        Map[String, AttrVal]("hk" -> h, "rk" -> AttrVal.N(BigDecimal(r)),
+          "g" -> AttrVal.S(if (i < g0) "g0" else if (i < g0 + g1) "g1" else "g2"),
+          "v" -> AttrVal.N(BigDecimal(rnd.nextInt(2001) - 1000))) ++
+          (if (rnd.nextInt(5) == 0) Nil else Seq("n" -> AttrVal.N(BigDecimal(rnd.nextInt(100)))))
+      }
+      val root = Files.createTempDirectory("graft-zone-law-rk").toString
+      val store = new LocalKVStore(root)
+      store.bulkLoad("t", TableMeta("hk", Some("rk"), shards = 1 + rnd.nextInt(3),
+        throughput = 1000000L), items.iterator)
+      store.createIndex("t", "by_g", IndexMeta("g", Some("rk"), None))
+      store.buildIndex("t", "by_g")
+      val schema = StructType(Seq(
+        StructField("hk", if (intKey) LongType else StringType),
+        StructField("rk", LongType),
+        // a nullable index hash key gains an inferred IsNotNull
+        // conjunct, which no key window admits
+        StructField("g", StringType, nullable = false),
+        StructField("v", LongType), StructField("n", LongType)))
+      def read(zone: Boolean, index: Boolean): DataFrame = {
+        val r = spark.read.format("dynamo").schema(schema)
+          .option("path", root).option("tableName", "t")
+          .option("zonePruning", zone.toString)
+        (if (index) r.option("indexName", "by_g") else r).load()
+      }
+      def lit1(h: AttrVal): Any = h match {
+        case AttrVal.N(v) => v.toLong
+        case AttrVal.S(s) => s
+        case other => other
+      }
+      val aggCols = Seq(count(lit(1)), count(col("n")), sum("v"), min("v"), max("v"),
+        min("n"), max("n"))
+      // (name, index read, shape, answered on the compacted table)
+      val h = lit1(hks(rnd.nextInt(hks.size)))
+      val hIn = hks.filter(_ => rnd.nextBoolean()).map(lit1) :+ lit1(hks.head)
+      val (lo, hi) = { val a = rnd.nextInt(700); (a, a + rnd.nextInt(400)) }
+      val shapes: Seq[(String, Boolean, DataFrame => DataFrame, Boolean)] = Seq(
+        ("hash = whole group", false,
+          _.filter(col("hk") === h && col("rk") >= 0).agg(aggCols.head, aggCols.tail: _*), true),
+        ("hash = page-aligned bounds", false,
+          _.filter(col("hk") === h && col("rk") >= 256 && col("rk") < 512)
+            .agg(aggCols.head, aggCols.tail: _*), true),
+        ("hash = random bounds", false,
+          _.filter(col("hk") === h && col("rk") >= lo && col("rk") <= hi)
+            .agg(aggCols.head, aggCols.tail: _*), false),
+        ("hash IN page-aligned bounds", false,
+          _.filter(col("hk").isin(hIn: _*) && col("rk").between(0, 255))
+            .agg(aggCols.head, aggCols.tail: _*), true),
+        ("hash IN grouped", false,
+          _.filter(col("hk").isin(hIn: _*) && col("rk") < 256)
+            .groupBy("hk").agg(aggCols.head, aggCols.tail :+ avg("v"): _*), true),
+        ("hash IN grouped random bounds", false,
+          _.filter(col("hk").isin(hIn: _*) && col("rk") > lo)
+            .groupBy("hk").agg(aggCols.head, aggCols.tail :+ avg("v"): _*), false),
+        ("filterless group by hash", false,
+          _.groupBy("hk").agg(aggCols.head, aggCols.tail :+ avg("v"): _*), true),
+        ("gsi window", true,
+          _.filter(col("g") === "g1" && col("rk") >= 0).agg(aggCols.head, aggCols.tail: _*), true),
+        ("gsi window random bounds", true,
+          _.filter(col("g") === "g0" && col("rk") >= lo).agg(aggCols.head, aggCols.tail: _*), false),
+        ("gsi grouped", true,
+          _.filter(col("g").isin("g0", "g1"))
+            .groupBy("g").agg(aggCols.head, aggCols.tail :+ avg("v"): _*), true))
+      def check(state: String, compacted: Boolean): Unit =
+        shapes.foreach { case (name, index, shape, mustAnswer) =>
+          val got = shape(read(zone = true, index))
+          val want = shape(read(zone = false, index))
+          def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+          assert(rowsOf(got) === rowsOf(want), s"iteration $it $state: $name")
+          if (compacted && mustAnswer)
+            assert(answered(got), s"iteration $it $state: $name planned no answer partition")
+          assert(!answered(want), s"iteration $it $state: $name answered with zonePruning=false")
+        }
+      check("compacted", compacted = true)
+      // a journal put in one hash group: its shard's windows, the
+      // filterless grouped fold and the GSI copy must decline or agree
+      store.appendWal("t", System.currentTimeMillis() + 900000L, "wz",
+        Seq(store.Put(Map("hk" -> hks.last, "rk" -> AttrVal.N(BigDecimal(3)),
+          "g" -> AttrVal.S("g1"), "v" -> AttrVal.N(BigDecimal(77777))))))
+      check("dirty", compacted = false)
+    }
   }
 
   test("NOT over a nullable attribute is pushed and still matches SQL semantics") {

@@ -9,7 +9,8 @@ object TestSpark {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.sql.warehouse.dir",
+        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       // mirror Verify/Bench: uniformly on, so q_dyn_spj / q_dyn_spj_pruned
       // can't flip a shared-session conf mid-suite and make other plans
       // order-dependent

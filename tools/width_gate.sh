@@ -14,8 +14,10 @@
 #     correctness_w<N>.json  check.py --json, driver-shaped
 #     layout_w<N>.tsv        <key>\t<scans reporting a key-grouped layout>
 #                            \t<point reads served on the driver>
-#   and prints, per width, the keys whose plans report that layout and
-#   the keys whose point reads are served on the driver (LocalTableScanExec).
+#                            \t<scans answered from statistics>
+#   and prints, per width, the keys whose plans report that layout, the
+#   keys whose point reads are served on the driver (LocalTableScanExec)
+#   and the keys with a scan that plans a statistics-answer partition.
 # Exit status is non-zero when any key fails at any width.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -50,5 +52,7 @@ print("\n".join(sorted(k for k in json.load(open(sys.argv[1]))
   awk -F'\t' '$2 > 0 { printf "  %s (%d scans)\n", $1, $2 }' "$layout" | sort
   echo "== width $w: keys whose point reads are served on the driver =="
   awk -F'\t' '$3 > 0 { printf "  %s (%d reads)\n", $1, $3 }' "$layout" | sort
+  echo "== width $w: keys answered from statistics =="
+  awk -F'\t' '$4 > 0 { printf "  %s (%d scans)\n", $1, $4 }' "$layout" | sort
 done
 exit $status
